@@ -1,11 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{col, concat_ws, element_at, split, trim}
+import org.apache.spark.sql.types.StringType
+import graft.dedup.{Dedup, NgramSpans, SortedNeighborhood}
 import graft.functions.{CharEntropy, DotProduct, FirstEqualIndex,
   JaroWinkler, MinHashSignature, ParseLocaleNumber, SimHash64,
   SortedJaccard}
+import graft.graph.{KCore, LabelProp, NeighborJaccard, PageRank}
+import graft.multimodal.Multimodal
+import graft.operators.{Analytics, Auc, Benford, Bootstrap, ChiSquare,
+  ClassBalance, Compaction, Cooccur, Curriculum, Cusum, DatasetSplit,
+  DeterministicSplit, Dsir, Entropy, Gini, GlobalShuffle, HeavyHitters, Holt,
+  JsDivergence, Kappa, KsDrift, Labeling, Md5, MixPlan, MixtureKl, Moments,
+  NegativeSample, Pareto, RankNormalize, Resample, TemperatureMixture,
+  TokenBudget}
+import graft.pipeline.Rag
+import graft.similarity.{Mmr, ScalarQuantizer, Similarity}
+import graft.streaming.StreamingHll
+import graft.textanalysis.{Chunker, HtmlStrip, InvertedIndex, NaiveBayes, Oov,
+  PerplexityBuckets, TermStats, TextAnalysis, UnigramLm}
 
 /** Session extension registering the engine's native expressions for SQL:
   *
@@ -19,11 +37,12 @@ import graft.functions.{CharEntropy, DotProduct, FirstEqualIndex,
   * `spark.sql(...)` on every session of the application — the supported
   * injection point (vs the per-session temp registration in
   * [[graft.functions.GraftFunctions.register]]).
+  *
+  * The whole-relation operators are SQL table functions, declared once
+  * each in [[GraftExtensions.tableFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  import GraftExtensions._
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
@@ -103,1172 +122,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         arity("jaro_winkler", 2, args); JaroWinkler(args.head, args(1))
       }))
-    // naive `levenshtein(a,b) <= d` predicates (Filter or Join) become
-    // length-pruned + banded-DP form; see the rule's scaladoc
-    e.injectOptimizerRule(_ => graft.plans.FuzzyMatchPruning)
-    // plans graft.plans.TopKPerGroup as partial -> exchange -> final
-    // bounded-buffer execs (never sorts more than k rows per group)
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-
-    // ---- table-valued surface: the whole-relation curation operators ----
-    // SELECT * FROM graft_minhash_keep('docs', 'doc_id', 'text'): the TVF
-    // builder resolves the named table/view through the active session's
-    // catalog and returns the SAME logical plan the Scala builder method
-    // produces — SQL users get the operator, not a reimplementation
-    // (plan equality pinned in ExtensionsRegistrationSpec).
-    import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.types.StringType
-    def strLit(fn: String, what: String, ex: Expression): String = ex match {
-      case l if l.foldable && l.dataType == StringType && l.eval() != null =>
-        l.eval().toString
-      case _ => throw new IllegalArgumentException(
-        s"$fn: $what must be a non-null string literal")
-    }
-    def numLit(fn: String, what: String, ex: Expression): Double = ex match {
-      case l if l.foldable && l.eval() != null =>
-        l.eval().toString.toDouble // decimal/double/int literals alike
-      case _ => throw new IllegalArgumentException(
-        s"$fn: $what must be a numeric literal")
-    }
-    e.injectTableFunction((
-      FunctionIdentifier("graft_exact_dedup"),
-      info("graft_exact_dedup",
-        "graft_exact_dedup(table, idCol, textCol) - word-set digest groups: (dedup_key, first_id, n_docs)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_exact_dedup expects 3 arguments")
-        val n = "graft_exact_dedup"
-        graft.dedup.Dedup.exactGroups(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_minhash_keep"),
-      info("graft_minhash_keep",
-        "graft_minhash_keep(table, idCol, textCol) - one-pass MinHash LSH dedup decision (md5 family): (id, rep_id, is_kept)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_minhash_keep expects 3 arguments")
-        val n = "graft_minhash_keep"
-        graft.dedup.Dedup.minhashRepresentativesMd5(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_containment_keep"),
-      info("graft_containment_keep",
-        "graft_containment_keep(table, idCol, textCol, t) - one-pass containment dedup decision: (id, rep_id, is_kept)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_containment_keep expects 4 arguments")
-        val n = "graft_containment_keep"
-        graft.dedup.Dedup.containmentRepresentatives(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "threshold", args(3)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_hll_distinct"),
-      info("graft_hll_distinct",
-        "graft_hll_distinct(table, keyCol, p) - replayable md5 HyperLogLog cardinality estimate: (hll_est)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_hll_distinct expects 3 arguments")
-        val n = "graft_hll_distinct"
-        val p = numLit(n, "p", args(2)).toInt
-        graft.operators.Analytics.hllEstimate(
-            graft.operators.Analytics.hllRegisters(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "keyCol", args(1)), p), p)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_topk_group"),
-      info("graft_topk_group",
-        "graft_topk_group(table, groupCol, orderCol, k, tieCol) - salted per-group top-k (rk column appended)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_topk_group expects 5 arguments")
-        val n = "graft_topk_group"
-        graft.operators.Analytics.topKPerGroup(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            Seq(strLit(n, "groupCol", args(1))),
-            strLit(n, "orderCol", args(2)),
-            numLit(n, "k", args(3)).toInt,
-            Seq(strLit(n, "tieCol", args(4))), salts = 8)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_split"),
-      info("graft_split",
-        "graft_split(table, keyCol, wTrain, wVal, wTest) - deterministic md5 train/val/test split"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_split expects 5 arguments")
-        val n = "graft_split"
-        graft.operators.DeterministicSplit(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            Seq(strLit(n, "keyCol", args(1))),
-            Seq("train" -> numLit(n, "wTrain", args(2)),
-              "val" -> numLit(n, "wVal", args(3)),
-              "test" -> numLit(n, "wTest", args(4))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_kmv_distinct"),
-      info("graft_kmv_distinct",
-        "graft_kmv_distinct(table, keyCol, k) - replayable bottom-k (KMV) distinct estimate: (kmv_est)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_kmv_distinct expects 3 arguments")
-        val n = "graft_kmv_distinct"
-        val k = numLit(n, "k", args(2)).toInt
-        graft.operators.Analytics.kmvEstimate(
-            graft.operators.Analytics.kmvSketch(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "keyCol", args(1)), k), k)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_qsketch"),
-      info("graft_qsketch",
-        "graft_qsketch(table, keyCols, valueCol, k, probs) - mergeable bottom-k-by-hash quantile estimates (keyCols/probs comma-separated): (prob, est_q)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_qsketch expects 5 arguments")
-        val n = "graft_qsketch"
-        val keyCols = strLit(n, "keyCols", args(1)).split(",").toSeq
-        val probs = strLit(n, "probs", args(4)).split(",").toSeq
-          .map(p => p -> p.toDouble)
-        graft.operators.Analytics.qsketchQuantiles(
-            graft.operators.Analytics.qsketchSample(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              org.apache.spark.sql.functions.concat_ws("|",
-                keyCols.map(org.apache.spark.sql.functions.col): _*),
-              strLit(n, "valueCol", args(2)),
-              numLit(n, "k", args(3)).toInt),
-            probs)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_qsketch_grouped"),
-      info("graft_qsketch_grouped",
-        "graft_qsketch_grouped(table, groupCols, keyCols, valueCol, k, probs) - per-group bottom-k-by-hash quantile estimates (groupCols/keyCols/probs comma-separated): groupCols + (prob, est_q)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6,
-          s"graft_qsketch_grouped expects 6 arguments")
-        val n = "graft_qsketch_grouped"
-        val groupCols = strLit(n, "groupCols", args(1)).split(",").toSeq
-        val keyCols = strLit(n, "keyCols", args(2)).split(",").toSeq
-        val probs = strLit(n, "probs", args(5)).split(",").toSeq
-          .map(p => p -> p.toDouble)
-        graft.operators.Analytics.qsketchQuantilesGrouped(
-            graft.operators.Analytics.qsketchSampleGrouped(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              groupCols,
-              org.apache.spark.sql.functions.concat_ws("|",
-                keyCols.map(org.apache.spark.sql.functions.col): _*),
-              strLit(n, "valueCol", args(3)),
-              numLit(n, "k", args(4)).toInt),
-            groupCols, probs)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_exact_quantiles"),
-      info("graft_exact_quantiles",
-        "graft_exact_quantiles(table, keyCols, valueCol, k, nBuckets, probs) - EXACT quantile_cont values by sketch-guided selection, no global sort (keyCols/probs comma-separated): (prob, exact_q)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6,
-          s"graft_exact_quantiles expects 6 arguments")
-        val n = "graft_exact_quantiles"
-        val keyCols = strLit(n, "keyCols", args(1)).split(",").toSeq
-        val probs = strLit(n, "probs", args(5)).split(",").toSeq
-          .map(p => p -> p.toDouble)
-        graft.operators.Analytics.exactQuantilesSelect(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.concat_ws("|",
-              keyCols.map(org.apache.spark.sql.functions.col): _*),
-            strLit(n, "valueCol", args(2)), probs,
-            numLit(n, "k", args(3)).toInt,
-            numLit(n, "nBuckets", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_exact_quantiles_grouped"),
-      info("graft_exact_quantiles_grouped",
-        "graft_exact_quantiles_grouped(table, groupCol, keyCols, valueCol, k, nBuckets, probs) - EXACT per-group quantile_cont values by sketch-guided selection (keyCols/probs comma-separated): (groupCol, prob, exact_q)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 7,
-          s"graft_exact_quantiles_grouped expects 7 arguments")
-        val n = "graft_exact_quantiles_grouped"
-        val keyCols = strLit(n, "keyCols", args(2)).split(",").toSeq
-        val probs = strLit(n, "probs", args(6)).split(",").toSeq
-          .map(p => p -> p.toDouble)
-        graft.operators.Analytics.exactQuantilesSelectGrouped(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "groupCol", args(1)),
-            org.apache.spark.sql.functions.concat_ws("|",
-              keyCols.map(org.apache.spark.sql.functions.col): _*),
-            strLit(n, "valueCol", args(3)), probs,
-            numLit(n, "k", args(4)).toInt,
-            numLit(n, "nBuckets", args(5)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_equidepth"),
-      info("graft_equidepth",
-        "graft_equidepth(table, keyCols, valueCol, k, nBuckets) - equi-depth range bucket per row from a bottom-k quantile sketch (keyCols comma-separated): input cols + (bucket)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_equidepth expects 5 arguments")
-        val n = "graft_equidepth"
-        val keyCols = strLit(n, "keyCols", args(1)).split(",").toSeq
-        graft.operators.Analytics.qsketchRangeBuckets(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.concat_ws("|",
-              keyCols.map(org.apache.spark.sql.functions.col): _*),
-            strLit(n, "valueCol", args(2)),
-            numLit(n, "k", args(3)).toInt,
-            numLit(n, "nBuckets", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_drift_psi"),
-      info("graft_drift_psi",
-        "graft_drift_psi(baseTable, currentTable, valueCol, buckets) - PSI drift report between two table versions: (bucket, p_base, p_cur, psi)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_drift_psi expects 4 arguments")
-        val n = "graft_drift_psi"
-        graft.operators.Analytics.driftPsi(
-            SparkSession.active.table(strLit(n, "baseTable", args.head)),
-            SparkSession.active.table(strLit(n, "currentTable", args(1))),
-            strLit(n, "valueCol", args(2)),
-            numLit(n, "buckets", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_strip_dup_spans"),
-      info("graft_strip_dup_spans",
-        "graft_strip_dup_spans(table, idCol, textCol, n) - cut every non-canonical duplicated n-gram span: (id, n_tokens, n_removed, clean_text)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_strip_dup_spans expects 4 arguments")
-        val n = "graft_strip_dup_spans"
-        graft.textanalysis.TextAnalysis.stripDuplicatedSpans(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "n", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ewma_anomaly"),
-      info("graft_ewma_anomaly",
-        "graft_ewma_anomaly(table, partCols, orderCols, valueCol, alpha, span, k, minN) - EWMA-forecast anomaly flags per key (cols comma-separated): input cols + (ewma, forecast, anom_score, is_anomaly)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 8, s"graft_ewma_anomaly expects 8 arguments")
-        val n = "graft_ewma_anomaly"
-        graft.operators.Analytics.ewmaAnomaly(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "partCols", args(1)).split(",").toSeq,
-            strLit(n, "orderCols", args(2)).split(",").toSeq,
-            strLit(n, "valueCol", args(3)),
-            numLit(n, "alpha", args(4)),
-            numLit(n, "span", args(5)).toInt,
-            numLit(n, "k", args(6)),
-            numLit(n, "minN", args(7)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_nb_score"),
-      info("graft_nb_score",
-        "graft_nb_score(trainTable, scoreTable, idCol, textCol, labelCol, posLabel, alpha) - Naive-Bayes mean-likelihood-ratio scores of scoreTable against a model trained on trainTable: (id, nb_score, nb_pred)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 7, s"graft_nb_score expects 7 arguments")
-        val n = "graft_nb_score"
-        val model = graft.textanalysis.NaiveBayes.train(
-          SparkSession.active.table(strLit(n, "trainTable", args.head)),
-          strLit(n, "textCol", args(3)),
-          org.apache.spark.sql.functions
-            .col(strLit(n, "labelCol", args(4)))
-            === strLit(n, "posLabel", args(5)),
-          numLit(n, "alpha", args(6)))
-        graft.textanalysis.NaiveBayes.score(model,
-            SparkSession.active.table(strLit(n, "scoreTable", args(1))),
-            strLit(n, "idCol", args(2)), strLit(n, "textCol", args(3)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_rag"),
-      info("graft_rag",
-        "graft_rag(docsTable, embTable, queryVecId, terms, n, c, k, budget) - RAG retrieval pipeline: span-scrub -> BM25 + dense lists -> RRF fusion -> greedy packing under the token budget (terms comma-separated); docsTable needs (doc_id, text), embTable (vec_id, embedding)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 8, s"graft_rag expects 8 arguments")
-        val n = "graft_rag"
-        graft.pipeline.Rag.pack(
-            SparkSession.active.table(strLit(n, "docsTable", args.head)),
-            SparkSession.active.table(strLit(n, "embTable", args(1))),
-            numLit(n, "queryVecId", args(2)).toLong,
-            strLit(n, "terms", args(3)).split(",").toSeq,
-            numLit(n, "n", args(4)).toInt,
-            numLit(n, "c", args(5)).toInt,
-            numLit(n, "k", args(6)).toInt,
-            numLit(n, "budget", args(7)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_heavy_hitters"),
-      info("graft_heavy_hitters",
-        "graft_heavy_hitters(table, keyCol, minShare) - exact keys above the share threshold via a Misra-Gries sketch + verify pass: (k, cnt, share)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_heavy_hitters expects 3 arguments")
-        val n = "graft_heavy_hitters"
-        graft.operators.HeavyHitters.exact(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "keyCol", args(1))),
-            numLit(n, "minShare", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_paragraph_dedup"),
-      info("graft_paragraph_dedup",
-        "graft_paragraph_dedup(table, idCol, textCol, window) - keep-first chunk-level dedup with document reassembly: (id, n_chunks, n_kept, n_dropped, kept_text)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_paragraph_dedup expects 4 arguments")
-        val n = "graft_paragraph_dedup"
-        graft.dedup.Dedup.paragraphDedup(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "window", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_temperature_mix"),
-      info("graft_temperature_mix",
-        "graft_temperature_mix(table, sourceCol, total, seedCols) - alpha=0.5 temperature-rebalanced sample with exact per-source quotas (seedCols comma-separated): input rows kept"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_temperature_mix expects 4 arguments")
-        val n = "graft_temperature_mix"
-        graft.operators.TemperatureMixture(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "sourceCol", args(1)),
-            numLit(n, "total", args(2)).toLong,
-            strLit(n, "seedCols", args(3)).split(",").toSeq,
-            hash = graft.operators.Md5)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_compaction_bins"),
-      info("graft_compaction_bins",
-        "graft_compaction_bins(statsTable, fileCol, bytesCol, targetBytes) - greedy first-fit bin per file off an exclusive byte prefix sum: stats cols + (cum_before, bin)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_compaction_bins expects 4 arguments")
-        val n = "graft_compaction_bins"
-        graft.operators.Compaction.planBins(
-            SparkSession.active.table(strLit(n, "statsTable", args.head)),
-            strLit(n, "fileCol", args(1)), strLit(n, "bytesCol", args(2)),
-            numLit(n, "targetBytes", args(3)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_skyline"),
-      info("graft_skyline",
-        "graft_skyline(table, xCol, yCol) - 2-D min-min Pareto frontier over distinct pairs: (x, y, n_rows)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_skyline expects 3 arguments")
-        val n = "graft_skyline"
-        graft.operators.Pareto.skyline2D(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "xCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "yCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_label_prop"),
-      info("graft_label_prop",
-        "graft_label_prop(edgesTable, srcCol, dstCol, rounds) - synchronous label propagation with min-label tie-break: (node, label)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_label_prop expects 4 arguments")
-        val n = "graft_label_prop"
-        graft.graph.LabelProp(
-            SparkSession.active.table(strLit(n, "edgesTable", args.head)),
-            strLit(n, "srcCol", args(1)), strLit(n, "dstCol", args(2)),
-            numLit(n, "rounds", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_cooccur_pairs"),
-      info("graft_cooccur_pairs",
-        "graft_cooccur_pairs(table, basketCol, itemCol, minSupport) - A-Priori-pruned frequent co-occurring pairs: (item_a, item_b, pair_cnt)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_cooccur_pairs expects 4 arguments")
-        val n = "graft_cooccur_pairs"
-        graft.operators.Cooccur.frequentPairs(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "basketCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "itemCol", args(2))),
-            numLit(n, "minSupport", args(3)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ks_drift"),
-      info("graft_ks_drift",
-        "graft_ks_drift(baseTable, currentTable, valueCol) - exact two-sample Kolmogorov-Smirnov statistic: (ks_stat, n_base, n_current)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_ks_drift expects 3 arguments")
-        val n = "graft_ks_drift"
-        graft.operators.KsDrift.ks(
-            SparkSession.active.table(strLit(n, "baseTable", args.head)),
-            SparkSession.active.table(strLit(n, "currentTable", args(1))),
-            strLit(n, "valueCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_interpolate"),
-      info("graft_interpolate",
-        "graft_interpolate(table, keyCols, tCol, vCol) - linear gap interpolation per series, edges clamped (keyCols comma-separated): input cols + v_interp"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_interpolate expects 4 arguments")
-        val n = "graft_interpolate"
-        graft.operators.Resample.interpolateLinear(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "keyCols", args(1)).split(",").toSeq,
-            strLit(n, "tCol", args(2)), strLit(n, "vCol", args(3)),
-            "v_interp")
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_inverted_index"),
-      info("graft_inverted_index",
-        "graft_inverted_index(table, idCol, textCol, minDf, maxDf) - df-windowed inverted index over lowercased whitespace tokens: (term, df, postings)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_inverted_index expects 5 arguments")
-        val n = "graft_inverted_index"
-        graft.textanalysis.InvertedIndex.build(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "minDf", args(3)).toLong,
-            numLit(n, "maxDf", args(4)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_negatives"),
-      info("graft_negatives",
-        "graft_negatives(posTable, userCol, itemCol, nItems, k) - deterministic md5-draw negative samples per user: (user, neg_item, draw)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_negatives expects 5 arguments")
-        val n = "graft_negatives"
-        graft.operators.NegativeSample(
-            SparkSession.active.table(strLit(n, "posTable", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "userCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "itemCol", args(2))),
-            numLit(n, "nItems", args(3)).toLong,
-            numLit(n, "k", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_rank_pct"),
-      info("graft_rank_pct",
-        "graft_rank_pct(table, valueCol) - percent_rank normalization without a one-task window: input cols + rank_pct"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_rank_pct expects 2 arguments")
-        val n = "graft_rank_pct"
-        graft.operators.RankNormalize(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "valueCol", args(1)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_term_mi"),
-      info("graft_term_mi",
-        "graft_term_mi(table, idCol, textCol, labelCol, posValue, minDf) - term-label mutual information over the 2x2 contingency: (term, df, mi)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6, s"graft_term_mi expects 6 arguments")
-        val n = "graft_term_mi"
-        graft.textanalysis.TermStats.termMutualInfo(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "labelCol", args(3))) ===
-              strLit(n, "posValue", args(4)),
-            numLit(n, "minDf", args(5)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_auc"),
-      info("graft_auc",
-        "graft_auc(table, scoreCol, labelCol) - exact ROC AUC by the Mann-Whitney identity, no global rank window: (auc, n_pos, n_neg)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_auc expects 3 arguments")
-        val n = "graft_auc"
-        graft.operators.Auc.auc(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "scoreCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "labelCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ppr"),
-      info("graft_ppr",
-        "graft_ppr(edgesTable, srcCol, dstCol, sources, rounds) - personalized PageRank from a comma-separated seed set: (node, rank)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_ppr expects 5 arguments")
-        val n = "graft_ppr"
-        graft.graph.PageRank.personalized(
-            SparkSession.active.table(strLit(n, "edgesTable", args.head)),
-            strLit(n, "srcCol", args(1)), strLit(n, "dstCol", args(2)),
-            strLit(n, "sources", args(3)).split(",").toSeq,
-            numLit(n, "rounds", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_sparse_cosine"),
-      info("graft_sparse_cosine",
-        "graft_sparse_cosine(table, idCol, textCol, nDocs, maxDfFrac, minSim) - above-threshold tf-idf cosine pairs through the posting table: (doc_a, doc_b, cos)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6,
-          s"graft_sparse_cosine expects 6 arguments")
-        val n = "graft_sparse_cosine"
-        graft.textanalysis.InvertedIndex.sparseCosinePairs(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "nDocs", args(3)).toLong,
-            numLit(n, "maxDfFrac", args(4)),
-            numLit(n, "minSim", args(5)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_gini"),
-      info("graft_gini",
-        "graft_gini(table, valueCol) - exact Gini concentration of a non-negative long column (scale currency to cents first): (gini, n, total)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_gini expects 2 arguments")
-        val n = "graft_gini"
-        graft.operators.Gini.gini(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "valueCol", args(1))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_gini_grouped"),
-      info("graft_gini_grouped",
-        "graft_gini_grouped(table, groupCol, valueCol) - exact per-group Gini concentration: (g, gini, n, total)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_gini_grouped expects 3 arguments")
-        val n = "graft_gini_grouped"
-        graft.operators.Gini.giniGrouped(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "groupCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "valueCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_auc_grouped"),
-      info("graft_auc_grouped",
-        "graft_auc_grouped(table, groupCol, scoreCol, labelCol) - exact per-group ROC AUC by the Mann-Whitney identity: (g, auc, n_pos, n_neg)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_auc_grouped expects 4 arguments")
-        val n = "graft_auc_grouped"
-        graft.operators.Auc.aucGrouped(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "groupCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "scoreCol", args(2))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "labelCol", args(3))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ks_drift_grouped"),
-      info("graft_ks_drift_grouped",
-        "graft_ks_drift_grouped(baseTable, currentTable, groupCol, valueCol) - exact per-group two-sample Kolmogorov-Smirnov statistic: (g, ks_stat, n_base, n_current)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_ks_drift_grouped expects 4 arguments")
-        val n = "graft_ks_drift_grouped"
-        graft.operators.KsDrift.ksGrouped(
-            SparkSession.active.table(strLit(n, "baseTable", args.head)),
-            SparkSession.active.table(strLit(n, "currentTable", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "groupCol", args(2))),
-            strLit(n, "valueCol", args(3)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_rank_pct_grouped"),
-      info("graft_rank_pct_grouped",
-        "graft_rank_pct_grouped(table, groupCol, valueCol) - per-group percent_rank normalization, no per-group one-task window: input cols + rank_pct"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_rank_pct_grouped expects 3 arguments")
-        val n = "graft_rank_pct_grouped"
-        graft.operators.RankNormalize.grouped(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "groupCol", args(1))),
-            strLit(n, "valueCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_lorenz"),
-      info("graft_lorenz",
-        "graft_lorenz(table, valueCol, points) - exact Lorenz-curve points of a non-negative long column: (p, r, cum_share)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_lorenz expects 3 arguments")
-        val n = "graft_lorenz"
-        graft.operators.Gini.lorenz(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "valueCol", args(1))),
-            numLit(n, "points", args(2)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_chunk"),
-      info("graft_chunk",
-        "graft_chunk(table, idCol, textCol, size, overlap) - fixed-size token chunks with overlap: (id, chunk_id, n_chunk_tokens, chunk_text)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_chunk expects 5 arguments")
-        val n = "graft_chunk"
-        graft.textanalysis.Chunker.chunk(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "size", args(3)).toInt,
-            numLit(n, "overlap", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_mixture_kl"),
-      info("graft_mixture_kl",
-        "graft_mixture_kl(table, sourceCol, recipe) - per-source share vs a 'src:w,src:w' target recipe + KL contribution: (source, n, share, target_w, kl_term)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_mixture_kl expects 3 arguments")
-        val n = "graft_mixture_kl"
-        val recipe = strLit(n, "recipe", args(2)).split(",").map { kv =>
-          val Array(src, w) = kv.split(":")
-          src.trim -> w.trim.toDouble
-        }.toMap
-        graft.operators.MixtureKl.audit(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "sourceCol", args(1))),
-            recipe)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_unigram_logprob"),
-      info("graft_unigram_logprob",
-        "graft_unigram_logprob(table, idCol, textCol) - add-1 unigram LM mean token log-probability per document: (id, n_tokens, avg_logprob)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_unigram_logprob expects 3 arguments")
-        val n = "graft_unigram_logprob"
-        graft.textanalysis.UnigramLm.scoreDocs(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_mmr"),
-      info("graft_mmr",
-        "graft_mmr(poolTable, idCol, vecCol, relCol, k) - maximal-marginal-relevance re-rank of a bounded candidate pool: (rank, id, mmr_score)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_mmr expects 5 arguments")
-        val n = "graft_mmr"
-        graft.similarity.Mmr.rerank(
-            SparkSession.active.table(strLit(n, "poolTable", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "vecCol", args(2)),
-            strLit(n, "relCol", args(3)),
-            numLit(n, "k", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_strip_html"),
-      info("graft_strip_html",
-        "graft_strip_html(table, idCol, htmlCol) - drop script/style blocks, strip tags, decode entities, collapse whitespace: (id, n_tags, text_clean)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_strip_html expects 3 arguments")
-        val n = "graft_strip_html"
-        val c = org.apache.spark.sql.functions.col(
-          strLit(n, "htmlCol", args(2)))
-        SparkSession.active.table(strLit(n, "table", args.head))
-          .select(org.apache.spark.sql.functions.col(
-              strLit(n, "idCol", args(1))),
-            graft.textanalysis.HtmlStrip.tagCount(c).cast("long")
-              .as("n_tags"),
-            graft.textanalysis.HtmlStrip.strip(c).as("text_clean"))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_oov_rate"),
-      info("graft_oov_rate",
-        "graft_oov_rate(table, idCol, textCol, k) - per-doc out-of-vocabulary rate vs the corpus top-k vocab: (id, n_tokens, n_oov, oov_rate)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_oov_rate expects 4 arguments")
-        val n = "graft_oov_rate"
-        graft.textanalysis.Oov.oovRate(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "k", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_token_budget"),
-      info("graft_token_budget",
-        "graft_token_budget(table, sourceCol, idCol, textCol, budget) - admit docs per source (ascending id) until the token budget: (source, id, n_tokens, cum_tokens)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_token_budget expects 5 arguments")
-        val n = "graft_token_budget"
-        graft.operators.TokenBudget.cap(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "sourceCol", args(1)), strLit(n, "idCol", args(2)),
-            strLit(n, "textCol", args(3)),
-            numLit(n, "budget", args(4)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_moments"),
-      info("graft_moments",
-        "graft_moments(table, keyCol, valueCol) - per-key population skewness/excess kurtosis from one power-sum pass: (key, n, mean, skewness, kurtosis_excess)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_moments expects 3 arguments")
-        val n = "graft_moments"
-        graft.operators.Moments.shape(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "keyCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "valueCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_kcore"),
-      info("graft_kcore",
-        "graft_kcore(edgesTable, aCol, bCol, k, rounds) - k-core peel (degree < k drops, up to `rounds` synchronous rounds): (node, degree)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_kcore expects 5 arguments")
-        val n = "graft_kcore"
-        graft.graph.KCore.peel(
-            SparkSession.active.table(strLit(n, "edgesTable", args.head)),
-            strLit(n, "aCol", args(1)), strLit(n, "bCol", args(2)),
-            numLit(n, "k", args(3)).toInt,
-            numLit(n, "rounds", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_benford"),
-      info("graft_benford",
-        "graft_benford(table, valueCol) - first-significant-digit distribution vs Benford's law: (digit, n, share, expected, dev)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_benford expects 2 arguments")
-        val n = "graft_benford"
-        graft.operators.Benford.firstDigit(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "valueCol", args(1))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_holt"),
-      info("graft_holt",
-        "graft_holt(table, keyCol, tCol) - Holt level+trend smoothing of per-key period counts: (key, n_periods, level, trend, forecast)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_holt expects 3 arguments")
-        val n = "graft_holt"
-        graft.operators.Holt.linear(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "keyCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "tCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_bootstrap_means"),
-      info("graft_bootstrap_means",
-        "graft_bootstrap_means(table, seedCol, valueCol, b) - deterministic Poisson-bootstrap replicate means of a long column: (rep, n_eff, mean)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_bootstrap_means expects 4 arguments")
-        val n = "graft_bootstrap_means"
-        graft.operators.Bootstrap.replicateMeans(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "seedCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "valueCol", args(2))),
-            numLit(n, "b", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_bootstrap_ci"),
-      info("graft_bootstrap_ci",
-        "graft_bootstrap_ci(table, seedCol, valueCol, b, alpha) - Poisson-bootstrap percentile interval + point estimate: (b, point, ci_lo, ci_hi)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_bootstrap_ci expects 5 arguments")
-        val n = "graft_bootstrap_ci"
-        graft.operators.Bootstrap.ci(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "seedCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "valueCol", args(2))),
-            numLit(n, "b", args(3)).toInt, numLit(n, "alpha", args(4)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_class_balance"),
-      info("graft_class_balance",
-        "graft_class_balance(table, classCol, idCol) - keep min-class-count md5-smallest rows per class (input cols)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_class_balance expects 3 arguments")
-        val n = "graft_class_balance"
-        graft.operators.ClassBalance.downsample(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "classCol", args(1)), strLit(n, "idCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_hll_stream_merge"),
-      info("graft_hll_stream_merge",
-        "graft_hll_stream_merge(table, keyCol, itemCol) - order-free streaming-HLL end states merged to estimates: (key, n_events, hll_est)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_hll_stream_merge expects 3 arguments")
-        val n = "graft_hll_stream_merge"
-        graft.streaming.StreamingHll.merged(
-            graft.streaming.StreamingHll.endStates(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "keyCol", args(1)), strLit(n, "itemCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_global_shuffle"),
-      info("graft_global_shuffle",
-        "graft_global_shuffle(table, idCol, seed, nShards) - seeded reproducible corpus permutation + shard assignment: (id, sort_key, shard, pos)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_global_shuffle expects 4 arguments")
-        val n = "graft_global_shuffle"
-        graft.operators.GlobalShuffle.shuffle(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "idCol", args(1))),
-            strLit(n, "seed", args(2)),
-            numLit(n, "nShards", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_shuffle_pack"),
-      info("graft_shuffle_pack",
-        "graft_shuffle_pack(table, idCol, textCol, seed, nShards, capacity) - shuffled doc-granularity bin packing: (shard, bin, pos, id, n_tokens, cum_before)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6,
-          s"graft_shuffle_pack expects 6 arguments")
-        val n = "graft_shuffle_pack"
-        graft.operators.GlobalShuffle.packBins(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "idCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "textCol", args(2))),
-            strLit(n, "seed", args(3)),
-            numLit(n, "nShards", args(4)).toInt,
-            numLit(n, "capacity", args(5)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_js_divergence"),
-      info("graft_js_divergence",
-        "graft_js_divergence(tableA, tableB, categoryCol) - per-category Jensen-Shannon terms between two snapshots: (category, n_base, n_current, p, q, js_term)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_js_divergence expects 3 arguments")
-        val n = "graft_js_divergence"
-        graft.operators.JsDivergence.audit(
-            SparkSession.active.table(strLit(n, "tableA", args.head)),
-            SparkSession.active.table(strLit(n, "tableB", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "categoryCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_kappa"),
-      info("graft_kappa",
-        "graft_kappa(table, labelACol, labelBCol) - Cohen's kappa labeler agreement: (n, p_o, p_e, kappa)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_kappa expects 3 arguments")
-        val n = "graft_kappa"
-        graft.operators.Kappa.cohen(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "labelACol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelBCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_kappa_fleiss"),
-      info("graft_kappa_fleiss",
-        "graft_kappa_fleiss(table, itemCol, labelCol, raters) - Fleiss' kappa panel agreement over items with exactly `raters` ratings: (n_items, n_raters, p_bar, p_e, kappa)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_kappa_fleiss expects 4 arguments")
-        val n = "graft_kappa_fleiss"
-        graft.operators.Kappa.fleiss(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "itemCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelCol", args(2))),
-            numLit(n, "raters", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_consensus_weighted"),
-      info("graft_consensus_weighted",
-        "graft_consensus_weighted(table, itemCol, raterCol, labelCol) - reliability-weighted consensus (raters vote with their 1e6-scaled round-1 accuracy): (item, label, w_votes, votes, total)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_consensus_weighted expects 4 arguments")
-        val n = "graft_consensus_weighted"
-        graft.operators.Labeling.weightedConsensus(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "itemCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "raterCol", args(2))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelCol", args(3))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_mix_plan"),
-      info("graft_mix_plan",
-        "graft_mix_plan(table, sourceCol, textCol, weightsSpec, budgetTokens) - source-mixture sampling plan; weightsSpec is 'src:w,src:w': (source, n_docs, n_tokens, weight, target_tokens, epochs)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_mix_plan expects 5 arguments")
-        val n = "graft_mix_plan"
-        val spec = strLit(n, "weightsSpec", args(3)).split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty).map { kv =>
-            val i = kv.lastIndexOf(':')
-            require(i > 0 && i < kv.length - 1,
-              s"$n: weightsSpec entries are 'source:weight', got '$kv'")
-            kv.substring(0, i) -> kv.substring(i + 1).toDouble
-          }
-        require(spec.map(_._1).distinct.size == spec.size,
-          s"$n: duplicate sources in weightsSpec: ${spec.map(_._1)}")
-        graft.operators.MixPlan.plan(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "sourceCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "textCol", args(2))),
-            spec,
-            numLit(n, "budgetTokens", args(4)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_keep_best"),
-      info("graft_keep_best",
-        "graft_keep_best(table, idCol, textCol, scoreCol) - exact dedup keeping the argmax-score copy per word-set digest (min id on ties): (dedup_key, keep_id, keep_score, n_docs)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_keep_best expects 4 arguments")
-        val n = "graft_keep_best"
-        graft.dedup.Dedup.exactKeepBest(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            org.apache.spark.sql.functions.col(strLit(n, "scoreCol", args(3))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_vocab_growth"),
-      info("graft_vocab_growth",
-        "graft_vocab_growth(table, idCol, textCol, seed) - Heaps-law vocabulary growth along the seeded shuffle order at the 1/5/10/25/50/100% prefixes: (pct, cutoff, docs, tokens, vocab)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_vocab_growth expects 4 arguments")
-        val n = "graft_vocab_growth"
-        graft.textanalysis.TextAnalysis.vocabGrowth(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            strLit(n, "seed", args(3)),
-            graft.queries.Round15c.VocabPcts)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_label_consensus"),
-      info("graft_label_consensus",
-        "graft_label_consensus(table, itemCol, labelCol) - majority-vote consensus per item, deterministic (votes DESC, label ASC) tie-break: (item, label, votes, total, confidence, unanimous)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_label_consensus expects 3 arguments")
-        val n = "graft_label_consensus"
-        graft.operators.Labeling.consensus(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "itemCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_rater_accuracy"),
-      info("graft_rater_accuracy",
-        "graft_rater_accuracy(table, itemCol, raterCol, labelCol) - per-rater reliability vs the panel consensus: (rater, n, n_match, accuracy)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_rater_accuracy expects 4 arguments")
-        val n = "graft_rater_accuracy"
-        graft.operators.Labeling.raterAccuracy(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "itemCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "raterCol", args(2))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelCol", args(3))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_kripp_alpha"),
-      info("graft_kripp_alpha",
-        "graft_kripp_alpha(table, itemCol, labelCol) - Krippendorff's alpha (nominal) over variable-size panels, singletons excluded: (n_units, n_ratings, d_o, d_e, alpha)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_kripp_alpha expects 3 arguments")
-        val n = "graft_kripp_alpha"
-        graft.operators.Labeling.krippendorffAlpha(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "itemCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "labelCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_chi2"),
-      info("graft_chi2",
-        "graft_chi2(table, aCol, bCol) - chi-squared independence screen, one row per contingency cell: (a, b, o, e, chi2_term)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_chi2 expects 3 arguments")
-        val n = "graft_chi2"
-        graft.operators.ChiSquare.independence(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "aCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "bCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_cusum"),
-      info("graft_cusum",
-        "graft_cusum(table, keyCol, tCol) - standardized count-CUSUM series per key: (key, t, c, cusum)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_cusum expects 3 arguments")
-        val n = "graft_cusum"
-        graft.operators.Cusum.series(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "keyCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "tCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_cusum_peak"),
-      info("graft_cusum_peak",
-        "graft_cusum_peak(table, keyCol, tCol) - changepoint candidate per key (argmax |cusum|, earliest tie): (key, n_periods, cp_t, cp_cusum)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_cusum_peak expects 3 arguments")
-        val n = "graft_cusum_peak"
-        graft.operators.Cusum.changepoint(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(strLit(n, "keyCol", args(1))),
-            org.apache.spark.sql.functions.col(strLit(n, "tCol", args(2))))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_neighbor_jaccard"),
-      info("graft_neighbor_jaccard",
-        "graft_neighbor_jaccard(edgesTable, aCol, bCol) - neighbor-set Jaccard over distance-2 pairs via the wedge join: (id_a, id_b, common, jaccard)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_neighbor_jaccard expects 3 arguments")
-        val n = "graft_neighbor_jaccard"
-        graft.graph.NeighborJaccard.pairs(
-            SparkSession.active.table(strLit(n, "edgesTable", args.head)),
-            strLit(n, "aCol", args(1)), strLit(n, "bCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ngram_spans"),
-      info("graft_ngram_spans",
-        "graft_ngram_spans(table, idCol, textCol, n) - maximal cross-doc duplicated n-gram token spans: (id, span_start, span_end, span_tokens)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_ngram_spans expects 4 arguments")
-        val n = "graft_ngram_spans"
-        graft.dedup.NgramSpans.spans(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "n", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_span_coverage"),
-      info("graft_span_coverage",
-        "graft_span_coverage(table, idCol, textCol, n) - per-doc cross-doc duplicated-token coverage: (id, n_tokens, dup_tokens, dup_frac)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_span_coverage expects 4 arguments")
-        val n = "graft_span_coverage"
-        graft.dedup.NgramSpans.coverage(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), strLit(n, "textCol", args(2)),
-            numLit(n, "n", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_snm_pairs"),
-      info("graft_snm_pairs",
-        "graft_snm_pairs(table, idCol, textCol, window, minJaccard) - sorted-neighborhood near-dup pairs (block = first token, sort = text): (id_a, id_b, jaccard)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_snm_pairs expects 5 arguments")
-        val n = "graft_snm_pairs"
-        val textCol = strLit(n, "textCol", args(2))
-        val t = org.apache.spark.sql.functions.trim(
-          org.apache.spark.sql.functions.col(textCol))
-        graft.dedup.SortedNeighborhood.pairs(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)), textCol,
-            org.apache.spark.sql.functions.element_at(
-              org.apache.spark.sql.functions.split(t, "\\s+"), 1),
-            t, numLit(n, "window", args(3)).toInt,
-            numLit(n, "minJaccard", args(4)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_sq8_topk"),
-      info("graft_sq8_topk",
-        "graft_sq8_topk(table, idCol, vecCol, dim, queryId, candidates, k) - SQ8 two-stage retrieval (int8 approximate rank, exact rescore): (id, sim)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 7, s"graft_sq8_topk expects 7 arguments")
-        val n = "graft_sq8_topk"
-        val corpus = SparkSession.active.table(strLit(n, "table", args.head))
-        val idCol = strLit(n, "idCol", args(1))
-        val vecCol = strLit(n, "vecCol", args(2))
-        val dim = numLit(n, "dim", args(3)).toInt
-        val qv = corpus
-          .filter(org.apache.spark.sql.functions.col(idCol) ===
-            numLit(n, "queryId", args(4)).toLong)
-          .select(graft.similarity.Similarity.toVec(
-            org.apache.spark.sql.functions.col(vecCol)))
-          .head().getSeq[Double](0)
-        val model = graft.similarity.ScalarQuantizer.fit(corpus, vecCol, dim)
-        val encoded = graft.similarity.ScalarQuantizer.encode(
-          corpus, idCol, vecCol, model)
-        graft.similarity.ScalarQuantizer.sqRescoreTopK(encoded, corpus,
-            idCol, vecCol, model, qv,
-            numLit(n, "candidates", args(5)).toInt,
-            numLit(n, "k", args(6)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_entropy"),
-      info("graft_entropy",
-        "graft_entropy(table, groupCol, catCol) - Shannon entropy of the category distribution per group: (group, n, n_cats, entropy)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_entropy expects 3 arguments")
-        val n = "graft_entropy"
-        graft.operators.Entropy.distribution(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "groupCol", args(1))),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "catCol", args(2))))
-          .queryExecution.logical
-      }))
     e.injectFunction((
       FunctionIdentifier("format_pen"),
       info("format_pen",
@@ -1290,233 +143,348 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             org.apache.spark.sql.catalyst.expressions.FormatNumber(
               Round(d, Literal(0)), Literal(0))))))
       }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_video_frames"),
-      info("graft_video_frames",
-        "graft_video_frames(table, idCol, stride, tw, th) - REAL animated-GIF fixture decode: keep every stride-th frame, NN-resample to tw x th: (doc_id, frame_idx, n_frames, width, height, checksum)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5, s"graft_video_frames expects 5 arguments")
-        val n = "graft_video_frames"
-        graft.multimodal.Multimodal.videoRoundTrip(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            numLit(n, "stride", args(2)).toInt,
-            numLit(n, "tw", args(3)).toInt,
-            numLit(n, "th", args(4)).toInt)
-          .toDF().queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_image_phash_pairs"),
-      info("graft_image_phash_pairs",
-        "graft_image_phash_pairs(table, idCol, clusterSize, maxHamming) - dHash the REAL-decoded image fixture tier, Hamming-banded near-dup pair join: (doc_id_a, doc_id_b, hamming)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_image_phash_pairs expects 4 arguments")
-        val n = "graft_image_phash_pairs"
-        graft.multimodal.Multimodal.imageNearDupPairs(
-            graft.multimodal.Multimodal.imageDHashes(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "idCol", args(1)),
-              numLit(n, "clusterSize", args(2)).toInt).toDF(),
-            numLit(n, "maxHamming", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_video_neardups"),
-      info("graft_video_neardups",
-        "graft_video_neardups(table, idCol, clusterSize, maxHamming, minMatch) - per-frame dHash over the REAL GIF sequence-decode tier, (frame, band)-bucketed pair join: (doc_id_a, doc_id_b, n_frames, n_match)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_video_neardups expects 5 arguments")
-        val n = "graft_video_neardups"
-        graft.multimodal.Multimodal.videoNearDupPairs(
-            graft.multimodal.Multimodal.videoFrameHashes(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "idCol", args(1)),
-              numLit(n, "clusterSize", args(2)).toInt),
-            numLit(n, "maxHamming", args(3)).toInt,
-            numLit(n, "minMatch", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_audio_neardups"),
-      info("graft_audio_neardups",
-        "graft_audio_neardups(table, idCol, clusterSize, maxHamming) - energy-sign fingerprint over the REAL WAV decode tier, Hamming-banded pair join: (doc_id_a, doc_id_b, hamming)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_audio_neardups expects 4 arguments")
-        val n = "graft_audio_neardups"
-        graft.multimodal.Multimodal.audioNearDupPairs(
-            graft.multimodal.Multimodal.audioFingerprints(
-              SparkSession.active.table(strLit(n, "table", args.head)),
-              strLit(n, "idCol", args(1)),
-              numLit(n, "clusterSize", args(2)).toInt).toDF(),
-            numLit(n, "maxHamming", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_split_by_digest"),
-      info("graft_split_by_digest",
-        "graft_split_by_digest(table, idCol, textCol, trainPct, valPct) - leakage-free train/val/test split keyed on the exact-dedup digest (identical copies always co-split): (id, dedup_key, split)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_split_by_digest expects 5 arguments")
-        val n = "graft_split_by_digest"
-        graft.operators.DatasetSplit.byDigest(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            numLit(n, "trainPct", args(3)).toInt,
-            numLit(n, "valPct", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_dsir_weights"),
-      info("graft_dsir_weights",
-        "graft_dsir_weights(table, idCol, textCol, targetLangCol, targetLang, buckets) - DSIR hashed-unigram importance log-weights, target vs pool, ppm-exact: (id, is_target, n_tokens, logw_ppm)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6,
-          s"graft_dsir_weights expects 6 arguments")
-        val n = "graft_dsir_weights"
-        graft.operators.Dsir.importanceWeights(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            org.apache.spark.sql.functions.col(
-              strLit(n, "targetLangCol", args(3))) ===
-              strLit(n, "targetLang", args(4)),
-            numLit(n, "buckets", args(5)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ccnet_buckets"),
-      info("graft_ccnet_buckets",
-        "graft_ccnet_buckets(table, idCol, textCol, langCol) - CCNet head/middle/tail per-language perplexity triage over the add-1 unigram LM: (lang, bucket, n_docs, n_tokens, lp_min, lp_max)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_ccnet_buckets expects 4 arguments")
-        val n = "graft_ccnet_buckets"
-        graft.textanalysis.PerplexityBuckets.summary(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            strLit(n, "langCol", args(3)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_dup_weights"),
-      info("graft_dup_weights",
-        "graft_dup_weights(table, idCol, textCol) - duplicate-count sampling weights over the exact-dedup digest: (id, dedup_key, n_docs, weight)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, s"graft_dup_weights expects 3 arguments")
-        val n = "graft_dup_weights"
-        graft.dedup.Dedup.dupWeights(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_exact_substr"),
-      info("graft_exact_substr",
-        "graft_exact_substr(table, idCol, textCol, minLen) - character-level ExactSubstr dedup (Lee et al. 2021): cut every non-canonical occurrence of a >= minLen-char duplicated substring, keep-first: (id, n_chars, n_removed, clean_text)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_exact_substr expects 4 arguments")
-        val n = "graft_exact_substr"
-        graft.textanalysis.TextAnalysis.exactSubstrDedup(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            numLit(n, "minLen", args(3)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_jpeg_dhash"),
-      info("graft_jpeg_dhash",
-        "graft_jpeg_dhash(table, idCol, quality) - REAL lossy JPEG round trip per id (JDK writer at quality, ImageIO decode, dHash of the decoded raster): (doc_id, width, height, dhash)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_jpeg_dhash expects 3 arguments")
-        val n = "graft_jpeg_dhash"
-        graft.multimodal.Multimodal.jpegDHashes(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            numLit(n, "quality", args(2)).toFloat)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_ccnet_stream_buckets"),
-      info("graft_ccnet_stream_buckets",
-        "graft_ccnet_stream_buckets(table, idCol, textCol, langCol) - streaming twin of graft_ccnet_buckets: triage cuts from the bounded keyed quantile sketch instead of the exact terciles: (lang, bucket, n_docs, n_tokens, lp_min, lp_max)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_ccnet_stream_buckets expects 4 arguments")
-        val n = "graft_ccnet_stream_buckets"
-        graft.textanalysis.PerplexityBuckets.streamingSummary(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            strLit(n, "langCol", args(3)))
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_importance_sample"),
-      info("graft_importance_sample",
-        "graft_importance_sample(table, k, tauPpm) - deterministic Gumbel top-k importance resampling over a weights frame with (id, logw_ppm) columns (e.g. graft_dsir_weights output): input columns + key_ppm, the k largest keys"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_importance_sample expects 3 arguments")
-        val n = "graft_importance_sample"
-        graft.operators.Dsir.gumbelTopK(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            numLit(n, "k", args(1)).toInt,
-            numLit(n, "tauPpm", args(2)).toLong)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_curriculum"),
-      info("graft_curriculum",
-        "graft_curriculum(table, difficultyCol, nBands) - band-interleaved curriculum schedule over the laned rank machinery: input columns + band + within_pct; consume ORDER BY within_pct, band"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_curriculum expects 3 arguments")
-        val n = "graft_curriculum"
-        graft.operators.Curriculum.interleave(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "difficultyCol", args(1)),
-            numLit(n, "nBands", args(2)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_exact_substr_min"),
-      info("graft_exact_substr_min",
-        "graft_exact_substr_min(table, idCol, textCol, minLen, k) - winnowed-minimizer ExactSubstr dedup: output-identical to graft_exact_substr, both gram-sized shuffles cut ~(minLen-k+1)/2x by k-gram minimizer pre-selection: (id, n_chars, n_removed, clean_text)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_exact_substr_min expects 5 arguments")
-        val n = "graft_exact_substr_min"
-        graft.textanalysis.TextAnalysis.exactSubstrDedupMinimized(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            strLit(n, "textCol", args(2)),
-            numLit(n, "minLen", args(3)).toInt,
-            numLit(n, "k", args(4)).toInt)
-          .queryExecution.logical
-      }))
-    e.injectTableFunction((
-      FunctionIdentifier("graft_jpeg_dhash_tolerant"),
-      info("graft_jpeg_dhash_tolerant",
-        "graft_jpeg_dhash_tolerant(table, idCol, quality) - corruption-tolerant sibling of graft_jpeg_dhash: corrupt payloads book ok=false with null features, never a thrown task: (doc_id, ok, width, height, dhash)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_jpeg_dhash_tolerant expects 3 arguments")
-        val n = "graft_jpeg_dhash_tolerant"
-        graft.multimodal.Multimodal.jpegDHashesTolerant(
-            SparkSession.active.table(strLit(n, "table", args.head)),
-            strLit(n, "idCol", args(1)),
-            numLit(n, "quality", args(2)).toFloat)
-          .queryExecution.logical
-      }))
+    // naive `levenshtein(a,b) <= d` predicates (Filter or Join) become
+    // length-pruned + banded-DP form; see the rule's scaladoc
+    e.injectOptimizerRule(_ => graft.plans.FuzzyMatchPruning)
+    // plans graft.plans.TopKPerGroup as partial -> exchange -> final
+    // bounded-buffer execs (never sorts more than k rows per group)
+    e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+
+    // ---- table-valued surface: the whole-relation curation operators ----
+    // SELECT * FROM graft_minhash_keep('docs', 'doc_id', 'text'): the TVF
+    // builder resolves the named table/view through the active session's
+    // catalog and returns the SAME logical plan the Scala builder method
+    // produces — SQL users get the operator, not a reimplementation
+    // (row equality pinned in ExtensionsRegistrationSpec).
+    tableFunctions.foreach { f =>
+      e.injectTableFunction((FunctionIdentifier(f.name), info(f.name, f.usage),
+        f.build _))
+    }
   }
+}
+
+object GraftExtensions {
+
+  private def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+
+  /** One SQL table function. `usage` opens with the `name(a, b, ...)`
+    * signature, which fixes the function's name, its arity and the
+    * argument names its errors cite; `body` reads the literal arguments
+    * by position and returns the builder method's frame. */
+  final class TableFunction(val usage: String, body: TvfArgs => Dataset[_]) {
+    val name: String = usage.takeWhile(_ != '(')
+    val argNames: IndexedSeq[String] =
+      usage.slice(name.length + 1, usage.indexOf(')')).split(",")
+        .map(_.trim).toIndexedSeq
+
+    def build(args: Seq[Expression]): LogicalPlan = {
+      require(args.length == argNames.length,
+        s"$name expects ${argNames.length} arguments")
+      body(new TvfArgs(this, args)).queryExecution.logical
+    }
+  }
+
+  /** The arguments of one table-function call. Every argument is a
+    * literal: table names and column names are strings, sizes and
+    * thresholds are numbers. */
+  final class TvfArgs(f: TableFunction, args: Seq[Expression]) {
+    def fn: String = f.name
+
+    private def fail(i: Int, what: String): Nothing =
+      throw new IllegalArgumentException(s"$fn: ${f.argNames(i)} must be $what")
+
+    def str(i: Int): String = args(i) match {
+      case l if l.foldable && l.dataType == StringType && l.eval() != null =>
+        l.eval().toString
+      case _ => fail(i, "a non-null string literal")
+    }
+    /** A comma-separated list literal. */
+    def strs(i: Int): Seq[String] = str(i).split(",").toSeq
+    def col(i: Int): Column = org.apache.spark.sql.functions.col(str(i))
+    def table(i: Int): DataFrame = SparkSession.active.table(str(i))
+
+    private def numText(i: Int): String = args(i) match {
+      case l if l.foldable && l.eval() != null => l.eval().toString
+      case _ => fail(i, "a numeric literal")
+    }
+    /** Decimal, double and integer literals alike. */
+    def num(i: Int): Double = numText(i).toDouble
+    // exact on the literal's text: narrowing through a Double would turn
+    // 2.7 into 2 and saturate 1e10 at Int.MaxValue without a word
+    def int(i: Int): Int = whole(i, "an int")(_.isValidInt).toInt
+    def long(i: Int): Long = whole(i, "a long")(_.isValidLong).toLong
+    private def whole(i: Int, what: String)(fits: BigDecimal => Boolean)
+        : BigDecimal = {
+      val s = numText(i)
+      scala.util.Try(BigDecimal(s)).toOption.filter(fits).getOrElse(
+        fail(i, s"a whole-number literal that fits $what, got $s"))
+    }
+  }
+
+  private def tvf(usage: String)(body: TvfArgs => Dataset[_]): TableFunction =
+    new TableFunction(usage, body)
+
+  /** Every SQL table function, in registration order. */
+  val tableFunctions: Seq[TableFunction] = Seq(
+    tvf("graft_exact_dedup(table, idCol, textCol) - word-set digest groups: (dedup_key, first_id, n_docs)")(a =>
+      Dedup.exactGroups(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_minhash_keep(table, idCol, textCol) - one-pass MinHash LSH dedup decision (md5 family): (id, rep_id, is_kept)")(a =>
+      Dedup.minhashRepresentativesMd5(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_containment_keep(table, idCol, textCol, threshold) - one-pass containment dedup decision: (id, rep_id, is_kept)")(a =>
+      Dedup.containmentRepresentatives(a.table(0), a.str(1), a.str(2), a.num(3))),
+    tvf("graft_hll_distinct(table, keyCol, p) - replayable md5 HyperLogLog cardinality estimate: (hll_est)") { a =>
+      val p = a.int(2)
+      Analytics.hllEstimate(Analytics.hllRegisters(a.table(0), a.str(1), p), p)
+    },
+    tvf("graft_topk_group(table, groupCol, orderCol, k, tieCol) - salted per-group top-k (rk column appended)")(a =>
+      Analytics.topKPerGroup(a.table(0), Seq(a.str(1)), a.str(2), a.int(3),
+        Seq(a.str(4)), salts = 8)),
+    tvf("graft_split(table, keyCol, wTrain, wVal, wTest) - deterministic md5 train/val/test split")(a =>
+      DeterministicSplit(a.table(0), Seq(a.str(1)), Seq("train" -> a.num(2),
+        "val" -> a.num(3), "test" -> a.num(4)))),
+    tvf("graft_kmv_distinct(table, keyCol, k) - replayable bottom-k (KMV) distinct estimate: (kmv_est)") { a =>
+      val k = a.int(2)
+      Analytics.kmvEstimate(Analytics.kmvSketch(a.table(0), a.str(1), k), k)
+    },
+    tvf("graft_qsketch(table, keyCols, valueCol, k, probs) - mergeable bottom-k-by-hash quantile estimates (keyCols/probs comma-separated): (prob, est_q)") { a =>
+      val keyCols = a.strs(1)
+      val probs = a.strs(4).map(p => p -> p.toDouble)
+      Analytics.qsketchQuantiles(Analytics.qsketchSample(a.table(0),
+        concat_ws("|", keyCols.map(col): _*), a.str(2), a.int(3)), probs)
+    },
+    tvf("graft_qsketch_grouped(table, groupCols, keyCols, valueCol, k, probs) - per-group bottom-k-by-hash quantile estimates (groupCols/keyCols/probs comma-separated): groupCols + (prob, est_q)") { a =>
+      val groupCols = a.strs(1)
+      val keyCols = a.strs(2)
+      val probs = a.strs(5).map(p => p -> p.toDouble)
+      Analytics.qsketchQuantilesGrouped(Analytics.qsketchSampleGrouped(a.table(0),
+        groupCols, concat_ws("|", keyCols.map(col): _*), a.str(3), a.int(4)),
+        groupCols, probs)
+    },
+    tvf("graft_exact_quantiles(table, keyCols, valueCol, k, nBuckets, probs) - EXACT quantile_cont values by sketch-guided selection, no global sort (keyCols/probs comma-separated): (prob, exact_q)") { a =>
+      val keyCols = a.strs(1)
+      val probs = a.strs(5).map(p => p -> p.toDouble)
+      Analytics.exactQuantilesSelect(a.table(0), concat_ws("|",
+        keyCols.map(col): _*), a.str(2), probs, a.int(3), a.int(4))
+    },
+    tvf("graft_exact_quantiles_grouped(table, groupCol, keyCols, valueCol, k, nBuckets, probs) - EXACT per-group quantile_cont values by sketch-guided selection (keyCols/probs comma-separated): (groupCol, prob, exact_q)") { a =>
+      val keyCols = a.strs(2)
+      val probs = a.strs(6).map(p => p -> p.toDouble)
+      Analytics.exactQuantilesSelectGrouped(a.table(0), a.str(1),
+        concat_ws("|", keyCols.map(col): _*), a.str(3), probs, a.int(4),
+        a.int(5))
+    },
+    tvf("graft_equidepth(table, keyCols, valueCol, k, nBuckets) - equi-depth range bucket per row from a bottom-k quantile sketch (keyCols comma-separated): input cols + (bucket)") { a =>
+      val keyCols = a.strs(1)
+      Analytics.qsketchRangeBuckets(a.table(0), concat_ws("|",
+        keyCols.map(col): _*), a.str(2), a.int(3), a.int(4))
+    },
+    tvf("graft_drift_psi(baseTable, currentTable, valueCol, buckets) - PSI drift report between two table versions: (bucket, p_base, p_cur, psi)")(a =>
+      Analytics.driftPsi(a.table(0), a.table(1), a.str(2), a.int(3))),
+    tvf("graft_strip_dup_spans(table, idCol, textCol, n) - cut every non-canonical duplicated n-gram span: (id, n_tokens, n_removed, clean_text)")(a =>
+      TextAnalysis.stripDuplicatedSpans(a.table(0), a.str(1), a.str(2),
+        a.int(3))),
+    tvf("graft_ewma_anomaly(table, partCols, orderCols, valueCol, alpha, span, k, minN) - EWMA-forecast anomaly flags per key (cols comma-separated): input cols + (ewma, forecast, anom_score, is_anomaly)")(a =>
+      Analytics.ewmaAnomaly(a.table(0), a.strs(1), a.strs(2), a.str(3),
+        a.num(4), a.int(5), a.num(6), a.int(7))),
+    tvf("graft_nb_score(trainTable, scoreTable, idCol, textCol, labelCol, posLabel, alpha) - Naive-Bayes mean-likelihood-ratio scores of scoreTable against a model trained on trainTable: (id, nb_score, nb_pred)") { a =>
+      val model = NaiveBayes.train(a.table(0), a.str(3),
+        a.col(4) === a.str(5), a.num(6))
+      NaiveBayes.score(model, a.table(1), a.str(2), a.str(3))
+    },
+    tvf("graft_rag(docsTable, embTable, queryVecId, terms, n, c, k, budget) - RAG retrieval pipeline: span-scrub -> BM25 + dense lists -> RRF fusion -> greedy packing under the token budget (terms comma-separated); docsTable needs (doc_id, text), embTable (vec_id, embedding)")(a =>
+      Rag.pack(a.table(0), a.table(1), a.long(2), a.strs(3), a.int(4),
+        a.int(5), a.int(6), a.long(7))),
+    tvf("graft_heavy_hitters(table, keyCol, minShare) - exact keys above the share threshold via a Misra-Gries sketch + verify pass: (k, cnt, share)")(a =>
+      HeavyHitters.exact(a.table(0), a.col(1), a.num(2))),
+    tvf("graft_paragraph_dedup(table, idCol, textCol, window) - keep-first chunk-level dedup with document reassembly: (id, n_chunks, n_kept, n_dropped, kept_text)")(a =>
+      Dedup.paragraphDedup(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_temperature_mix(table, sourceCol, total, seedCols) - alpha=0.5 temperature-rebalanced sample with exact per-source quotas (seedCols comma-separated): input rows kept")(a =>
+      TemperatureMixture(a.table(0), a.str(1), a.long(2), a.strs(3), hash = Md5)),
+    tvf("graft_compaction_bins(statsTable, fileCol, bytesCol, targetBytes) - greedy first-fit bin per file off an exclusive byte prefix sum: stats cols + (cum_before, bin)")(a =>
+      Compaction.planBins(a.table(0), a.str(1), a.str(2), a.long(3))),
+    tvf("graft_skyline(table, xCol, yCol) - 2-D min-min Pareto frontier over distinct pairs: (x, y, n_rows)")(a =>
+      Pareto.skyline2D(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_label_prop(edgesTable, srcCol, dstCol, rounds) - synchronous label propagation with min-label tie-break: (node, label)")(a =>
+      LabelProp(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_cooccur_pairs(table, basketCol, itemCol, minSupport) - A-Priori-pruned frequent co-occurring pairs: (item_a, item_b, pair_cnt)")(a =>
+      Cooccur.frequentPairs(a.table(0), a.col(1), a.col(2), a.long(3))),
+    tvf("graft_ks_drift(baseTable, currentTable, valueCol) - exact two-sample Kolmogorov-Smirnov statistic: (ks_stat, n_base, n_current)")(a =>
+      KsDrift.ks(a.table(0), a.table(1), a.str(2))),
+    tvf("graft_interpolate(table, keyCols, tCol, vCol) - linear gap interpolation per series, edges clamped (keyCols comma-separated): input cols + v_interp")(a =>
+      Resample.interpolateLinear(a.table(0), a.strs(1), a.str(2), a.str(3),
+        "v_interp")),
+    tvf("graft_inverted_index(table, idCol, textCol, minDf, maxDf) - df-windowed inverted index over lowercased whitespace tokens: (term, df, postings)")(a =>
+      InvertedIndex.build(a.table(0), a.str(1), a.str(2), a.long(3), a.long(4))),
+    tvf("graft_negatives(posTable, userCol, itemCol, nItems, k) - deterministic md5-draw negative samples per user: (user, neg_item, draw)")(a =>
+      NegativeSample(a.table(0), a.col(1), a.col(2), a.long(3), a.int(4))),
+    tvf("graft_rank_pct(table, valueCol) - percent_rank normalization without a one-task window: input cols + rank_pct")(a =>
+      RankNormalize(a.table(0), a.str(1))),
+    tvf("graft_term_mi(table, idCol, textCol, labelCol, posValue, minDf) - term-label mutual information over the 2x2 contingency: (term, df, mi)")(a =>
+      TermStats.termMutualInfo(a.table(0), a.str(1), a.str(2),
+        a.col(3) === a.str(4), a.long(5))),
+    tvf("graft_auc(table, scoreCol, labelCol) - exact ROC AUC by the Mann-Whitney identity, no global rank window: (auc, n_pos, n_neg)")(a =>
+      Auc.auc(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_ppr(edgesTable, srcCol, dstCol, sources, rounds) - personalized PageRank from a comma-separated seed set: (node, rank)")(a =>
+      PageRank.personalized(a.table(0), a.str(1), a.str(2), a.strs(3), a.int(4))),
+    tvf("graft_sparse_cosine(table, idCol, textCol, nDocs, maxDfFrac, minSim) - above-threshold tf-idf cosine pairs through the posting table: (doc_a, doc_b, cos)")(a =>
+      InvertedIndex.sparseCosinePairs(a.table(0), a.str(1), a.str(2),
+        a.long(3), a.num(4), a.num(5))),
+    tvf("graft_gini(table, valueCol) - exact Gini concentration of a non-negative long column (scale currency to cents first): (gini, n, total)")(a =>
+      Gini.gini(a.table(0), a.col(1))),
+    tvf("graft_gini_grouped(table, groupCol, valueCol) - exact per-group Gini concentration: (g, gini, n, total)")(a =>
+      Gini.giniGrouped(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_auc_grouped(table, groupCol, scoreCol, labelCol) - exact per-group ROC AUC by the Mann-Whitney identity: (g, auc, n_pos, n_neg)")(a =>
+      Auc.aucGrouped(a.table(0), a.col(1), a.col(2), a.col(3))),
+    tvf("graft_ks_drift_grouped(baseTable, currentTable, groupCol, valueCol) - exact per-group two-sample Kolmogorov-Smirnov statistic: (g, ks_stat, n_base, n_current)")(a =>
+      KsDrift.ksGrouped(a.table(0), a.table(1), a.col(2), a.str(3))),
+    tvf("graft_rank_pct_grouped(table, groupCol, valueCol) - per-group percent_rank normalization, no per-group one-task window: input cols + rank_pct")(a =>
+      RankNormalize.grouped(a.table(0), a.col(1), a.str(2))),
+    tvf("graft_lorenz(table, valueCol, points) - exact Lorenz-curve points of a non-negative long column: (p, r, cum_share)")(a =>
+      Gini.lorenz(a.table(0), a.col(1), a.int(2))),
+    tvf("graft_chunk(table, idCol, textCol, size, overlap) - fixed-size token chunks with overlap: (id, chunk_id, n_chunk_tokens, chunk_text)")(a =>
+      Chunker.chunk(a.table(0), a.str(1), a.str(2), a.int(3), a.int(4))),
+    tvf("graft_mixture_kl(table, sourceCol, recipe) - per-source share vs a 'src:w,src:w' target recipe + KL contribution: (source, n, share, target_w, kl_term)") { a =>
+      val recipe = a.str(2).split(",").map { kv =>
+        val Array(src, w) = kv.split(":")
+        src.trim -> w.trim.toDouble
+      }.toMap
+      MixtureKl.audit(a.table(0), a.col(1), recipe)
+    },
+    tvf("graft_unigram_logprob(table, idCol, textCol) - add-1 unigram LM mean token log-probability per document: (id, n_tokens, avg_logprob)")(a =>
+      UnigramLm.scoreDocs(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_mmr(poolTable, idCol, vecCol, relCol, k) - maximal-marginal-relevance re-rank of a bounded candidate pool: (rank, id, mmr_score)")(a =>
+      Mmr.rerank(a.table(0), a.str(1), a.str(2), a.str(3), a.int(4))),
+    tvf("graft_strip_html(table, idCol, htmlCol) - drop script/style blocks, strip tags, decode entities, collapse whitespace: (id, n_tags, text_clean)") { a =>
+      val c = a.col(2)
+      a.table(0).select(a.col(1),
+        HtmlStrip.tagCount(c).cast("long").as("n_tags"),
+        HtmlStrip.strip(c).as("text_clean"))
+    },
+    tvf("graft_oov_rate(table, idCol, textCol, k) - per-doc out-of-vocabulary rate vs the corpus top-k vocab: (id, n_tokens, n_oov, oov_rate)")(a =>
+      Oov.oovRate(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_token_budget(table, sourceCol, idCol, textCol, budget) - admit docs per source (ascending id) until the token budget: (source, id, n_tokens, cum_tokens)")(a =>
+      TokenBudget.cap(a.table(0), a.str(1), a.str(2), a.str(3), a.long(4))),
+    tvf("graft_moments(table, keyCol, valueCol) - per-key population skewness/excess kurtosis from one power-sum pass: (key, n, mean, skewness, kurtosis_excess)")(a =>
+      Moments.shape(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_kcore(edgesTable, aCol, bCol, k, rounds) - k-core peel (degree < k drops, up to `rounds` synchronous rounds): (node, degree)")(a =>
+      KCore.peel(a.table(0), a.str(1), a.str(2), a.int(3), a.int(4))),
+    tvf("graft_benford(table, valueCol) - first-significant-digit distribution vs Benford's law: (digit, n, share, expected, dev)")(a =>
+      Benford.firstDigit(a.table(0), a.col(1))),
+    tvf("graft_holt(table, keyCol, tCol) - Holt level+trend smoothing of per-key period counts: (key, n_periods, level, trend, forecast)")(a =>
+      Holt.linear(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_bootstrap_means(table, seedCol, valueCol, b) - deterministic Poisson-bootstrap replicate means of a long column: (rep, n_eff, mean)")(a =>
+      Bootstrap.replicateMeans(a.table(0), a.col(1), a.col(2), a.int(3))),
+    tvf("graft_bootstrap_ci(table, seedCol, valueCol, b, alpha) - Poisson-bootstrap percentile interval + point estimate: (b, point, ci_lo, ci_hi)")(a =>
+      Bootstrap.ci(a.table(0), a.col(1), a.col(2), a.int(3), a.num(4))),
+    tvf("graft_class_balance(table, classCol, idCol) - keep min-class-count md5-smallest rows per class (input cols)")(a =>
+      ClassBalance.downsample(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_hll_stream_merge(table, keyCol, itemCol) - order-free streaming-HLL end states merged to estimates: (key, n_events, hll_est)")(a =>
+      StreamingHll.merged(StreamingHll.endStates(a.table(0), a.str(1),
+        a.str(2)))),
+    tvf("graft_global_shuffle(table, idCol, seed, nShards) - seeded reproducible corpus permutation + shard assignment: (id, sort_key, shard, pos)")(a =>
+      GlobalShuffle.shuffle(a.table(0), a.col(1), a.str(2), a.int(3))),
+    tvf("graft_shuffle_pack(table, idCol, textCol, seed, nShards, capacity) - shuffled doc-granularity bin packing: (shard, bin, pos, id, n_tokens, cum_before)")(a =>
+      GlobalShuffle.packBins(a.table(0), a.col(1), a.col(2), a.str(3),
+        a.int(4), a.long(5))),
+    tvf("graft_js_divergence(tableA, tableB, categoryCol) - per-category Jensen-Shannon terms between two snapshots: (category, n_base, n_current, p, q, js_term)")(a =>
+      JsDivergence.audit(a.table(0), a.table(1), a.col(2))),
+    tvf("graft_kappa(table, labelACol, labelBCol) - Cohen's kappa labeler agreement: (n, p_o, p_e, kappa)")(a =>
+      Kappa.cohen(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_kappa_fleiss(table, itemCol, labelCol, raters) - Fleiss' kappa panel agreement over items with exactly `raters` ratings: (n_items, n_raters, p_bar, p_e, kappa)")(a =>
+      Kappa.fleiss(a.table(0), a.col(1), a.col(2), a.int(3))),
+    tvf("graft_consensus_weighted(table, itemCol, raterCol, labelCol) - reliability-weighted consensus (raters vote with their 1e6-scaled round-1 accuracy): (item, label, w_votes, votes, total)")(a =>
+      Labeling.weightedConsensus(a.table(0), a.col(1), a.col(2), a.col(3))),
+    tvf("graft_mix_plan(table, sourceCol, textCol, weightsSpec, budgetTokens) - source-mixture sampling plan; weightsSpec is 'src:w,src:w': (source, n_docs, n_tokens, weight, target_tokens, epochs)") { a =>
+      val spec = a.strs(3).map(_.trim).filter(_.nonEmpty).map { kv =>
+        val i = kv.lastIndexOf(':')
+        require(i > 0 && i < kv.length - 1,
+          s"${a.fn}: weightsSpec entries are 'source:weight', got '$kv'")
+        kv.substring(0, i) -> kv.substring(i + 1).toDouble
+      }
+      require(spec.map(_._1).distinct.size == spec.size,
+        s"${a.fn}: duplicate sources in weightsSpec: ${spec.map(_._1)}")
+      MixPlan.plan(a.table(0), a.col(1), a.col(2), spec, a.long(4))
+    },
+    tvf("graft_keep_best(table, idCol, textCol, scoreCol) - exact dedup keeping the argmax-score copy per word-set digest (min id on ties): (dedup_key, keep_id, keep_score, n_docs)")(a =>
+      Dedup.exactKeepBest(a.table(0), a.str(1), a.str(2), a.col(3))),
+    tvf("graft_vocab_growth(table, idCol, textCol, seed) - Heaps-law vocabulary growth along the seeded shuffle order at the 1/5/10/25/50/100% prefixes: (pct, cutoff, docs, tokens, vocab)")(a =>
+      TextAnalysis.vocabGrowth(a.table(0), a.str(1), a.str(2), a.str(3),
+        graft.queries.Round15c.VocabPcts)),
+    tvf("graft_label_consensus(table, itemCol, labelCol) - majority-vote consensus per item, deterministic (votes DESC, label ASC) tie-break: (item, label, votes, total, confidence, unanimous)")(a =>
+      Labeling.consensus(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_rater_accuracy(table, itemCol, raterCol, labelCol) - per-rater reliability vs the panel consensus: (rater, n, n_match, accuracy)")(a =>
+      Labeling.raterAccuracy(a.table(0), a.col(1), a.col(2), a.col(3))),
+    tvf("graft_kripp_alpha(table, itemCol, labelCol) - Krippendorff's alpha (nominal) over variable-size panels, singletons excluded: (n_units, n_ratings, d_o, d_e, alpha)")(a =>
+      Labeling.krippendorffAlpha(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_chi2(table, aCol, bCol) - chi-squared independence screen, one row per contingency cell: (a, b, o, e, chi2_term)")(a =>
+      ChiSquare.independence(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_cusum(table, keyCol, tCol) - standardized count-CUSUM series per key: (key, t, c, cusum)")(a =>
+      Cusum.series(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_cusum_peak(table, keyCol, tCol) - changepoint candidate per key (argmax |cusum|, earliest tie): (key, n_periods, cp_t, cp_cusum)")(a =>
+      Cusum.changepoint(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_neighbor_jaccard(edgesTable, aCol, bCol) - neighbor-set Jaccard over distance-2 pairs via the wedge join: (id_a, id_b, common, jaccard)")(a =>
+      NeighborJaccard.pairs(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_ngram_spans(table, idCol, textCol, n) - maximal cross-doc duplicated n-gram token spans: (id, span_start, span_end, span_tokens)")(a =>
+      NgramSpans.spans(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_span_coverage(table, idCol, textCol, n) - per-doc cross-doc duplicated-token coverage: (id, n_tokens, dup_tokens, dup_frac)")(a =>
+      NgramSpans.coverage(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_snm_pairs(table, idCol, textCol, window, minJaccard) - sorted-neighborhood near-dup pairs (block = first token, sort = text): (id_a, id_b, jaccard)") { a =>
+      val textCol = a.str(2)
+      val t = trim(col(textCol))
+      SortedNeighborhood.pairs(a.table(0), a.str(1), textCol,
+        element_at(split(t, "\\s+"), 1), t, a.int(3), a.num(4))
+    },
+    tvf("graft_sq8_topk(table, idCol, vecCol, dim, queryId, candidates, k) - SQ8 two-stage retrieval (int8 approximate rank, exact rescore): (id, sim)") { a =>
+      val corpus = a.table(0)
+      val idCol = a.str(1)
+      val vecCol = a.str(2)
+      val dim = a.int(3)
+      val qv = corpus.filter(col(idCol) === a.long(4))
+        .select(Similarity.toVec(col(vecCol))).head().getSeq[Double](0)
+      val model = ScalarQuantizer.fit(corpus, vecCol, dim)
+      val encoded = ScalarQuantizer.encode(corpus, idCol, vecCol, model)
+      ScalarQuantizer.sqRescoreTopK(encoded, corpus, idCol, vecCol, model, qv,
+        a.int(5), a.int(6))
+    },
+    tvf("graft_entropy(table, groupCol, catCol) - Shannon entropy of the category distribution per group: (group, n, n_cats, entropy)")(a =>
+      Entropy.distribution(a.table(0), a.col(1), a.col(2))),
+    tvf("graft_video_frames(table, idCol, stride, tw, th) - REAL animated-GIF fixture decode: keep every stride-th frame, NN-resample to tw x th: (doc_id, frame_idx, n_frames, width, height, checksum)")(a =>
+      Multimodal.videoRoundTrip(a.table(0), a.str(1), a.int(2), a.int(3),
+        a.int(4))),
+    tvf("graft_image_phash_pairs(table, idCol, clusterSize, maxHamming) - dHash the REAL-decoded image fixture tier, Hamming-banded near-dup pair join: (doc_id_a, doc_id_b, hamming)")(a =>
+      Multimodal.imageNearDupPairs(Multimodal.imageDHashes(a.table(0),
+        a.str(1), a.int(2)).toDF(), a.int(3))),
+    tvf("graft_video_neardups(table, idCol, clusterSize, maxHamming, minMatch) - per-frame dHash over the REAL GIF sequence-decode tier, (frame, band)-bucketed pair join: (doc_id_a, doc_id_b, n_frames, n_match)")(a =>
+      Multimodal.videoNearDupPairs(Multimodal.videoFrameHashes(a.table(0),
+        a.str(1), a.int(2)), a.int(3), a.int(4))),
+    tvf("graft_audio_neardups(table, idCol, clusterSize, maxHamming) - energy-sign fingerprint over the REAL WAV decode tier, Hamming-banded pair join: (doc_id_a, doc_id_b, hamming)")(a =>
+      Multimodal.audioNearDupPairs(Multimodal.audioFingerprints(a.table(0),
+        a.str(1), a.int(2)).toDF(), a.int(3))),
+    tvf("graft_split_by_digest(table, idCol, textCol, trainPct, valPct) - leakage-free train/val/test split keyed on the exact-dedup digest (identical copies always co-split): (id, dedup_key, split)")(a =>
+      DatasetSplit.byDigest(a.table(0), a.str(1), a.str(2), a.int(3), a.int(4))),
+    tvf("graft_dsir_weights(table, idCol, textCol, targetLangCol, targetLang, buckets) - DSIR hashed-unigram importance log-weights, target vs pool, ppm-exact: (id, is_target, n_tokens, logw_ppm)")(a =>
+      Dsir.importanceWeights(a.table(0), a.str(1), a.str(2),
+        a.col(3) === a.str(4), a.int(5))),
+    tvf("graft_ccnet_buckets(table, idCol, textCol, langCol) - CCNet head/middle/tail per-language perplexity triage over the add-1 unigram LM: (lang, bucket, n_docs, n_tokens, lp_min, lp_max)")(a =>
+      PerplexityBuckets.summary(a.table(0), a.str(1), a.str(2), a.str(3))),
+    tvf("graft_dup_weights(table, idCol, textCol) - duplicate-count sampling weights over the exact-dedup digest: (id, dedup_key, n_docs, weight)")(a =>
+      Dedup.dupWeights(a.table(0), a.str(1), a.str(2))),
+    tvf("graft_exact_substr(table, idCol, textCol, minLen) - character-level ExactSubstr dedup (Lee et al. 2021): cut every non-canonical occurrence of a >= minLen-char duplicated substring, keep-first: (id, n_chars, n_removed, clean_text)")(a =>
+      TextAnalysis.exactSubstrDedup(a.table(0), a.str(1), a.str(2), a.int(3))),
+    tvf("graft_jpeg_dhash(table, idCol, quality) - REAL lossy JPEG round trip per id (JDK writer at quality, ImageIO decode, dHash of the decoded raster): (doc_id, width, height, dhash)")(a =>
+      Multimodal.jpegDHashes(a.table(0), a.str(1), a.num(2).toFloat)),
+    tvf("graft_ccnet_stream_buckets(table, idCol, textCol, langCol) - streaming twin of graft_ccnet_buckets: triage cuts from the bounded keyed quantile sketch instead of the exact terciles: (lang, bucket, n_docs, n_tokens, lp_min, lp_max)")(a =>
+      PerplexityBuckets.streamingSummary(a.table(0), a.str(1), a.str(2),
+        a.str(3))),
+    tvf("graft_importance_sample(table, k, tauPpm) - deterministic Gumbel top-k importance resampling over a weights frame with (id, logw_ppm) columns (e.g. graft_dsir_weights output): input columns + key_ppm, the k largest keys")(a =>
+      Dsir.gumbelTopK(a.table(0), a.int(1), a.long(2))),
+    tvf("graft_curriculum(table, difficultyCol, nBands) - band-interleaved curriculum schedule over the laned rank machinery: input columns + band + within_pct; consume ORDER BY within_pct, band")(a =>
+      Curriculum.interleave(a.table(0), a.str(1), a.int(2))),
+    tvf("graft_exact_substr_min(table, idCol, textCol, minLen, k) - winnowed-minimizer ExactSubstr dedup: output-identical to graft_exact_substr, both gram-sized shuffles cut ~(minLen-k+1)/2x by k-gram minimizer pre-selection: (id, n_chars, n_removed, clean_text)")(a =>
+      TextAnalysis.exactSubstrDedupMinimized(a.table(0), a.str(1), a.str(2),
+        a.int(3), a.int(4))),
+    tvf("graft_jpeg_dhash_tolerant(table, idCol, quality) - corruption-tolerant sibling of graft_jpeg_dhash: corrupt payloads book ok=false with null features, never a thrown task: (doc_id, ok, width, height, dhash)")(a =>
+      Multimodal.jpegDHashesTolerant(a.table(0), a.str(1), a.num(2).toFloat))
+  )
 }

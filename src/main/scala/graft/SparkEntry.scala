@@ -9,31 +9,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("pipeline_price_update")(spark, "/root/testdata/sf0.001")
 
-  private def defMaps: Seq[Map[String, (SparkSession, String) => DataFrame]] =
-    Seq(Relational.defs, Relational2.defs, Extensions.defs, Pipelines.defs,
-      Round7.defs, Analytics7.defs, Round9.defs, Round10.defs, Round11.defs,
-      Round11b.defs, Round12.defs, Round12b.defs, Round12c.defs,
-      Round12d.defs, Round13.defs, Round13b.defs, Round13c.defs,
-      Round13d.defs, Round13e.defs, Round13f.defs, Round13g.defs,
-      Round13h.defs, Round13i.defs, Round13j.defs, Round13k.defs,
-      Round14.defs, Round14b.defs, Round14c.defs, Round15.defs,
-      Round15b.defs, Round15c.defs, Round15d.defs, Round16.defs,
-      Round16b.defs, Round16c.defs, Round16d.defs, Round16e.defs, Round16f.defs, Round16g.defs,
-      Round16h.defs, Round17.defs, Round18.defs)
-
-  private def oracleMaps: Seq[Map[String, String]] =
-    Seq(Relational.oracles, Relational2.oracles, Extensions.oracles,
-      Pipelines.oracles, Round7.oracles, Analytics7.oracles, Round9.oracles,
-      Round10.oracles, Round11.oracles, Round11b.oracles, Round12.oracles,
-      Round12b.oracles, Round12c.oracles, Round12d.oracles, Round13.oracles,
-      Round13b.oracles, Round13c.oracles, Round13d.oracles, Round13e.oracles,
-      Round13f.oracles, Round13g.oracles, Round13h.oracles, Round13i.oracles,
-      Round13j.oracles, Round13k.oracles, Round14.oracles, Round14b.oracles,
-      Round14c.oracles, Round15.oracles, Round15b.oracles, Round15c.oracles,
-      Round15d.oracles, Round16.oracles, Round16b.oracles, Round16c.oracles,
-      Round16d.oracles, Round16e.oracles, Round16f.oracles,
-      Round16g.oracles, Round16h.oracles, Round17.oracles,
-      Round18.oracles)
+  /** Every gate batch, in merge order. */
+  private def batches: Seq[GateBatch] =
+    Seq(Relational, Relational2, Extensions, Pipelines, Round7, Analytics7,
+      Round9, Round10, Round11, Round11b, Round12, Round12b, Round12c,
+      Round12d, Round13, Round13b, Round13c, Round13d, Round13e, Round13f,
+      Round13g, Round13h, Round13i, Round13j, Round13k, Round14, Round14b,
+      Round14c, Round15, Round15b, Round15c, Round15d, Round16, Round16b,
+      Round16c, Round16d, Round16e, Round16f, Round16g, Round16h, Round17,
+      Round18)
 
   /** A duplicate key across batch files would SILENTLY shadow the
     * earlier gate under `++` (found the hard way in round 16: a second
@@ -51,9 +35,9 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    merged(defMaps, "queries")
+    merged(batches.map(_.defs), "queries")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = merged(oracleMaps, "oracleSql")
+  def oracleSql: Map[String, String] = merged(batches.map(_.oracles), "oracleSql")
 }

@@ -12,7 +12,7 @@ import graft.textanalysis.TextAnalysis
   * quality scoring. Every gate pairs the distributed Spark shape with a
   * DuckDB-replayable oracle.
   */
-object Analytics7 {
+object Analytics7 extends GateBatch {
 
   /** One week in nanoseconds (events.ts is BIGINT ns under nanosAsLong). */
   private val WeekNs = 604800L * 1000000000L
@@ -462,7 +462,7 @@ object Analytics7 {
     // docs from a ~30-word vocabulary, so >half of ALL pairs pass t=0.9
     // and a full-corpus gate at sf0.1 is a ~7M-row output dump — cost
     // that measures the answer's size, not the operator (whose 10x
-    // scaling ScaleRehearsal covers on the full corpus)
+    // scaling was rehearsed on the full corpus)
     "dedup_containment_scale" -> ((s, dir) =>
       graft.dedup.Dedup.containmentNearDups(
         tbl(s, dir, "documents").filter(col("doc_id") % 10 === 0),

@@ -14,7 +14,7 @@ import graft.textanalysis.TextAnalysis
   * `agg_approx_distinct` hash-matches via its error-bound booleans (each
   * engine checks its OWN sketch against the exact count it recomputes).
   */
-object Extensions {
+object Extensions extends GateBatch {
 
   /** The `dedup_cosine_pairs` gate's banded sign-LSH plan: 4 hash tables
     * x 6 hyperplanes (dims 0-23). Pinned (not [[Similarity.signBandPlanFor]]

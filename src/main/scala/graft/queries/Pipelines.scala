@@ -9,7 +9,7 @@ import graft.operators._
   * exercised under the DuckDB oracle: `part` plays the price list, the
   * latest `lineitem` per part plays the CRM extract.
   */
-object Pipelines {
+object Pipelines extends GateBatch {
 
   private def updatedParts(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val nexo = tbl(s, dir, "part")

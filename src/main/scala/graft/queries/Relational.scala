@@ -10,7 +10,7 @@ import graft.operators._
   * are rounded; pass-through doubles are left untouched (bit-exact from
   * parquet in both engines).
   */
-object Relational {
+object Relational extends GateBatch {
 
   val defs: Map[String, Q] = Map(
     // A1 — grouped multi-aggregate with named outputs

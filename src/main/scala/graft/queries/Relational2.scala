@@ -10,7 +10,7 @@ import graft.operators._
   * joins (J4-J6), set ops (U2), sorts/limits (O4-O6), projections/filters
   * (P2-P11) and the remaining scalar functions (F5, F6, F9, F11, F13, F14).
   */
-object Relational2 {
+object Relational2 extends GateBatch {
 
   val defs: Map[String, Q] = Map(
     // A2 — derived ratio columns over a grouped count

@@ -14,7 +14,7 @@ import graft.textanalysis.{NaiveBayes, TextAnalysis}
   * layer a 100 TB corpus needs — overlap audits between pipelines
   * without joining the corpora.
   */
-object Round10 {
+object Round10 extends GateBatch {
   type Q = (org.apache.spark.sql.SparkSession, String) =>
     org.apache.spark.sql.DataFrame
 
@@ -164,9 +164,8 @@ object Round10 {
     * ANY scale factor (a fixed offset silently collides once keys
     * outgrow it: TPC-H orders keys reach 6M·SF, so 5M broke at SF ≥ 1;
     * and the +1 covers key 0, which `+max` alone maps onto the max key
-    * itself), the same derivation as ScaleRehearsal's ostride. Spark
-    * side: a 1-row broadcast cross join, no driver round-trip; oracle
-    * side: the equivalent scalar subquery. */
+    * itself). Spark side: a 1-row broadcast cross join, no driver
+    * round-trip; oracle side: the equivalent scalar subquery. */
   private def withMaxKey(df: org.apache.spark.sql.DataFrame,
                          of: org.apache.spark.sql.DataFrame) =
     df.crossJoin(broadcast(

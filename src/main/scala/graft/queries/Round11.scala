@@ -7,7 +7,7 @@ import graft.similarity.{ProductQuantizer, Similarity}
 
 /** Round-11 gates. Each Spark query here has a DuckDB oracle generated
   * from the same constants, like [[Round10]]. */
-object Round11 {
+object Round11 extends GateBatch {
 
   /** PQ multi-iteration training constants. Training runs on a
     * deterministic quarter-sample of the corpus (`vec_id % TrainMod ==

@@ -7,7 +7,7 @@ import graft.operators.{Analytics, Compaction, HeavyHitters, Md5,
 /** Round-11 continuation gates: the heavy-hitters sketch family and
   * curation/layout planners. Each Spark query has a DuckDB oracle
   * generated from the same constants, like [[Round11]]. */
-object Round11b {
+object Round11b extends GateBatch {
 
   /** Heavy-hitter constants. The synthetic key plants two hot keys
     * (each ~1/6 of rows) over a ~2000-key cold tail, the shape MG is

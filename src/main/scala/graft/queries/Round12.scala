@@ -8,7 +8,7 @@ import graft.textanalysis.InvertedIndex
 /** Round-12 gates: Pareto frontier, label propagation, frequent pairs,
   * exact KS drift, linear interpolation, inverted index + lookup. Each
   * Spark query has a DuckDB oracle generated from the same constants. */
-object Round12 {
+object Round12 extends GateBatch {
 
   /** Co-occurrence constants: items are l_partkey mod 61 (61 synthetic
     * SKUs keep pair density healthy at every SF — raw part keys are too

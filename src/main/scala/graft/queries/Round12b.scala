@@ -8,7 +8,7 @@ import graft.textanalysis.{NaiveBayes, TermStats}
 /** Round-12 second batch: negative sampling, percent-rank
   * normalization, term mutual information, classifier calibration.
   * Oracles generated from the same constants as the Spark queries. */
-object Round12b {
+object Round12b extends GateBatch {
 
   /** Negative-sampling fixture: positives are (user mod 200,
     * event mod 300) interactions; 4 negatives per user drawn from the

@@ -6,7 +6,7 @@ import graft.similarity.{Mmr, Similarity}
 
 /** Round-12 third batch: MMR diversified re-rank and rolling
   * autocorrelation. */
-object Round12c {
+object Round12c extends GateBatch {
 
   /** MMR fixture: top-12 candidate pool by cosine to query vec 0,
     * re-ranked to 5 diverse picks at λ = 0.5 (exact binary double, so

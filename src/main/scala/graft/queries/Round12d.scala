@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Round-12 fourth batch: time-decayed counts with exact dyadic
   * weights, a robust (median-slope) trend per series, exact
   * distributed ROC AUC, and hard-negative mining. */
-object Round12d {
+object Round12d extends GateBatch {
 
   /** AUC on the NB holdout — same model/holdout constants as the
     * classifier gates. */

@@ -22,7 +22,7 @@ import graft.sinks.Writers
   * gates map TPC-H onto E1: `p_brand` plays Proyecto (25 projects),
   * `p_type` plays Estado (nulled every 7th size for the `__NA__`
   * paths), `p_retailprice`/`p_size` play the price/area numerics. */
-object Round13 {
+object Round13 extends GateBatch {
 
   /** Estado nulls: every size divisible by 7 — exercises null
     * partition-free columns in sinks and the `__NA__` bucket in A9. */

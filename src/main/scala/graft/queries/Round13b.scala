@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * laned prefix ([[graft.operators.LanedPrefix.withPrefixGrouped]]):
   * every window partitioned by (group, lane), per-group cut tables,
   * never a per-group global sort. */
-object Round13b {
+object Round13b extends GateBatch {
 
   /** AUC segments: four deterministic holdout slices. Must be coprime
     * with NbHoldoutMod (= 3): the holdout IS doc_id % 3 = 0, so a

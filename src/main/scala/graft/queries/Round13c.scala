@@ -6,7 +6,7 @@ import graft.operators.{Gini, KsDrift, RankNormalize}
 /** Round-13 third batch: the rest of the laned family on the grouped
   * prefix — per-segment KS drift and per-group percent-rank — plus the
   * exact Lorenz-curve report the Gini coefficient summarizes. */
-object Round13c {
+object Round13c extends GateBatch {
 
   /** Drift snapshot boundary: ships before 1998 vs 1998-and-later
     * (the corpus median lands mid-1998, so both periods are populated

@@ -7,7 +7,7 @@ import graft.textanalysis.{Chunker, UnigramLm}
 /** Round-13 fourth batch: training-data prep operators — RAG chunking
   * with overlap, the corpus-mixture KL audit, and unigram-LM quality
   * scoring. */
-object Round13d {
+object Round13d extends GateBatch {
 
   /** Chunking fixture: 40-token windows, 8-token overlap (stride 32). */
   private val ChunkSize = 40

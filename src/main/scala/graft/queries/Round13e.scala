@@ -7,7 +7,7 @@ import graft.textanalysis.{HtmlStrip, Oov}
 /** Round-13 fifth batch: web-crawl curation ops — HTML boilerplate
   * stripping, OOV-rate tokenizer fit, per-source token budgets, and
   * the categorical-balance entropy audit. */
-object Round13e {
+object Round13e extends GateBatch {
 
   /** Vocab size for the OOV gate — the corpus has 31 distinct tokens,
     * so 16 splits it into a real in/out mix. */

@@ -7,7 +7,7 @@ import graft.similarity.{ScalarQuantizer, Similarity}
 /** Round-13 sixth batch: the cross-doc substring-dedup signal (Lee et
   * al. n-gram spans + coverage), sorted-neighborhood blocking, and the
   * SQ8 rung of the compressed-ANN ladder. */
-object Round13f {
+object Round13f extends GateBatch {
 
   /** n-gram order for the span gates — 4 keeps the duplicated-gram
     * set real but bounded on the synthetic corpus. */

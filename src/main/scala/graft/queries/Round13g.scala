@@ -7,7 +7,7 @@ import graft.graph.NeighborJaccard
 /** Round-13 seventh batch: CUSUM changepoint monitoring on event
   * volumes and neighbor-set Jaccard link scoring on the near-dup
   * graph. */
-object Round13g {
+object Round13g extends GateBatch {
 
   private def dailyEvents(s: org.apache.spark.sql.SparkSession,
                           dir: String) =

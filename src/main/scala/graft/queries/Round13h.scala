@@ -7,7 +7,7 @@ import graft.streaming.StreamingHll
 /** Round-13 eighth batch: streaming HLL distinct counts (mergeable
   * bounded state, batch-twin gated), the Poisson bootstrap, and
   * class-balanced downsampling. */
-object Round13h {
+object Round13h extends GateBatch {
 
   /** Bootstrap replicates for both gates. */
   private val B = 32

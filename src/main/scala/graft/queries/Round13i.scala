@@ -6,7 +6,7 @@ import graft.operators.{Benford, Holt}
 
 /** Round-13 ninth batch: k-core density filtering, the Benford
   * first-digit audit, and Holt double-exponential forecasting. */
-object Round13i {
+object Round13i extends GateBatch {
 
   private val K = 3
   private val Rounds = 3

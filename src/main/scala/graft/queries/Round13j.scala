@@ -10,7 +10,7 @@ import graft.textanalysis.HtmlStrip
   * (strip → boilerplate-coverage cut → per-source token budget)
   * composing the 13e/13f operators, and Unicode NFC normalization as
   * a native codegen expression. */
-object Round13j {
+object Round13j extends GateBatch {
 
   private val N = 4
   private val MaxDupFrac = 0.5

@@ -5,7 +5,7 @@ import graft.operators.Moments
 
 /** Round-13 final batch: distribution-shape audit (grouped skewness /
   * excess kurtosis). */
-object Round13k {
+object Round13k extends GateBatch {
 
   val defs: Map[String, Q] = Map(
 

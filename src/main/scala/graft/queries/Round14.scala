@@ -35,7 +35,7 @@ import graft.sources.RawSheetSource
   * the row index — no randomness, no timestamps — so every run of
   * every round regenerates byte-identical files.
   */
-object Round14 {
+object Round14 extends GateBatch {
 
   /** Canonical alias table for the gate fixtures — same shape the
     * demo/production config uses (ref `:60-65`), plus the `Area total`

@@ -10,7 +10,7 @@ import graft.operators.{ChiSquare, GlobalShuffle, JsDivergence, Kappa}
   * its bin-packing composition, and three categorical audits —
   * Jensen–Shannon snapshot divergence, Cohen's kappa labeler
   * agreement, chi-squared independence. */
-object Round14b {
+object Round14b extends GateBatch {
 
   private val Seed = "s14"
   private val NShards = 16

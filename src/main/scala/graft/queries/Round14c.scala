@@ -13,7 +13,7 @@ import graft.sinks.XlsxWriter
   * gated the parquet/JSON/CSV sinks the same way; this closes the one
   * container family that was still spec-only at the gate level
   * (XlsxWriterSpec/XlsxIngestSpec pin it structurally). */
-object Round14c {
+object Round14c extends GateBatch {
 
   /** Canonical column names only — the writer emits them, the reader's
     * header scan finds them at row 0 (they ARE candidates). */

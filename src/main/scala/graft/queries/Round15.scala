@@ -30,7 +30,7 @@ import graft.sinks.XlsWriter
   *    |rank(est) − p| against the exact per-key distribution, with the
   *    ε(K) bound stated where the sketch is defined.
   */
-object Round15 {
+object Round15 extends GateBatch {
 
   private val ShuffleSeed = "s15-sink"
   private val SinkShards = 8

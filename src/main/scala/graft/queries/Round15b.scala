@@ -12,7 +12,7 @@ import graft.operators.Labeling
   * raters (l_linenumber), return flag as the label — orders carry 1–7
   * ratings, so the alpha gate exercises the pairable-unit filter and
   * several rater-count classes at once. */
-object Round15b {
+object Round15b extends GateBatch {
 
   private def ratings(s: org.apache.spark.sql.SparkSession, dir: String) =
     tbl(s, dir, "lineitem")

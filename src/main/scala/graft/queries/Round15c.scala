@@ -9,7 +9,7 @@ import graft.textanalysis.TextAnalysis
   * quality-argmax exact dedup (keep the BEST copy, not the first) and
   * the vocabulary-growth (Heaps-law) curve along a seeded shuffle
   * order, computed without any global sort. */
-object Round15c {
+object Round15c extends GateBatch {
 
   private val VocabSeed = "s15-vocab"
   private[graft] val VocabPcts = Seq(0.01, 0.05, 0.1, 0.25, 0.5, 1.0)

@@ -12,7 +12,7 @@ import graft.sinks.XlsWriter
   * second pass over the round-15b panel suite), and the source-mixture
   * sampling plan (targets + epochs from weights and a token budget —
   * the arithmetic stage ahead of the executing samplers). */
-object Round15d {
+object Round15d extends GateBatch {
 
   private val MixWeights = Seq("en" -> 0.4, "es" -> 0.2, "fr" -> 0.2,
     "de" -> 0.1, "code" -> 0.1) // 'code' absent from the corpus;

@@ -14,7 +14,7 @@ import graft.similarity.Similarity
   * IVF index maintenance (append new vectors to frozen centroids +
   * per-cell drift), and the F17 es-PE currency display format as an
   * oracle gate (ref `index.html:104-106`). */
-object Round16 {
+object Round16 extends GateBatch {
 
   /** dedup_image_phash family size: docs sharing `doc_id / 5` render
     * near-identical images, so pairs scale linearly with the corpus. */

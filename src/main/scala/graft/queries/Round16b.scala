@@ -10,7 +10,7 @@ import graft.multimodal.Multimodal
   * sequence-decode tier, audio near-dup by energy-sign fingerprints
   * over the REAL RIFF/WAVE decode tier, and duplicate-count sampling
   * weights (the keep-everything alternative to dropping exact dups). */
-object Round16b {
+object Round16b extends GateBatch {
 
   private[graft] val VideoClusterSize = 5
   private[graft] val VideoMaxHamming = 8

@@ -10,7 +10,7 @@ import graft.operators.DatasetSplit
   * impossible, residual near-dup leakage AUDITED per split) and the
   * streaming claim-store twin over the image dHash tier (the image
   * sibling of `stream_neardup_keep`). */
-object Round16c {
+object Round16c extends GateBatch {
 
   private[graft] val SplitTrainPct = 80
   private[graft] val SplitValPct = 10

@@ -11,7 +11,7 @@ import graft.operators.DatasetSplit
   * per-(split, language) doc/token budget with duplication-corrected
   * (weighted) totals. All cross-row accumulation is INTEGER (ppm-scaled
   * weights), so the composed result replays bit-for-bit in DuckDB. */
-object Round16d {
+object Round16d extends GateBatch {
 
   val defs: Map[String, Q] = Map(
 

@@ -12,7 +12,7 @@ import graft.textanalysis.PerplexityBuckets
   * weights, and CCNet head/middle/tail perplexity triage per language
   * (Wenzek et al. 2020). All cross-row accumulation is ppm/1e-4
   * fixed-point, so every gate replays exactly in DuckDB. */
-object Round16e {
+object Round16e extends GateBatch {
 
   /** Feature buckets for the hashed bag-of-words models. */
   private val DsirBuckets = 2048

@@ -12,7 +12,7 @@ import graft.textanalysis.{BpeTrain, TokenizerFertility}
   * and a k-anonymity/l-diversity privacy audit (what would a release
   * have to suppress?). Fixed-point longs everywhere a row count can
   * grow; every gate replays exactly in DuckDB. */
-object Round16f {
+object Round16f extends GateBatch {
 
   /** k-anonymity threshold for the privacy gate. */
   private val AnonK = 10L

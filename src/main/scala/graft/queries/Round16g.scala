@@ -11,7 +11,7 @@ import graft.textanalysis.{PerplexityBuckets, TextAnalysis}
   * pipeline_curation5: CCNet triage → drop the tail → refit DSIR on
   * the survivors → Gumbel top-k selection → per-(lang, bucket)
   * selection accounting, every stage exactly replayable. */
-object Round16g {
+object Round16g extends GateBatch {
 
   /** Difficulty bands for the curriculum gate. */
   private val CurriculumBands = 4

@@ -12,7 +12,7 @@ import graft.streaming.StreamingImportance
   * convention) and must land the IDENTICAL rows the one-shot
   * `sample_importance` gate lands, which is exactly what its oracle
   * re-asserts. */
-object Round16h {
+object Round16h extends GateBatch {
 
   private val Shards = 16
   private val K = 100

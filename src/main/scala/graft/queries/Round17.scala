@@ -12,7 +12,7 @@ import graft.textanalysis.{PerplexityBuckets, TextAnalysis}
   * array. The word-granularity siblings (`dedup_ngram_spans`,
   * `text_dup_spans`) catch repeated PHRASES; this catches the
   * byte-identical boilerplate runs that cross word boundaries. */
-object Round17 {
+object Round17 extends GateBatch {
 
   /** The paper's threshold: 50 characters. */
   private val SubstrMinLen = 50

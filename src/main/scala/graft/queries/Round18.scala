@@ -11,7 +11,7 @@ import graft.textanalysis.TextAnalysis
   * diet for the round-17 gram chain), JPEG corruption tolerance, and
   * the composed curation capstone (exact-substr cut → near-dup →
   * importance selection — the Lee et al. 2107.06499 pipeline order). */
-object Round18 {
+object Round18 extends GateBatch {
 
   /** The paper's threshold: 50 characters (same as round 17). */
   private val SubstrMinLen = 50

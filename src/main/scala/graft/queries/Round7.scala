@@ -10,7 +10,7 @@ import graft.textanalysis.TextAnalysis
   * semantic dedup, BM25 retrieval scoring, the stream-stream interval
   * join's batch twin, GROUPING SETS, and one-pass table profiling.
   */
-object Round7 {
+object Round7 extends GateBatch {
 
   /** BM25 query bag for the `text_bm25` gate — terms that occur in the
     * synthetic corpus. BOTH the Spark query and the DuckDB oracle derive

@@ -10,7 +10,7 @@ import graft.textanalysis.BpeTrain
   * iterated leftmost replace is exactly the greedy left-to-right fold
   * the Spark side runs; equivalence asserted in BpeTrainSpec).
   */
-object Round9 {
+object Round9 extends GateBatch {
   type Q = (org.apache.spark.sql.SparkSession, String) =>
     org.apache.spark.sql.DataFrame
 

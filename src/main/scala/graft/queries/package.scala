@@ -6,6 +6,13 @@ package object queries {
   /** A query over a testdata scale-factor directory. */
   type Q = (SparkSession, String) => DataFrame
 
+  /** One batch of gates: each key in `defs` is a gate, and `oracles`
+    * holds the DuckDB SQL for the keys that have one. */
+  trait GateBatch {
+    def defs: Map[String, Q]
+    def oracles: Map[String, String]
+  }
+
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Older testdata drops carry events.ts as parquet TIMESTAMP(NANOS),
     // which Spark only reads via the legacy long mapping (ns since

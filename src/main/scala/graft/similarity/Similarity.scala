@@ -298,7 +298,8 @@ object Similarity {
     * first-band dedup, pre cosine verify) — the scale diagnostic:
     * candidate count should grow ~linearly in corpus size under a
     * [[signBandPlanFor]]-scaled plan, and stay INVARIANT under exact
-    * replication (digest collapse). Measured by `tools.ScaleRehearsal`. */
+    * replication (digest collapse), as a 10x-replicated rehearsal
+    * corpus measured. */
   def cosineCandidates(corpus: DataFrame, idCol: String, vecCol: String,
                        bandDims: Seq[Seq[Int]]): DataFrame = {
     val (_, reps) = vecReps(corpus, idCol, vecCol, bandDims)

@@ -254,8 +254,9 @@ object TextAnalysis {
     * (round 18): the spread is a full corpus shuffle, so it only runs
     * when the scan actually arrives narrower than the cluster — at the
     * 100 TB target the scan is already thousands of splits and this
-    * shuffle would be the chain's single biggest cost (ScaleRehearsal5
-    * measured it at ~60% of the minimized chain's remaining bytes). */
+    * shuffle would be the chain's single biggest cost (a scale
+    * rehearsal measured it at ~60% of the minimized chain's remaining
+    * bytes). */
   private def substrBase(df: org.apache.spark.sql.DataFrame, idCol: String,
                          textCol: String): org.apache.spark.sql.DataFrame = {
     val slim = df.where(col(textCol).isNotNull)
@@ -453,10 +454,10 @@ object TextAnalysis {
   }
 
   /** Corpus byte threshold above which [[exactSubstrDedupAuto]] picks
-    * the minimized chain. ScaleRehearsal5 measured the crossover at
-    * ~100k ~1 kB docs (~100 MB of raw text): below it the minimizer
-    * pass plus candidate join cost more than the gram-shuffle bytes
-    * they save; above it the cut compounds (2.9-5.6x at the 1M-doc
+    * the minimized chain. A 10k-1M-doc rehearsal ladder measured the
+    * crossover at ~100k ~1 kB docs (~100 MB of raw text): below it the
+    * minimizer pass plus candidate join cost more than the gram-shuffle
+    * bytes they save; above it the cut compounds (2.9-5.6x at the 1M-doc
     * leg). 100 MB of synthetic-ish text lands near 32 MB of
     * parquet-compressed leaf bytes — the statistic the free probe
     * reads — so that is the default pivot. */

@@ -57,7 +57,7 @@ object ScaleRehearsal6 {
       (pmod(xxhash64(col("id"), lit(7L)), lit(10000L)) * 2 + 1).as("b"))
 
   /** 50k ~1 kB docs, every other one carrying a shared 72-char block
-    * (the ScaleRehearsal5 duplication corpus at half density). */
+    * (the ExactSubstr rehearsal's duplication corpus at half density). */
   private def docs(spark: SparkSession, n: Long): DataFrame = {
     val boiler = (1 to 8).map(i => s"BOILER$i..").mkString
     spark.range(n).select(col("id").as("doc_id"),

@@ -78,6 +78,24 @@ class Round20Spec extends SparkTestBase {
     }
   }
 
+  test("a malformed spark.graft.pin.aboveBytes fails naming the key " +
+    "and the value") {
+    val key = "spark.graft.pin.aboveBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "32MB")
+    try {
+      // a file leaf and a leaf with no byte statistic alike
+      Seq(spark.read.parquet(s"$sf/documents.parquet"),
+        spark.range(10).toDF("id")).foreach { df =>
+        val e = intercept[IllegalArgumentException] {
+          Checkpoints.pinIfLarge(df, None)
+        }
+        assert(e.getMessage.contains(key) && e.getMessage.contains("'32MB'"),
+          e.getMessage)
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("pinIfLarge treats unknown leaf bytes as large (scale-safe " +
     "default) and reads persisted-block bytes for pinned parents") {
     import spark.implicits._
