@@ -98,16 +98,17 @@ object Demo {
       val cur = graft.pipeline.Curation.run(docs, "doc_id", "text",
         graft.pipeline.Curation.Config(languages = Seq("en", "es", "und"),
           minQuality = 0.3))
-      val curated = cur.curated.persist() // written AND aggregated below
+      // written AND aggregated below
+      val curated = graft.operators.Checkpoints.pin(cur.curated)
       try {
         curated.select("doc_id", "lang", "quality", "n_tokens", "text")
           .write.mode("overwrite").partitionBy("lang")
           .parquet(s"$outDir/curated_corpus")
         println(s"[demo] curation stats (${docs.count()} docs in):")
-        // stats from the PERSISTED frame: cur.stats was planned before
-        // persist() and would recompute the whole curation pipeline
+        // stats from the PINNED frame: cur.stats was planned before
+        // the pin and would recompute the whole curation pipeline
         graft.pipeline.Curation.statsOf(curated).show(truncate = false)
-      } finally curated.unpersist()
+      } finally graft.operators.Checkpoints.release(curated)
     } else println(s"[demo] no corpus at $docsPath — curation drive skipped")
 
     println(s"[demo] resumen:")

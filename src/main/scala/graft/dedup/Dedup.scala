@@ -356,7 +356,7 @@ object Dedup {
     *              id as `component_id` (they form singleton groups)
     * @param checkpointDir when set, per-round lineage truncation uses
     *              RELIABLE `checkpoint()` into this directory (HDFS/object
-    *              store on a real cluster) instead of `localCheckpoint()`.
+    *              store on a real cluster) instead of the session default.
     *              Local checkpoints live on executor disk: an executor
     *              loss mid-fixpoint kills the job, because the truncated
     *              lineage cannot recompute the lost blocks. At 100 TB run
@@ -368,8 +368,10 @@ object Dedup {
                           maxIters: Int = 25,
                           checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    def truncate(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pin(df, checkpointDir)
+    // the per-round label pins: each releases the superseded round's
+    // blocks once the new round is materialized, so the fixpoint holds
+    // one round of blocks, never the p0/edges blocks every round reads
+    val roll = new graft.operators.Checkpoints.Rolling(checkpointDir)
     // materialize the DIRECTED pair list first: the undirected edge
     // union references it twice, and truncating only after the union
     // would run the (expensive) pair generation once per direction.
@@ -378,11 +380,11 @@ object Dedup {
     // implicitly every round, and the message-union round below must
     // not resurrect them as phantom components
     val nodeIds = nodes.select(col(idCol).cast("long").as("u"))
-    val p0 = truncate(pairs.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
+    val p0 = graft.operators.Checkpoints.pin(pairs
+      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .join(nodeIds, Seq("u"), "left_semi")
       .join(nodeIds.select(col("u").as("v")), Seq("v"), "left_semi")
-      .select("u", "v"))
+      .select("u", "v"), checkpointDir)
     // both orientations, pinned PARTITIONED BY `v` when large (round
     // 20, guide §2.4): every fixpoint round's neighbor join probes the
     // union on v, and the checkpoint preserves the partitioning — one
@@ -394,7 +396,7 @@ object Dedup {
       p0.unionAll(
         p0.select(col("v").as("u"), col("u").as("v"))),
       col("v"), checkpointDir)
-    var labels = truncate(nodes.select(col(idCol).cast("long").as("u"),
+    var labels = roll(nodes.select(col(idCol).cast("long").as("u"),
       col(idCol).cast("long").as("lbl")))
     // Convergence rides the SUM of labels (exact decimal — no Long
     // overflow over corpus-sized id sums): every update strictly
@@ -440,20 +442,12 @@ object Dedup {
       val j4 = j2
         .join(j2.select(col("u").as("l2"), col("l2").as("l4")), Seq("l2"))
         .select(col("u"), col("l4").as("lbl"))
-      val next = truncate(
+      labels = roll(
         labels.unionAll(nbr).unionAll(j4)
           .groupBy("u").agg(min("lbl").as("lbl")))
-      val newSum = labelSum(next)
+      val newSum = labelSum(labels)
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
-      // `next` is materialized (eager pin + the sum scan) — the
-      // superseded round's label blocks are dead from here; release
-      // them so the fixpoint holds one round of blocks, not O(rounds)
-      // (round-20 storage hygiene). `labels` is always a pin result
-      // (one LogicalRDD leaf of its own), so this never touches the
-      // p0/edges blocks every round still reads.
-      graft.operators.Checkpoints.release(labels)
-      labels = next
       i += 1
     }
     require(converged,

@@ -21,12 +21,12 @@ import graft.operators.Checkpoints
   * never changes the result). Output: the surviving nodes with their
   * in-core degree.
   *
-  * Scale shape: lineage truncates at each materialization via
-  * [[graft.operators.Checkpoints.pin]]: reliable `checkpoint(dir)` on
-  * a cluster when `checkpointDir` is set (the
+  * Scale shape: lineage truncates at each materialization via a
+  * [[graft.operators.Checkpoints.Rolling]] pin: reliable
+  * `checkpoint(dir)` on a cluster when `checkpointDir` is set (the
   * `Dedup.connectedComponents`/`PageRank` durability contract — a
-  * corpus-sized `localCheckpoint` block has no lineage to survive
-  * executor loss), `localCheckpoint` in dev.
+  * corpus-sized local checkpoint block has no lineage to survive
+  * executor loss), the session default otherwise.
   *
   * `fuse` chains that many peel rounds LAZILY between
   * materializations, trading one pin+count job pair per extra round
@@ -49,11 +49,13 @@ object KCore {
     require(fuse >= 1, s"fuse must be >= 1, got $fuse")
     val e = edges.where(col(aCol).isNotNull && col(bCol).isNotNull &&
       col(aCol) =!= col(bCol))
-    var und = Checkpoints.pin(
+    // each block's pin releases the superseded round's blocks, so a
+    // long peel (and a long-lived session) holds one round's blocks
+    val roll = new Checkpoints.Rolling(checkpointDir)
+    var und = roll(
       e.select(col(aCol).as("u"), col(bCol).as("v"))
         .union(e.select(col(bCol).as("u"), col(aCol).as("v")))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     var r = 0
     var done = false
     // ONE count action per materialized block: the previous block's
@@ -82,15 +84,8 @@ object KCore {
           .select("u", "v")
         i += 1
       }
-      val prev = und
-      und = Checkpoints.pin(block, checkpointDir)
+      und = roll(block)
       val after = und.count()
-      // the new block is materialized — the superseded round's pinned
-      // blocks are dead weight from here on; release them so a long
-      // peel (and a long-lived session) holds at most one round's
-      // blocks instead of accumulating every round's (round-20 storage
-      // hygiene; no-op for reliable-checkpoint frames)
-      Checkpoints.release(prev)
       done = after == prevCount
       prevCount = after
       r += steps

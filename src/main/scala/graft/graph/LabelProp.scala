@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
+
 /** Synchronous label propagation (LPA) — community detection over an
   * edge list, the third iterative graph operator next to [[PageRank]]
   * and `dedup.Dedup.connectedComponents`: near-duplicate clusters,
@@ -41,8 +43,6 @@ object LabelProp {
             rounds: Int, checkpointEvery: Int = 0,
             checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def truncate(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pin(df, checkpointDir)
     val dir = edges
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
@@ -50,28 +50,23 @@ object LabelProp {
         col("a") =!= col("b"))
       .where(assert_true(col("a") >= 0 && col("b") >= 0,
         lit("LabelProp needs non-negative node ids")).isNull)
-    // undirected: both orientations, deduped. Pinned CONDITIONALLY
-    // (round 20): `und` feeds the node projection plus every round's
-    // neighbor join, and `nodes` every round's rebuild — exchange
-    // reuse does not recover those recomputes. But the round-19
-    // unconditional pins here were the driver's clearest in-suite
-    // regression (graph_label_prop 0.78x): on a small graph the two
-    // eager pin jobs outprice the re-scans they save. pinIfLarge keeps
-    // the pins exactly when the input bytes say recompute wins.
-    def invariant(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pinIfLarge(df, checkpointDir)
-    // `und` pins PARTITIONED BY `b` when large (round 20, guide §2.4):
+    // undirected: both orientations, deduped. `und` (every round's
+    // neighbor join) and `nodes` (every round's rebuild) pin only when
+    // LARGE (round 20): on a small graph the round-19 unconditional
+    // pins outpriced the re-scans they save (graph_label_prop 0.78x).
+    // `und` pins PARTITIONED BY `b` (round 20, guide §2.4):
     // every round's neighbor join probes it on b, and the checkpoint
     // preserves the partitioning — one exchange at pin time instead of
     // one per round once labels outgrow a broadcast.
-    val und = graft.operators.Checkpoints.pinIfLargeKeyed(
+    val und = Checkpoints.pinIfLargeKeyed(
       dir.union(dir.select(col("b").as("a"), col("a").as("b")))
         .distinct(), col("b"), checkpointDir)
-    val nodes = invariant(und.select(col("a").as("node")).distinct())
+    val nodes = Checkpoints.pinIfLarge(
+      und.select(col("a").as("node")).distinct(), checkpointDir)
+    // one round of label blocks live at a time, never und/nodes
+    val truncate = new Checkpoints.Rolling(checkpointDir)
     var labels = nodes.withColumn("label", col("node"))
-    var it = 0
-    var lastPinned: Option[DataFrame] = None
-    for (_ <- 1 to rounds) {
+    for (it <- 1 to rounds) {
       val adopted = und
         .join(labels, col("b") === col("node"))
         .groupBy(col("a"), col("label"))
@@ -84,16 +79,9 @@ object LabelProp {
       labels = nodes.join(adopted, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("label"), col("node")).as("label"))
-      it += 1
       if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < rounds) {
+        it < rounds)
         labels = truncate(labels)
-        // release the superseded pinned label frame — one round of
-        // blocks live at a time, never the shared und/nodes pins
-        // (round-20 storage hygiene)
-        lastPinned.foreach(graft.operators.Checkpoints.release)
-        lastPinned = Some(labels)
-      }
     }
     labels
   }

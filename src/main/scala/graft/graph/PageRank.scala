@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Checkpoints
 
 /** Fixed-iteration PageRank over an edge list — the second iterative
   * graph operator next to `dedup.Dedup.connectedComponents` (influence
@@ -29,74 +31,23 @@ import org.apache.spark.sql.functions._
   * differences instead of masking them.
   */
 object PageRank {
-  /** `checkpointEvery > 0` truncates the rank frame's lineage every
+  /** Global PageRank: [[personalized]]'s recurrence with a UNIFORM
+    * restart of 1 per node, so rank₀ = 1 and each iteration applies
+    * (1−d) + d·Σ contributions (`(1−d)·1.0` folds to the same double).
+    *
+    * `checkpointEvery > 0` truncates the rank frame's lineage every
     * that-many iterations — REQUIRED for long runs, where the unrolled
     * plan otherwise grows linearly in iterations and re-plans from the
     * root. `checkpointDir` selects the reliable `checkpoint(dir)`
     * (survives executor loss on a cluster, like
-    * `Dedup.connectedComponents`); absent, `localCheckpoint` (dev). */
+    * `Dedup.connectedComponents`); absent, the session default
+    * ([[graft.operators.Checkpoints]]). */
   def apply(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int, damping: Double = 0.85,
             checkpointEvery: Int = 0,
-            checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    def truncate(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pin(df, checkpointDir)
-    // pin the loop-invariant frames CONDITIONALLY (round 20): the
-    // deduped edge list feeds FOUR readers (both node projections, the
-    // degree count, the degree join) and `nodes`/`withDeg` feed every
-    // unrolled iteration — exchange reuse does not recover the
-    // recomputes across the differently-keyed consumers. But each
-    // eager pin is a full extra job, and the round-19 unconditional
-    // pins cost more than the re-scans they save on small graphs (the
-    // driver's in-suite runs priced graph_label_prop at 0.78x, ppr
-    // 0.85x); pinIfLarge pins exactly when the input bytes say the
-    // recompute is the bigger number (100 TB direction preserved, the
-    // small-input plan back to its unpinned shape).
-    def invariant(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pinIfLarge(df, checkpointDir)
-    val e = invariant(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .distinct())
-    val nodes = invariant(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    // pinned PARTITIONED BY `src` (round 20, guide §2.4): every
-    // iteration's contribution join probes withDeg on src, and the
-    // checkpoint preserves the partitioning — one exchange at pin time
-    // instead of one per iteration (ScaleRehearsal6: 3-iteration
-    // recurrence at 1.5M edges 5.6 → 3.5 s)
-    val withDeg = graft.operators.Checkpoints.pinIfLargeKeyed(
-      e.join(outDeg, "src"), col("src"), checkpointDir)
-    var ranks = nodes.withColumn("rank", lit(1.0))
-    var it = 0
-    var lastPinned: Option[DataFrame] = None
-    for (_ <- 1 to iterations) {
-      val contrib = withDeg
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), (col("rank") / col("out_deg")).as("c"))
-        .groupBy("dst").agg(sum("c").as("in_sum"))
-      ranks = nodes
-        .join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      it += 1
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < iterations) {
-        ranks = truncate(ranks)
-        // the new pin is materialized — the superseded rank blocks are
-        // dead; release exactly the previous PINNED frame (its plan is
-        // one LogicalRDD of its own), never the shared invariants
-        // (round-20 storage hygiene)
-        lastPinned.foreach(graft.operators.Checkpoints.release)
-        lastPinned = Some(ranks)
-      }
-    }
-    ranks.select(col("node"), round(col("rank"), 6).as("rank"))
-  }
+            checkpointDir: Option[String] = None): DataFrame =
+    recurrence(edges, srcCol, dstCol, lit(1.0), iterations, damping,
+      checkpointEvery, checkpointDir)
 
   /** Personalized PageRank — the random walk restarts INTO the source
     * set instead of uniformly ("what's near these seed entities"):
@@ -104,39 +55,53 @@ object PageRank {
     * and each iteration applies (1−d)·restart + d·Σ contributions.
     * Nodes unreachable from the sources stay at exactly 0, which is
     * the point — PPR scores locality, global PageRank scores
-    * prominence. Same per-iteration shape and lineage-truncation
-    * contract as [[apply]]; the oracle unrolls the same recurrence
-    * with the restart CASE inlined. */
+    * prominence. Same lineage-truncation contract as [[apply]]; the
+    * oracle unrolls the same recurrence with the restart CASE
+    * inlined. */
   def personalized(edges: DataFrame, srcCol: String, dstCol: String,
                    sources: Seq[String], iterations: Int,
                    damping: Double = 0.85,
                    checkpointEvery: Int = 0,
                    checkpointDir: Option[String] = None): DataFrame = {
+    require(sources.nonEmpty, "personalized PageRank needs >= 1 source")
+    val mass = 1.0 / sources.size // same double the oracle inlines
+    recurrence(edges, srcCol, dstCol,
+      when(col("node").isin(sources: _*), lit(mass)).otherwise(lit(0.0)),
+      iterations, damping, checkpointEvery, checkpointDir)
+  }
+
+  /** The one rank recurrence: rank₀ = `restart`, then per iteration
+    * (1−d)·restart + d·Σ contributions, `restart` a column over
+    * `node`. */
+  private def recurrence(edges: DataFrame, srcCol: String, dstCol: String,
+                         restart: Column, iterations: Int, damping: Double,
+                         checkpointEvery: Int,
+                         checkpointDir: Option[String]): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    require(sources.nonEmpty, "personalized PageRank needs >= 1 source")
-    def truncate(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pin(df, checkpointDir)
-    // same CONDITIONAL loop-invariant pins as [[apply]] (round 20)
-    def invariant(df: DataFrame): DataFrame =
-      graft.operators.Checkpoints.pinIfLarge(df, checkpointDir)
-    val e = invariant(
+    // the loop invariants pin only when LARGE (round 20): the deduped
+    // edge list feeds four differently-keyed readers and `nodes`/
+    // `withDeg` every unrolled iteration, but on small graphs the eager
+    // pin jobs cost more than the re-scans they save (round-19
+    // unconditional pins priced graph_ppr at 0.85x)
+    val e = Checkpoints.pinIfLarge(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .distinct())
-    val nodes = invariant(
+        .distinct(), checkpointDir)
+    val nodes = Checkpoints.pinIfLarge(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-    val mass = 1.0 / sources.size // same double the oracle inlines
-    val restart = when(col("node").isin(sources: _*), lit(mass))
-      .otherwise(lit(0.0))
+        .union(e.select(col("dst").as("node"))).distinct(), checkpointDir)
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    // same src-partitioned pin as [[apply]] (round 20)
-    val withDeg = graft.operators.Checkpoints.pinIfLargeKeyed(
+    // pinned PARTITIONED BY `src` (round 20, guide §2.4): every
+    // iteration's contribution join probes withDeg on src, and the
+    // checkpoint preserves the partitioning — one exchange at pin time
+    // instead of one per iteration (ScaleRehearsal6: 3-iteration
+    // recurrence at 1.5M edges 5.6 → 3.5 s)
+    val withDeg = Checkpoints.pinIfLargeKeyed(
       e.join(outDeg, "src"), col("src"), checkpointDir)
+    // one round of rank blocks live at a time, never the invariants
+    val truncate = new Checkpoints.Rolling(checkpointDir)
     var ranks = nodes.withColumn("rank", restart)
-    var it = 0
-    var lastPinned: Option[DataFrame] = None
-    for (_ <- 1 to iterations) {
+    for (it <- 1 to iterations) {
       val contrib = withDeg
         .join(ranks, col("src") === col("node"))
         .select(col("dst"), (col("rank") / col("out_deg")).as("c"))
@@ -146,14 +111,9 @@ object PageRank {
         .select(col("node"),
           (lit(1.0 - damping) * restart +
             lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-      it += 1
       if (checkpointEvery > 0 && it % checkpointEvery == 0 &&
-        it < iterations) {
+        it < iterations)
         ranks = truncate(ranks)
-        // release the superseded pinned rank frame (see [[apply]])
-        lastPinned.foreach(graft.operators.Checkpoints.release)
-        lastPinned = Some(ranks)
-      }
     }
     ranks.select(col("node"), round(col("rank"), 6).as("rank"))
   }

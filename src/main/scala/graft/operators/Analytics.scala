@@ -1135,7 +1135,7 @@ object Analytics {
       import scala.jdk.CollectionConverters._
       (nn.sparkSession.createDataFrame(head.toSeq.asJava, aggDf.schema),
         true)
-    } else (aggDf.localCheckpoint(), false)
+    } else (Checkpoints.pin(aggDf), false)
   }
 
   /** Per-group [[qsketchRangeBuckets]]: equi-depth range bucketing

@@ -2,62 +2,49 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** The one lineage-truncation dual every iterative / multi-scan
-  * operator shares: RELIABLE `checkpoint()` into an HDFS/object-store
-  * directory when the caller supplies one (survives executor loss — at
-  * the 100 TB target a corpus-sized `localCheckpoint` block has no
-  * lineage to recover it, so one lost executor kills the job), and
-  * `localCheckpoint()` when it doesn't (dev/local — no disk
-  * round-trip). Both are EAGER, so a pinned frame costs exactly one
-  * job and every downstream scan replays the materialized blocks.
+/** The one place the engine materializes a frame, with one entry
+  * point per pin kind: [[pin]] (unconditional), [[pinIfLarge]] (only
+  * when the input outprices the pin job), [[pinIfLargeKeyed]] (the
+  * same, hash-partitioned by a loop key) and [[Rolling]] (the
+  * per-round pin of an iterative loop, holding one round's blocks).
   *
-  * The session checkpoint directory is GLOBAL state
-  * (`SparkContext.setCheckpointDir`), so this helper only sets it when
-  * none is configured yet: a caller-supplied dir must not silently
-  * clobber a directory the application (or an enclosing operator on
-  * the same session) already configured — when one is set, it wins and
-  * the reliable checkpoint lands there.
+  * Each takes `checkpointDir: Option[String] = None`. `None` is the
+  * SESSION DEFAULT: reliable `checkpoint()` when the session has a
+  * checkpoint dir (`sc.setCheckpointDir`, set once by a production
+  * application), else `localCheckpoint()` (dev/local, no disk
+  * round-trip). `Some(dir)` asks for a reliable `checkpoint()` into
+  * `dir`; the checkpoint dir is GLOBAL `SparkContext` state, so a dir
+  * the session already has wins, and otherwise `dir` is set only while
+  * this pin runs — an operator argument never becomes the default of
+  * every later pin in the session. Reliable checkpoints survive
+  * executor loss: at the 100 TB target a corpus-sized local block has
+  * no lineage to recover it. Both kinds are EAGER, so a pinned frame
+  * costs exactly one job at call time (explain-only workflows pay real
+  * execution) and every downstream scan replays the materialized
+  * blocks.
   *
-  * LIFECYCLE NOTES for long-lived sessions (round-19 advisory):
-  *   - a pin is EAGER — operator construction executes the upstream
-  *     stages at call time (explain-only workflows pay real execution);
-  *   - reliable-checkpoint FILES are never deleted by default — a
-  *     production session should set
-  *     `spark.cleaner.referenceTracking.cleanCheckpoints=true` so
-  *     checkpoint data of GC'd RDDs is removed, or manage the dir's
-  *     retention externally;
-  *   - `localCheckpoint` BLOCKS are freed by the ContextCleaner once
-  *     the pinned frame becomes unreachable on the driver; iterative
-  *     loops that supersede pins every round release them promptly via
-  *     [[release]] instead of waiting for a driver GC.
+  * Lifecycle in long-lived sessions: reliable-checkpoint FILES are
+  * never deleted by default (set
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, or manage
+  * the dir's retention externally); local BLOCKS are freed by the
+  * ContextCleaner once the pinned frame is unreachable on the driver,
+  * and at once for each superseded round of a [[Rolling]] pin.
   */
 object Checkpoints {
 
-  /** Pin `df` eagerly: reliable `checkpoint()` when `checkpointDir` is
-    * set (or the session already has a checkpoint dir), else
+  /** Pin `df` eagerly: reliable `checkpoint()` when the session has a
+    * checkpoint dir or `checkpointDir` names one, else
     * `localCheckpoint()`. */
-  def pin(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
+  def pin(df: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isDefined) df.checkpoint()
+    else checkpointDir match {
       case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
+        sc.setCheckpointDir(dir)
+        try df.checkpoint() finally sc.setCheckpointDir(null)
       case None => df.localCheckpoint()
     }
-
-  /** SESSION-DEFAULT pin (round 19): reliable `checkpoint()` when the
-    * session already has a checkpoint directory configured, else
-    * `localCheckpoint()`. Query-composition glue (the capstone
-    * pipelines, shared edge lists, cleaned-corpus pins) pins through
-    * this so a production session that calls `sc.setCheckpointDir(...)`
-    * ONCE gets durable pins in every composed pipeline, without
-    * threading a dir parameter through each query definition — the
-    * operator-level overload above remains for callers that manage the
-    * dir explicitly. */
-  def pin(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else df.localCheckpoint()
+  }
 
   /** Input-bytes threshold above which [[pinIfLarge]] actually pins.
     * An eager pin is one full extra JOB (scheduling + block
@@ -104,13 +91,9 @@ object Checkpoints {
     * where recompute is cheaper than materialization. Sites whose
     * recompute is NOT scan-priced (an exploded gram stream, a digest
     * pass) keep the unconditional [[pin]]. */
-  def pinIfLarge(df: DataFrame, checkpointDir: Option[String]): DataFrame =
+  def pinIfLarge(df: DataFrame,
+                 checkpointDir: Option[String] = None): DataFrame =
     if (isLarge(df)) pin(df, checkpointDir) else df
-
-  /** Session-default `pinIfLarge` (the one-arg `pin`'s conditional
-    * twin). */
-  def pinIfLarge(df: DataFrame): DataFrame =
-    if (isLarge(df)) pin(df) else df
 
   /** [[pinIfLarge]] with the pinned frame HASH-PARTITIONED by `key`
     * first — for loop-invariant frames an unrolled iteration re-joins
@@ -124,25 +107,46 @@ object Checkpoints {
     * exchange only pays for itself when the per-iteration joins
     * actually shuffle. */
   def pinIfLargeKeyed(df: DataFrame, key: org.apache.spark.sql.Column,
-                      checkpointDir: Option[String]): DataFrame =
+                      checkpointDir: Option[String] = None): DataFrame =
     if (isLarge(df)) pin(df.repartition(key), checkpointDir) else df
 
-  /** Release the storage blocks behind a previously [[pin]]ned frame —
-    * the iterative-loop hygiene the round-19 verdict asked for: a peel
-    * / fixpoint loop pins a NEW frame every round and the superseded
-    * rounds' blocks otherwise accumulate until driver GC notices
-    * (unbounded by design over a long session). Walks the frame's
-    * logical plan for the `LogicalRDD` leaves a checkpoint produces
-    * and unpersists their RDDs (no-op for frames that were never
-    * pinned or already released; blocking=false — the loop must not
-    * stall on block removal). Reliable-checkpoint FILES are not
-    * deleted — only `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * governs those; this releases the block-manager copies.
+  /** A ROLLING PIN for an iterative loop that pins a new frame every
+    * round (a fixpoint, a peel, a merge step). Each call pins the new
+    * frame first and only then releases the roll's previous pin, so the
+    * loop holds one round's blocks instead of accumulating every
+    * round's until a driver GC notices. Only frames this roll pinned
+    * are ever released — never a loop invariant the rounds still read;
+    * the caller must not keep a frame over a superseded round alive. */
+  final class Rolling(checkpointDir: Option[String] = None) {
+    private var last: Option[DataFrame] = None
+
+    /** Pin `df`, then release the previous pin of this roll. */
+    def apply(df: DataFrame): DataFrame = {
+      val next = pin(df, checkpointDir)
+      close()
+      last = Some(next)
+      next
+    }
+
+    /** Release the current pin (for loops whose result does not read
+      * it). */
+    def close(): Unit = { last.foreach(release); last = None }
+  }
+
+  /** Release the storage blocks behind a previously [[pin]]ned frame.
+    * Walks the frame's logical plan for the `LogicalRDD` leaves a
+    * checkpoint produces and unpersists their RDDs (no-op for frames
+    * that were never pinned or already released; blocking=false — a
+    * loop must not stall on block removal). Reliable-checkpoint FILES
+    * are not deleted — only
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` governs those;
+    * this releases the block-manager copies.
     *
     * No live frame may still reference the released pin: an action on
     * such a frame afterwards fails for a `localCheckpoint` pin, whose
-    * blocks have no lineage to recompute them from. */
-  def release(df: DataFrame): Unit =
+    * blocks have no lineage to recompute them from. Loops release
+    * through [[Rolling]], which keeps that precondition. */
+  private[graft] def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false); ()

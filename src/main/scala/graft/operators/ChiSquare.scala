@@ -30,7 +30,7 @@ object ChiSquare {
         bCol.cast("string").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull)
       .groupBy("a", "b").agg(count(lit(1)).as("o"))
-      .localCheckpoint() // |A|·|B| rows; feeds margins + cells
+      .transform(d => Checkpoints.pin(d)) // |A|·|B| rows; feeds margins + cells
     val rowM = cells.groupBy("a").agg(sum("o").as("rown"))
     val colM = cells.groupBy("b").agg(sum("o").as("coln"))
     val tot = cells.agg(sum("o").as("n"))

@@ -26,11 +26,11 @@ object Curriculum {
 
   /** @param checkpointDir when set, the banded-frame pin uses RELIABLE
     *   `checkpoint()` into this directory (HDFS/object store on a real
-    *   cluster) — `localCheckpoint()` stores corpus-sized blocks on
+    *   cluster) — a local checkpoint stores corpus-sized blocks on
     *   executors with NO lineage to recover them, so at the 100 TB
     *   target a single lost executor kills the whole schedule job.
-    *   Unset (dev/local) falls back to localCheckpoint, which avoids
-    *   the disk round-trip. The same dual [[graft.dedup.Dedup
+    *   Unset, the pin takes the session default (a local checkpoint
+    *   in dev/local, which avoids the disk round-trip). The same dual [[graft.dedup.Dedup
     *   .connectedComponents]] exposes; a checkpoint dir the session
     *   already configured wins over this one
     *   ([[Checkpoints.pin]] never clobbers session-global state). */

@@ -30,7 +30,7 @@ object Kappa {
         labelB.cast("string").as("lb"))
       .where(col("la").isNotNull && col("lb").isNotNull)
       .groupBy("la", "lb").agg(count(lit(1)).as("o"))
-      .localCheckpoint() // |labels|² rows; feeds margins + diagonal
+      .transform(d => Checkpoints.pin(d)) // |labels|² rows; feeds margins + diagonal
     val rowM = cells.groupBy("la").agg(sum("o").as("rown"))
     val colM = cells.groupBy("lb").agg(sum("o").as("coln"))
     // Σ_k row_k·col_k over the shared label set: the margins join on
@@ -91,13 +91,13 @@ object Kappa {
         labelCol.cast("string").as("label"))
       .where(col("item").isNotNull && col("label").isNotNull)
       .groupBy("item", "label").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // ≤ |items|·|labels| rows; feeds items + margins
+      .transform(d => Checkpoints.pin(d)) // ≤ |items|·|labels| rows; feeds items + margins
     // constant-panel slice: keep items with exactly `raters` ratings
     val eligible = cells.groupBy("item")
       .agg(sum("c").as("tot"),
         sum(col("c") * col("c")).as("s2"))
       .where(col("tot") === raters.toLong)
-      .localCheckpoint() // one row per eligible item
+      .transform(d => Checkpoints.pin(d)) // one row per eligible item
     val tops = eligible.agg(
       count(lit(1)).as("n_items"),
       coalesce(sum(col("s2").cast("decimal(38,0)")),

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** The two-level distributed prefix sum over a VALUE-ordered domain —
   * the shape [[KsDrift]], [[RankNormalize]], and [[Auc]] all share
@@ -176,12 +176,20 @@ object LanedPrefix {
     // count jobs and two broadcast-build jobs disappear). Beyond the
     // cap the collected rows are discarded and the round-14
     // planner-free fallback runs unchanged: materialized sums frame,
-    // windowed offsets, un-hinted joins.
+    // windowed offsets, un-hinted joins. The driver groups the fetched
+    // rows by JVM equality of the key, so only atomic keys with value
+    // equality take the driver branch: a binary key (an `AtomicType`
+    // too) collects as `Array[Byte]`, which compares by reference and
+    // would make every row its own group; it takes the planner branch.
     val capN = math.min(LanedPrefix.broadcastRowCap,
       (Int.MaxValue - 2).toLong).toInt
-    val head = sumsDf.limit(capN + 1).collect()
+    val keyType = sumsDf.schema(groupCol).dataType
+    val driverKey = keyType != BinaryType &&
+      org.apache.spark.sql.graft.Shim.isAtomic(keyType)
+    val head =
+      if (driverKey) sumsDf.limit(capN + 1).collect() else Array.empty[Row]
     val spark = vals.sparkSession
-    if (head.length <= capN) {
+    if (driverKey && head.length <= capN) {
       val tTypes = sumCols.map(c => sumsDf.schema(s"__t_$c").dataType)
       val offSchema = StructType(sumsDf.schema(groupCol) +:
         sumsDf.schema("bucket") +:
@@ -225,7 +233,7 @@ object LanedPrefix {
       // left to the planner — no driver-sized structure anywhere.
       val wAcross = Window.partitionBy(groupCol).orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val sums = sumsDf.localCheckpoint()
+      val sums = Checkpoints.pin(sumsDf)
       val offsets = sumCols.foldLeft(sums) { (df, c) =>
         df.withColumn(s"__off_$c",
           coalesce(sum(s"__t_$c").over(wAcross), lit(0L)))

@@ -25,8 +25,8 @@ object Rag {
     * ordered by fused score.
     *
     * `materialize` intercepts the span-scrubbed corpus, which BOTH the
-    * BM25 list and the token-count join read: pass `_.localCheckpoint()`
-    * (or persist + count on a cluster) to scrub once instead of once
+    * BM25 list and the token-count join read: pass
+    * `graft.operators.Checkpoints.pin(_)` to scrub once instead of once
     * per reader. The default identity keeps the plan fully declarative
     * — two invocations then build `sameResult` plans, which the
     * `graft_rag` TVF contract relies on. */

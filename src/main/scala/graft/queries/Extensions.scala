@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
+import graft.operators.Checkpoints
 import graft.similarity.Similarity
 import graft.streaming.EventWindows
 import graft.textanalysis.TextAnalysis
@@ -25,102 +26,39 @@ object Extensions extends GateBatch {
   private[graft] val CosineBandDims: Seq[Seq[Int]] =
     graft.similarity.Similarity.signBandDims(bands = 4, bitsPerBand = 6, dim = 64)
 
-  /** The near-dup components result, computed ONCE per (session, SF
-    * dir) and shared by `dedup_components` and `dedup_component_sizes`:
-    * both gates profile the same graph, and the pointer-doubling
-    * iteration is the most expensive shared intermediate on the gate
-    * surface — the size-distribution gate is a two-aggregate derivation
-    * of the membership gate's result, not a reason to rerun the
-    * iteration. `localCheckpoint` materializes one row per document
-    * (bounded), so a verify/bench session pays the iteration once. */
-  private val frameCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        String, java.lang.ref.SoftReference[org.apache.spark.sql.DataFrame]]]())
-
-  /** Session-scoped shared-frame cache, keyed by the session OBJECT in
-    * a weak-keyed map (round-13 ADVICE: identity hash codes can collide
-    * across session lifetimes and a hash-keyed map never evicts; two
-    * live sessions can never alias). Values are held via SoftReference
-    * (round-14 ADVICE): a strongly-held DataFrame value reaches back to
-    * its own SparkSession (`Dataset.sparkSession`), i.e. the weak KEY,
-    * so the entry could never be collected and dead sessions — and the
-    * localCheckpoint RDDs their frames pin — leaked for the JVM
-    * lifetime. The soft indirection breaks that value→key chain: once
-    * nothing else references the session, the only path to it runs
-    * through softly-reachable frames, which the collector clears under
-    * memory pressure, letting the weak key (and the checkpoint RDDs,
-    * via Spark's ContextCleaner) go with them. Cost: a cleared entry
-    * rebuilds on next use — correct, just re-pays the sharing win.
-    * Gates that profile the SAME expensive intermediate (the near-dup
-    * pair graph, its components, the customer–supplier trade
-    * multigraph) compute it once per (session, SF dir) — the
-    * `dedup_components` sharing win from round 13 (3.3 s → 0.05 s),
-    * generalized per the round-13 verdict's ask for the graph family. */
-  private[queries] def cachedFrame(s: org.apache.spark.sql.SparkSession,
-      key: String)(build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val perSession = frameCache.synchronized {
-      var m = frameCache.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          String, java.lang.ref.SoftReference[org.apache.spark.sql.DataFrame]]()
-        frameCache.put(s, m)
-      }
-      m
-    }
-    // compute() re-checks the ref under the bin lock, so concurrent
-    // callers of the same key still build once (same contract the
-    // plain computeIfAbsent gave before the soft indirection)
-    var result: org.apache.spark.sql.DataFrame = null
-    perSession.compute(key, (_, old) => {
-      val cached = if (old != null) old.get() else null
-      if (cached != null) { result = cached; old }
-      else {
-        result = build
-        new java.lang.ref.SoftReference(result)
-      }
-    })
-    result
-  }
-
-  /** The windowed near-dup pair graph over `documents` — shared by
-    * `dedup_components`/`dedup_component_sizes` (via [[componentsFor]])
-    * and `graph_jaccard`. */
+  /** The windowed near-dup pair graph over `documents`, pinned — read
+    * by `dedup_components`/`dedup_component_sizes` (via
+    * [[componentsFor]]), `graph_jaccard` and `curate_split_leakage`.
+    * Each call builds and pins afresh: a gate is timed and answered
+    * from the tables as they are now, never from an earlier call. */
   private[queries] def neardupPairsFor(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    cachedFrame(s, s"neardup_pairs|$dir") {
+    Checkpoints.pin(
       Dedup.jaccardPairsWindowed(tbl(s, dir, "documents"), "doc_id",
           "text", window = 25, threshold = 0.8)
-        .select(col("id_a"), col("id_b"))
-        .transform(d => graft.operators.Checkpoints.pin(d))
-    }
+        .select(col("id_a"), col("id_b")))
 
+  /** The near-dup components (doc_id, component_id), pinned. */
   private def componentsFor(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
-    cachedFrame(s, s"components|$dir") {
-      val docs = tbl(s, dir, "documents")
+    Checkpoints.pin(
       Dedup.connectedComponents(neardupPairsFor(s, dir), "id_a", "id_b",
-          docs, "doc_id")
-        .transform(d => graft.operators.Checkpoints.pin(d))
-    }
+        tbl(s, dir, "documents"), "doc_id"))
 
   /** The customer–supplier trade MULTIGRAPH (one edge per lineitem —
     * multiplicity matters to PageRank out-degrees and label-prop
-    * votes), shared by `graph_pagerank`/`graph_ppr`/`graph_label_prop`
+    * votes), pinned, for `graph_pagerank`/`graph_ppr`/`graph_label_prop`
     * /`graph_kcore`, which each re-encode the same (cust, supp) pairs.
     * Columns: (cust LONG, supp LONG). */
   private[queries] def tradeEdgesFor(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    cachedFrame(s, s"trade_edges|$dir") {
+    Checkpoints.pin(
       tbl(s, dir, "lineitem")
         .join(tbl(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .transform(d => graft.operators.Checkpoints.pin(d))
-    }
+        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp")))
 
   /** One band's bucket id as DuckDB SQL (1-based array index, bit weights
     * 1,2,4,... exactly as [[Similarity.lshBucket]]). */

@@ -62,8 +62,8 @@ object Round12 extends GateBatch {
     // one equi-join + one partial-agg argmax per round, no windows.
     // The oracle unrolls the identical recurrence as CTEs
     "graph_label_prop" -> ((s, dir) => {
-      // shared trade multigraph (Extensions.tradeEdgesFor): computed
-      // once per session, re-encoded per gate
+      // shared trade multigraph (Extensions.tradeEdgesFor),
+      // re-encoded per gate
       val edges = Extensions.tradeEdgesFor(s, dir)
         .select((col("cust") * 2).as("s"), (col("supp") * 2 + 1).as("d"))
       LabelProp(edges, "s", "d", LpaRounds).orderBy("node")

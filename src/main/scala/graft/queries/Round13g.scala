@@ -41,9 +41,9 @@ object Round13g extends GateBatch {
     // join supplies the intersection, degrees supply the union via
     // inclusion-exclusion; never builds per-node neighbor sets
     "graph_jaccard" -> ((s, dir) => {
-      // shared near-dup pair graph (Extensions.neardupPairsFor) — the
-      // same checkpointed frame dedup_components consumes; referenced
-      // 3x here (degrees + both wedge legs)
+      // the pinned near-dup pair graph (Extensions.neardupPairsFor) —
+      // the graph dedup_components builds on; referenced 3x here
+      // (degrees + both wedge legs)
       val e = Extensions.neardupPairsFor(s, dir)
         .select(col("id_a").as("a"), col("id_b").as("b"))
       NeighborJaccard.pairs(e, "a", "b")

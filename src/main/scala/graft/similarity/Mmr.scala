@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
+
 /** Maximal Marginal Relevance — the diversified re-rank that turns a
   * relevance-ordered candidate pool into a relevant-AND-non-redundant
   * top-k (the standard fix for retrieval pools full of near-duplicate
@@ -33,7 +35,7 @@ object Mmr {
     val base = pool.select(col(idCol).as("__id"),
         Similarity.toVec(col(vecCol)).as("__vec"),
         col(relCol).cast("double").as("__rel"))
-      .localCheckpoint() // bounded pool; read k times below
+      .transform(d => Checkpoints.pin(d)) // bounded pool; read k times below
     var selected: DataFrame = null
     for (step <- 1 to k) {
       val remaining =
@@ -60,7 +62,7 @@ object Mmr {
         .orderBy(col("__score").desc, col("__id"))
         .limit(1)
         .withColumn("__rank", lit(step))
-        .localCheckpoint()
+        .transform(d => Checkpoints.pin(d))
       selected = if (selected == null) pick
         else selected.unionByName(pick)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import graft.operators.MisraGries
+import graft.operators.{Checkpoints, MisraGries}
 
 /** Streaming heavy hitters — the unbounded-feed sibling of
   * [[graft.operators.HeavyHitters]]: each shard lane folds its events
@@ -118,7 +118,7 @@ object StreamingTopK {
   def exactFromShards(laneStates: DataFrame, corpus: DataFrame,
                       keyCol: Column, minShare: Double): DataFrame = {
     val counts = candidateCounts(laneStates, corpus, keyCol)
-      .localCheckpoint() // ≤ shards·k + 1 rows; corpus scans ONCE
+      .transform(d => Checkpoints.pin(d)) // ≤ shards·k + 1 rows; corpus scans ONCE
     val tot = counts.agg(sum("cnt").as("n"))
     counts.where(col("k").isNotNull)
       .crossJoin(broadcast(tot))

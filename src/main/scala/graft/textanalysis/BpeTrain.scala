@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *     that ever touches the raw text. 100 TB of text collapses to its
   *     unique-word table (vocabulary), which is what every iteration
   *     operates on.
-  *  2. Each merge step counts adjacent symbol pairs over the (cached)
+  *  2. Each merge step counts adjacent symbol pairs over the (pinned)
   *     vocabulary weighted by word frequency — a partial-agg groupBy on
   *     a table of unique words, not documents — takes the global argmax
   *     (a 1-row reduce, the same driver shape as the k-means centroid
@@ -45,16 +45,18 @@ object BpeTrain {
   def trainMerges(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges > 0, s"nMerges must be positive: $nMerges")
     val spark = df.sparkSession
-    var vocab = vocabulary(df, textCol).persist()
-    vocab.count()
+    // each merge step pins the rewritten vocabulary and releases the
+    // previous step's, so one step's blocks are live at a time
+    val roll = new graft.operators.Checkpoints.Rolling()
+    var vocab = roll(vocabulary(df, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Row]
     try {
       var step = 1
       var exhausted = false
-      // the merge loop runs over the PERSISTED unique-word vocabulary,
+      // the merge loop runs over the PINNED unique-word vocabulary,
       // a bounded table with a fixed per-step plan shape — static
       // planning ([[graft.operators.StaticPlanning]], round 19) books
-      // two jobs per merge (argmax collect + re-persist count) instead
+      // two jobs per merge (argmax collect + re-pin) instead
       // of one AQE stage job per exchange; the corpus-scale vocabulary
       // build above keeps the session's adaptivity
       graft.operators.StaticPlanning.statically(spark) {
@@ -81,15 +83,12 @@ object BpeTrain {
                    AND element_at(acc, -1) = '$qa' AND x = '$qb'
                  THEN concat(slice(acc, 1, size(acc) - 1), array('$qm'))
                  ELSE concat(acc, array(x)) END), ' ')""")
-          val next = vocab.select(applied.as("seq"), col("freq")).persist()
-          next.count()
-          vocab.unpersist()
-          vocab = next
+          vocab = roll(vocab.select(applied.as("seq"), col("freq")))
           step += 1
         }
       }
       } // statically
-    } finally vocab.unpersist()
+    } finally roll.close()
     spark.createDataFrame(spark.sparkContext.parallelize(merges.toSeq, 1),
       StructType(Seq(StructField("step", IntegerType, nullable = false),
         StructField("lhs", StringType, nullable = false),

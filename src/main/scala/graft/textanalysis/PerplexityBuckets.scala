@@ -66,7 +66,7 @@ object PerplexityBuckets {
     * @param checkpointDir the scores frame is CORPUS-sized and feeds
     *   several jobs — when set, it pins via reliable `checkpoint()`
     *   (cluster durability, the [[graft.operators.Curriculum]]
-    *   contract) instead of `localCheckpoint()`. */
+    *   contract) instead of the session default. */
   def assign(rawScores: DataFrame,
              checkpointDir: Option[String] = None): DataFrame = {
     // the tercile selection runs several jobs (lane counts, boundary

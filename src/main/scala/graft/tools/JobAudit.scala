@@ -1,22 +1,29 @@
 package graft.tools
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
-/** Dev probe: run one gate and print every Spark JOB it launches (id,
-  * stage count, call site), then the total. The r18 `jobs` telemetry
-  * showed per-job scheduling constants dominate multi-job gates on a
-  * contended host (`dedup_component_sizes` topped the suite at 96);
-  * this tool answers WHERE those jobs come from — AQE stage jobs per
-  * materialization vs fixpoint rounds vs convergence counts — so a
-  * trim targets the real mass. Not part of the library surface.
+/** Dev probe: run each named gate `reps` times, every attempt COLD in a
+  * fresh `newSession()` with the previous attempt's storage dropped
+  * (the perfbench `gates_cold` discipline), and print per attempt the
+  * seconds, the Spark job count and the output hash
+  * (`bit_xor(xxhash64(all columns))`, which forces every column). At
+  * the end it prints, per gate, the time spread and the histogram of job
+  * counts: a gate whose count varies at one output hash re-plans at run
+  * time (AQE), which no single run shows. Not part of the library
+  * surface.
   *
-  * `sbt "runMain graft.tools.JobAudit dedup_component_sizes [sfDir]"`
+  * `sbt "runMain graft.tools.JobAudit <gate,gate,...> [reps] [sfDir]"`
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
-    val gate = args.headOption.getOrElse("dedup_component_sizes")
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val gates = args.headOption.getOrElse("dedup_component_sizes")
+      .split(",").toSeq
+    val reps = args.lift(1).map(_.toInt).getOrElse(3)
+    val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
@@ -26,36 +33,42 @@ object JobAudit {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    val jobs = new AtomicInteger()
+    sc.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("?")
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.add(f"job ${js.jobId}%3d  stages=${js.stageInfos.size}%2d" +
-          f"  $site  ${desc.take(80)}")
-        ()
+        jobs.incrementAndGet(); ()
       }
     })
 
-    val df = graft.SparkEntry.queries(gate)(spark, sfDir)
-    val n = df.count()
-    // listener events are async; give the bus a moment to drain
-    Thread.sleep(500)
-    jobs.forEach(l => println(s"[jobaudit] $l"))
-    println(s"[jobaudit] $gate: ${jobs.size} jobs, $n result rows")
-    // storage telemetry (round-20 verdict item 6): what the gate left
-    // pinned in the block manager — iterative loops should hold at
-    // most one round's blocks after the release hygiene
-    val storage = spark.sparkContext.getRDDStorageInfo
-    println(f"[jobaudit] storage after run: ${storage.length} rdds, " +
-      f"${storage.map(_.memSize).sum / 1024.0 / 1024}%.1f MB mem, " +
-      f"${storage.map(_.diskSize).sum / 1024.0 / 1024}%.1f MB disk")
+    for (gate <- gates) {
+      val build = graft.SparkEntry.queries(gate)
+      val attempts = (1 to reps).map { i =>
+        val s = spark.newSession()
+        org.apache.spark.sql.graft.Shim.drainListeners(sc)
+        jobs.set(0)
+        val t0 = System.nanoTime()
+        val df = build(s, sfDir)
+        val r = df.select(xxhash64(df.columns.map(col): _*).as("__h"))
+          .agg(expr("bit_xor(__h)")).collect()
+        val secs = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.sql.graft.Shim.drainListeners(sc)
+        val n = jobs.get()
+        val hash = if (r.isEmpty || r(0).isNullAt(0)) 0L else r(0).getLong(0)
+        println(f"[jobaudit] $gate attempt $i: $secs%.2f s, $n jobs, hash $hash")
+        spark.catalog.clearCache()
+        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        (secs, n, hash)
+      }
+      val ts = attempts.map(_._1).sorted
+      println(f"[jobaudit] $gate seconds: min ${ts.head}%.2f " +
+        f"median ${ts(ts.size / 2)}%.2f max ${ts.last}%.2f")
+      val hist = attempts.groupBy(_._2).toSeq.sortBy(_._1)
+        .map { case (n, as) => s"$n jobs x${as.size}" }
+      println(s"[jobaudit] $gate job counts: ${hist.mkString(", ")}; " +
+        s"${attempts.map(_._3).distinct.size} distinct hash(es)")
+    }
     spark.stop()
   }
 }

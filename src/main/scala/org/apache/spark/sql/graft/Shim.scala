@@ -23,4 +23,14 @@ object Shim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Whether `dt` is an `AtomicType` (`protected[sql]` in Spark 4). */
+  def isAtomic(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt.isInstanceOf[org.apache.spark.sql.types.AtomicType]
+
+  /** Block until every event posted so far has reached the listeners
+    * (`listenerBus` is `private[spark]`), so a listener's job count
+    * covers the actions that already returned. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }
