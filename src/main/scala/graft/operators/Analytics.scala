@@ -1094,27 +1094,18 @@ object Analytics {
     rows.toDF("prob", "exact_q")
   }
 
-  /** Per-group [[exactQuantilesSelect]] — exact `quantile_cont` per
-    * segment without a global sort or per-group full buffers: per-group
-    * sketch cutpoints lane each group's domain (one bounded-buffer
-    * pass), per-(group, lane) counts locate every target rank on the
-    * driver (|groups|·nBuckets longs — the caller bounds |groups| via
-    * `maxGroups`), and ONE candidate scan fetches only the lanes
-    * holding a target rank, ranked by a per-lane window over that
-    * slice. "Exact p99 per segment over 100 TB" in three scans.
-    * Output: (groupCol, prob, exact_q), group type preserved. */
   /** Per-group equi-depth cut table: one `(group, sorted cut array)`
     * row per group, read off each group's bottom-k sketch by the
     * deterministic lower-index rule and kept as a DataFrame so
     * assignment stays a broadcast join + pure map (never a per-group
     * literal CASE, which hits codegen limits at large |groups|).
     * Materialized once so multiple readers never rerun the
-    * grouped-sketch pass — as DRIVER-LITERAL rows when the table fits
-    * [[LanedPrefix.broadcastRowCap]] (round 20: one limit-collect
-    * probes the size AND fetches; the later broadcast then builds
-    * driver-side with no job, replacing the former checkpoint + count
-    * + broadcast-build job chain), as an executor checkpoint beyond
-    * it. Returns (frame, fitsTheCap). */
+    * grouped-sketch pass — as DRIVER-LITERAL rows (one
+    * [[BoundedCollect]] probes AND fetches; the broadcast then builds
+    * with no job) when there are at most [[LanedPrefix.broadcastRowCap]]
+    * / nBuckets groups, as an executor checkpoint beyond. A cut row
+    * holds nBuckets − 1 doubles, so the cap counts (group, lane) cells.
+    * Returns (frame, fitsTheCap). */
   private def groupedCutTable(nn: DataFrame, groupCol: String,
                               rowKey: Column, valueCol: String,
                               k: Int, nBuckets: Int)
@@ -1128,14 +1119,13 @@ object Analytics {
       .agg(array_sort(collect_list(struct(col("prob").cast("int")
         .as("i"), col("est_q").as("q")))).as("__cs"))
       .select(col("__g"), expr("transform(__cs, x -> x.q)").as("__cuts"))
-    val capN = math.min(LanedPrefix.broadcastRowCap,
-      (Int.MaxValue - 2).toLong).toInt
-    val head = aggDf.limit(capN + 1).collect()
-    if (head.length <= capN) {
-      import scala.jdk.CollectionConverters._
-      (nn.sparkSession.createDataFrame(head.toSeq.asJava, aggDf.schema),
-        true)
-    } else (Checkpoints.pin(aggDf), false)
+    BoundedCollect(aggDf, LanedPrefix.broadcastRowCap / nBuckets) match {
+      case Some(rows) =>
+        import scala.jdk.CollectionConverters._
+        (nn.sparkSession.createDataFrame(rows.toSeq.asJava, aggDf.schema),
+          true)
+      case None => (Checkpoints.pin(aggDf), false)
+    }
   }
 
   /** Per-group [[qsketchRangeBuckets]]: equi-depth range bucketing
@@ -1146,34 +1136,49 @@ object Analytics {
     * one scan). Output: non-null-`valueCol` rows of `df` + `bucket`. */
   def qsketchRangeBucketsGrouped(df: DataFrame, groupCol: String,
                                  rowKey: Column, valueCol: String,
-                                 k: Int, nBuckets: Int): DataFrame = {
+                                 k: Int, nBuckets: Int): DataFrame =
+    rangeBucketsGrouped(df, groupCol, rowKey, valueCol, k, nBuckets)._1
+
+  /** [[qsketchRangeBucketsGrouped]] and whether its cut table fit. */
+  private[operators] def rangeBucketsGrouped(df: DataFrame,
+      groupCol: String, rowKey: Column, valueCol: String, k: Int,
+      nBuckets: Int): (DataFrame, Boolean) = {
     require(nBuckets > 1, s"nBuckets must exceed 1, got $nBuckets")
     val nn = df.where(col(valueCol).isNotNull)
-    // ROW-CAPPED broadcast (round 15, the LanedPrefix.withPrefixGrouped
-    // treatment extended to the CUT table): one row per group, so at
-    // high group cardinality an unconditional hint ships a
-    // driver-killing table (1.6M groups ≈ 100+ MB of cut arrays) while
-    // at gate-scale group counts the hint is exactly right. Round 20:
-    // the fitting probe rides groupedCutTable's own limit-collect —
-    // no separate count job; over the cap the planner is left free —
-    // a shuffled join on the group key, the same decision the sums
-    // join makes.
+    // ROW-CAPPED broadcast: at high group cardinality an unconditional
+    // hint ships a driver-killing table (1.6M groups ≈ 100+ MB of cut
+    // arrays); over the cap the planner is left free — a shuffled join
+    // on the group key, the same decision the sums join makes.
     val (cuts, small) =
       groupedCutTable(nn, groupCol, rowKey, valueCol, k, nBuckets)
     val cutsH = if (small) broadcast(cuts) else cuts
-    nn.join(cutsH, nn(groupCol) === cutsH("__g"))
+    (nn.join(cutsH, nn(groupCol) === cutsH("__g"))
       .withColumn("bucket", aggregate(col("__cuts"), lit(0),
         (acc, c) => acc +
           when(col(valueCol).cast("double") > c, 1).otherwise(0)))
-      .drop("__g", "__cuts")
+      .drop("__g", "__cuts"), small)
   }
 
+  /** Per-group [[exactQuantilesSelect]] — exact `quantile_cont` per
+    * segment without a global sort or per-group full buffers: per-group
+    * sketch cutpoints lane each group's domain (one bounded-buffer
+    * pass), per-(group, lane) counts locate every target rank on the
+    * driver (|groups|·nBuckets longs — the caller bounds |groups| via
+    * `maxGroups`), and ONE candidate scan fetches only the lanes
+    * holding a target rank, ranked by a per-lane window over that
+    * slice. "Exact p99 per segment over 100 TB" in three scans.
+    * Output: (groupCol, prob, exact_q), group type preserved. The
+    * group column must pass [[BoundedCollect.groupsByValue]]. */
   def exactQuantilesSelectGrouped(df: DataFrame, groupCol: String,
                                   rowKey: Column, valueCol: String,
                                   probs: Seq[(String, Double)],
                                   k: Int = 1024, nBuckets: Int = 64,
                                   maxGroups: Int = 10000): DataFrame = {
     require(nBuckets > 1, s"nBuckets must exceed 1, got $nBuckets")
+    val site = "Analytics.exactQuantilesSelectGrouped"
+    val gType = df.schema(groupCol).dataType
+    require(BoundedCollect.groupsByValue(gType), s"$site: the driver cannot " +
+      s"group '$groupCol' (${gType.simpleString}) by value — cast it to string")
     val spark = df.sparkSession
     val nn = df.where(col(valueCol).isNotNull)
     val (cuts, _) =
@@ -1188,12 +1193,14 @@ object Analytics {
       .withColumn("bucket", aggregate(col("__cuts"), lit(0),
         (acc, c) => acc + when(col("v") > c, 1).otherwise(0)))
       .select("__g", "v", "bucket"))
-    val laneCounts: Map[(Any, Int), Long] = bucketed
-      .groupBy("__g", "bucket").count().collect()
+    val hint = "raise maxGroups or pre-aggregate"
+    val laneCounts: Map[(Any, Int), Long] = BoundedCollect.orFail(
+        bucketed.groupBy("__g", "bucket").count(),
+        maxGroups.toLong * nBuckets, site, "(group, lane) counts", hint)
       .map(r => ((r.get(0), r.getInt(1)), r.getLong(2))).toMap
     val groups = laneCounts.keys.map(_._1).toSeq.distinct
     require(groups.size <= maxGroups,
-      s"more than $maxGroups groups — raise maxGroups or pre-aggregate")
+      s"$site: more than $maxGroups groups — $hint")
     // per group: cumulative lane offsets + the EXACT 1-based local
     // ranks needed per (group, lane) — O(#probs) entries per group
     case class Need(g: Any, lane: Int, ranks: Seq[Int])

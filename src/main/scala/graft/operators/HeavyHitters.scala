@@ -140,18 +140,11 @@ object HeavyHitters {
     val keyed = df.select(group.cast("string").as("g"),
         key.cast("string").as("k"))
       .where($"g".isNotNull && $"k".isNotNull)
-    // limit(max+1) caps what lands on the driver BEFORE the guard can
-    // fire: collecting |groups| MG summaries (k strings each) and THEN
-    // requiring |groups| <= maxGroups would materialize exactly the
-    // blow-up the guard exists to prevent. One extra row detects
-    // overflow; under the cap the limit drops nothing.
-    val summaries = keyed.as[(String, String)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(new MisraGries(kk).toColumn.name("s"))
-      .limit(maxGroups + 1)
-      .collect()
-    require(summaries.length <= maxGroups,
-      s"more than $maxGroups groups — raise maxGroups or pre-filter")
+    val summaries = BoundedCollect.orFail(keyed.as[(String, String)]
+        .groupByKey(_._1).mapValues(_._2)
+        .agg(new MisraGries(kk).toColumn.name("s")),
+      maxGroups, "HeavyHitters.exactGrouped", "groups",
+      "raise maxGroups or pre-filter")
     val cand = summaries.flatMap { case (g, s) =>
       s.candidates.map(c => (g, c))
     }.toSeq

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DataType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** The two-level distributed prefix sum over a VALUE-ordered domain —
   * the shape [[KsDrift]], [[RankNormalize]], and [[Auc]] all share
@@ -26,11 +26,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DecimalType, DoubleType
   * builds driver-side with no job. Arithmetic is the same exact
   * long/decimal addition the window ran; JobAudit: agg_gini-family
   * gates drop 2-4 jobs each. The grouped form keeps the round-14
-  * OVER-CAP contract: when the (group, lane) table exceeds
-  * [[BroadcastRowCap]] rows (probed by the same limit-collect, one
-  * job), it falls back to the materialized-frame window path with no
-  * broadcast hint — the planner-free shape that scales to any group
-  * cardinality.
+  * OVER-CAP contract: when the grouped cut table has more than
+  * [[BroadcastRowCap]] / nLanes groups (known from the cut table's own
+  * bounded collect, no extra job), it falls back to the
+  * materialized-frame window path with no broadcast hint — the
+  * planner-free shape that scales to any group cardinality.
   *
   * Input: `vals` with one row per DISTINCT `orderCol` value and long
   * `sumCols` counts. Output: (`vals` + a `<c>_cum` prefix column per
@@ -131,7 +131,7 @@ object LanedPrefix {
     * — a broadcast cut-table join + pure map, never a per-group CASE),
     * the in-lane window partitions by (group, lane), and the cross-lane
     * offsets come off the |groups|·nLanes per-(group,lane) totals —
-    * driver-computed literals under [[BroadcastRowCap]], a
+    * driver-computed literals under [[BroadcastRowCap]] cells, a
     * group-partitioned window over the materialized frame beyond it —
     * so the shape scales in BOTH the group count and the per-group
     * domain size.
@@ -141,8 +141,8 @@ object LanedPrefix {
     * equi-join). Output: (`vals` + `<c>_cum` prefix per sum column +
     * lane `bucket`, and a per-group totals frame keyed by `groupCol`
     * with `<c>_tot` columns — join it back on the group AS RETURNED:
-    * it is a broadcastable literal exactly when the materialized
-    * (group, lane) table is under [[BroadcastRowCap]] rows, and is
+    * it is a broadcastable literal exactly when the cut table has at
+    * most [[BroadcastRowCap]] / nLanes groups, and is
     * left to the planner beyond, keeping the shape valid at any group
     * cardinality without shuffling the data-sized frame in the common
     * small-|groups| regime). */
@@ -160,7 +160,7 @@ object LanedPrefix {
     // the final laned output are separate executions that would each
     // recompute the distinct-(group, value) collapse
     val pinned = Checkpoints.pin(vals)
-    val laned = Analytics.qsketchRangeBucketsGrouped(pinned, groupCol,
+    val (laned, cutsFit) = Analytics.rangeBucketsGrouped(pinned, groupCol,
       col(orderCol), orderCol, k, nLanes)
     val hi = if (inclusive) 0L else -1L
     val wIn = Window.partitionBy(groupCol, "bucket").orderBy(orderCol)
@@ -168,105 +168,77 @@ object LanedPrefix {
     val sumsDf = laned.groupBy(groupCol, "bucket")
       .agg(sum(sumCols.head).as(s"__t_${sumCols.head}"),
         sumCols.tail.map(c => sum(c).as(s"__t_$c")): _*)
-    // ROW-CAPPED driver fusion (round 20, extending the round-13
-    // ADVICE cap): ONE limit-collect probes the (group, lane) table
-    // size AND fetches it when it fits — under the cap the offsets and
-    // per-group totals are driver-computed literal frames (the same
-    // bytes the broadcast would have shipped anyway; two checkpoint /
-    // count jobs and two broadcast-build jobs disappear). Beyond the
-    // cap the collected rows are discarded and the round-14
-    // planner-free fallback runs unchanged: materialized sums frame,
-    // windowed offsets, un-hinted joins. The driver groups the fetched
-    // rows by JVM equality of the key, so only atomic keys with value
-    // equality take the driver branch: a binary key (an `AtomicType`
-    // too) collects as `Array[Byte]`, which compares by reference and
-    // would make every row its own group; it takes the planner branch.
-    val capN = math.min(LanedPrefix.broadcastRowCap,
-      (Int.MaxValue - 2).toLong).toInt
-    val keyType = sumsDf.schema(groupCol).dataType
-    val driverKey = keyType != BinaryType &&
-      org.apache.spark.sql.graft.Shim.isAtomic(keyType)
-    val head =
-      if (driverKey) sumsDf.limit(capN + 1).collect() else Array.empty[Row]
-    val spark = vals.sparkSession
-    if (driverKey && head.length <= capN) {
-      val tTypes = sumCols.map(c => sumsDf.schema(s"__t_$c").dataType)
-      val offSchema = StructType(sumsDf.schema(groupCol) +:
-        sumsDf.schema("bucket") +:
-        sumCols.zip(tTypes).map { case (c, t) =>
-          StructField(s"__off_$c", t, nullable = true) })
-      val totSchema = StructType(sumsDf.schema(groupCol).copy(
-        name = groupCol) +:
-        sumCols.zip(tTypes).map { case (c, t) =>
-          StructField(s"${c}_tot", t, nullable = true) })
-      val offRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-      val totRows = scala.collection.mutable.ArrayBuffer.empty[Row]
-      head.groupBy(_.get(0)).foreach { case (g, rows) =>
-        val acc = scala.collection.mutable.ArrayBuffer
-          .fill[Any](sumCols.size)(null)
-        rows.sortBy(_.getInt(1)).foreach { r =>
-          offRows += Row.fromSeq(g +: r.get(1) +:
-            sumCols.indices.map(i =>
-              if (acc(i) == null) zeroOf(tTypes(i)) else acc(i)))
-          sumCols.indices.foreach(i =>
-            acc(i) = addAny(acc(i), r.get(i + 2)))
+    // A cut table that fit bounds the (group, lane) sums by
+    // BroadcastRowCap rows: ONE plain collect fetches them into literal
+    // offsets and totals that broadcast with no job. Otherwise, or when
+    // the driver cannot group the key by value, the sums are pinned and
+    // windowed and the joins left to the planner: no driver fetch.
+    val (offsets, totals) =
+      if (cutsFit &&
+          BoundedCollect.groupsByValue(sumsDf.schema(groupCol).dataType)) {
+        val tTypes = sumCols.map(c => sumsDf.schema(s"__t_$c").dataType)
+        val offSchema = StructType(sumsDf.schema(groupCol) +:
+          sumsDf.schema("bucket") +:
+          sumCols.zip(tTypes).map { case (c, t) =>
+            StructField(s"__off_$c", t, nullable = true) })
+        val totSchema = StructType(sumsDf.schema(groupCol).copy(
+          name = groupCol) +:
+          sumCols.zip(tTypes).map { case (c, t) =>
+            StructField(s"${c}_tot", t, nullable = true) })
+        val offRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val totRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+        sumsDf.collect().groupBy(_.get(0)).foreach { case (g, rows) =>
+          val acc = scala.collection.mutable.ArrayBuffer
+            .fill[Any](sumCols.size)(null)
+          rows.sortBy(_.getInt(1)).foreach { r =>
+            offRows += Row.fromSeq(g +: r.get(1) +:
+              sumCols.indices.map(i =>
+                if (acc(i) == null) zeroOf(tTypes(i)) else acc(i)))
+            sumCols.indices.foreach(i =>
+              acc(i) = addAny(acc(i), r.get(i + 2)))
+          }
+          totRows += Row.fromSeq(g +: sumCols.indices.map(acc(_)))
         }
-        totRows += Row.fromSeq(g +: sumCols.indices.map(acc(_)))
+        // the totals keep their broadcast hint (callers join the frame
+        // back AS RETURNED): a near-cap literal can exceed the
+        // auto-broadcast threshold and would otherwise shuffle the
+        // caller's data-sized side
+        (broadcast(localFrame(vals.sparkSession, offRows.toSeq, offSchema)),
+          broadcast(localFrame(vals.sparkSession, totRows.toSeq, totSchema)))
+      } else {
+        val wAcross = Window.partitionBy(groupCol).orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val sums = Checkpoints.pin(sumsDf)
+        val offs = sumCols.foldLeft(sums) { (df, c) =>
+          df.withColumn(s"__off_$c",
+            coalesce(sum(s"__t_$c").over(wAcross), lit(0L)))
+        }.select(col(groupCol) +: col("bucket") +:
+          sumCols.map(c => col(s"__off_$c")): _*)
+        (offs, sums.groupBy(groupCol).agg(
+          sum(s"__t_${sumCols.head}").as(s"${sumCols.head}_tot"),
+          sumCols.tail.map(c => sum(s"__t_$c").as(s"${c}_tot")): _*))
       }
-      val offsets = localFrame(spark, offRows.toSeq, offSchema)
-      // the under-cap totals keep their broadcast hint (callers join
-      // the frame back AS RETURNED — the round-13 contract): a
-      // near-cap literal can exceed the auto-broadcast threshold and
-      // would otherwise shuffle the caller's data-sized side
-      val totals = broadcast(localFrame(spark, totRows.toSeq, totSchema))
-      val out = sumCols.foldLeft(
-          laned.join(broadcast(offsets), Seq(groupCol, "bucket"))) {
-        (df, c) =>
-          df.withColumn(s"${c}_cum",
-            coalesce(sum(c).over(wIn), lit(0L)) + col(s"__off_$c"))
-      }.drop(sumCols.map(c => s"__off_$c"): _*)
-      (out, totals)
-    } else {
-      // OVER-CAP fallback (round-14 contract, executable at spec scale
-      // via the test cap hook): materialize the sums frame once; the
-      // offsets come off a group-partitioned window and the joins are
-      // left to the planner — no driver-sized structure anywhere.
-      val wAcross = Window.partitionBy(groupCol).orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val sums = Checkpoints.pin(sumsDf)
-      val offsets = sumCols.foldLeft(sums) { (df, c) =>
-        df.withColumn(s"__off_$c",
-          coalesce(sum(s"__t_$c").over(wAcross), lit(0L)))
-      }.select(col(groupCol) +: col("bucket") +:
-        sumCols.map(c => col(s"__off_$c")): _*)
-      val totals = sums.groupBy(groupCol).agg(
-        sum(s"__t_${sumCols.head}").as(s"${sumCols.head}_tot"),
-        sumCols.tail.map(c => sum(s"__t_$c").as(s"${c}_tot")): _*)
-      val out = sumCols.foldLeft(
-          laned.join(offsets, Seq(groupCol, "bucket"))) { (df, c) =>
-        df.withColumn(s"${c}_cum",
-          coalesce(sum(c).over(wIn), lit(0L)) + col(s"__off_$c"))
-      }.drop(sumCols.map(c => s"__off_$c"): _*)
-      (out, totals)
-    }
+    val out = sumCols.foldLeft(
+        laned.join(offsets, Seq(groupCol, "bucket"))) { (df, c) =>
+      df.withColumn(s"${c}_cum",
+        coalesce(sum(c).over(wIn), lit(0L)) + col(s"__off_$c"))
+    }.drop(sumCols.map(c => s"__off_$c"): _*)
+    (out, totals)
   }
 
-  /** Max (group, lane) rows the grouped form will fetch to the driver
+  /** Max (group, lane) cells the grouped form will fetch to the driver
     * and re-ship as broadcast literals — ~2M rows of (key, lane,
     * k longs) is tens of MB, comfortably driver/executor-safe (the
-    * same bytes the pre-fusion broadcast hint shipped); larger tables
-    * fall back to the planner's choice. */
+    * same bytes the pre-fusion broadcast hint shipped). The grouped
+    * cut table spends it as BroadcastRowCap / nLanes groups; more
+    * groups fall back to the planner's choice. */
   val BroadcastRowCap: Long = 2000000L
 
-  /** The cap actually consulted — test-overridable so the OVER-cap
+  /** The cap actually consulted — test-overridable so the over-cap
     * fallback (no driver fetch; the planner picks, typically a
-    * sort-merge join on (group, lane)) is executable at spec scale
-    * without 2M real groups: the round-14 verdict flagged that the
-    * un-hinted branch — exactly the path a 100× group cardinality
-    * takes — was dead in every test and rehearsal.
-    * `LanedPrefixFallbackSpec` lowers it to 0, re-runs the grouped
-    * family, and pins value-identity with the fused plan. Production
-    * never touches this. */
+    * sort-merge join on (group, lane)), the path a 100× group
+    * cardinality takes, runs at spec scale without 2M real groups
+    * (`LanedPrefixFallbackSpec`). Production never touches this. */
   @volatile private[graft] var broadcastRowCap: Long = BroadcastRowCap
 
   /** Run `body` with the broadcast cap forced to `cap` (test hook). */

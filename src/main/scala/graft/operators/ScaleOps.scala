@@ -476,16 +476,10 @@ object TemperatureMixture {
             seedCols: Seq[String], hash: SampleHash = Xx64,
             maxSources: Int = 10000): DataFrame = {
     require(total > 0, "total must be positive")
-    // limit(max+1) bounds the driver materialization BEFORE the guard
-    // fires — without it the collect has already pulled |sources| rows
-    // onto the driver by the time the require can object (the blow-up
-    // it exists to prevent). One extra row is enough to detect overflow
-    // and cheap enough to fetch.
-    val countRows = df.where(col(sourceCol).isNotNull)
-      .groupBy(sourceCol).count()
-      .limit(maxSources + 1).collect()
-    require(countRows.length <= maxSources,
-      s"more than $maxSources sources — raise maxSources or pre-filter")
+    val countRows = BoundedCollect.orFail(
+      df.where(col(sourceCol).isNotNull).groupBy(sourceCol).count(),
+      maxSources, "TemperatureMixture", "sources",
+      "raise maxSources or pre-filter")
     val counts = countRows.map(r => (r.getString(0), r.getLong(1)))
       .sortBy(_._1)
     val weights = counts.map { case (_, n) => math.sqrt(n.toDouble) }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.operators.BoundedCollect
 
 /** E2 — the KPI/JSON pipeline (ref `html_con_datos/python_json.py`):
   * standardized rows with `_num` shadow columns, then a nested aggregate
@@ -63,9 +64,6 @@ object Kpi {
         .orderBy(col("n").desc, col("estado"))
   }
 
-  /** Assemble the nested KPI document (driver-side; all inputs are tiny
-    * grouped results). Deterministic ordering throughout.
-    */
   /** KPI documents assume FEW groups (the reference has 8 projects, ~5
     * estados): the grouped results are collected to the driver to build
     * one nested JSON doc. The cap turns a pathological group cardinality
@@ -79,18 +77,14 @@ object Kpi {
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     // python-json repr parity: integral doubles print one decimal (558372.0)
     def jnum(d: Double) = if (d == d.floor && !d.isInfinite) f"$d%.1f" else d.toString
-    def collectCapped(grouped: DataFrame, what: String) = {
-      val rows = grouped.limit(maxGroups + 1).collect()
-      require(rows.length <= maxGroups,
-        s"toJson: more than $maxGroups $what groups — a KPI document " +
-          "this large would OOM the driver; aggregate coarser first")
-      rows
-    }
+    def fetch(grouped: DataFrame, what: String) =
+      BoundedCollect.orFail(grouped, maxGroups, "Kpi.toJson", s"$what groups",
+        "a KPI document this large would OOM the driver; aggregate coarser first")
 
     val c = cards(df, priceNum).head()
-    val byP = collectCapped(byProyecto(df, priceNum), "Proyecto")
-    val byE = collectCapped(byEstado(df, estadoCol), "estado")
-    val byPE = collectCapped(byEstado(df, estadoCol, perProject = true),
+    val byP = fetch(byProyecto(df, priceNum), "Proyecto")
+    val byE = fetch(byEstado(df, estadoCol), "estado")
+    val byPE = fetch(byEstado(df, estadoCol, perProject = true),
       "Proyecto x estado").groupBy(_.getString(0))
 
     val cardsJson =

@@ -39,12 +39,12 @@ object Extensions extends GateBatch {
           "text", window = 25, threshold = 0.8)
         .select(col("id_a"), col("id_b")))
 
-  /** The near-dup components (doc_id, component_id), pinned. */
+  /** The near-dup components (doc_id, component_id), pinned by
+    * `connectedComponents` itself (its final round). */
   private def componentsFor(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
-    Checkpoints.pin(
-      Dedup.connectedComponents(neardupPairsFor(s, dir), "id_a", "id_b",
-        tbl(s, dir, "documents"), "doc_id"))
+    Dedup.connectedComponents(neardupPairsFor(s, dir), "id_a", "id_b",
+      tbl(s, dir, "documents"), "doc_id")
 
   /** The customer–supplier trade MULTIGRAPH (one edge per lineitem —
     * multiplicity matters to PageRank out-degrees and label-prop

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.operators.BoundedCollect
 
 /** Native `.xlsx` workbook EMISSION — the write edge of the Excel
   * round-trip whose read edge is [[graft.ingest.XlsxSheetReader]].
@@ -258,11 +259,11 @@ object XlsxWriter {
   def perProjectXlsx(df: DataFrame, projectCol: String, outDir: String,
                      maxProjects: Int = 1000): Seq[(String, String)] = {
     import org.apache.spark.sql.functions.col
-    val projects = df.select(col(projectCol)).where(col(projectCol).isNotNull)
-      .distinct().limit(maxProjects + 1)
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(projects.size <= maxProjects,
-      s"more than $maxProjects projects — use the partitioned parquet sink")
+    val projects = BoundedCollect.orFail(
+        df.select(col(projectCol)).where(col(projectCol).isNotNull).distinct(),
+        maxProjects, "XlsxWriter.perProjectXlsx", "projects",
+        "use the partitioned parquet sink")
+      .map(_.getString(0)).sorted.toSeq
     Files.createDirectories(Paths.get(outDir))
     projects.map { p =>
       val path = s"$outDir/Precios_${Writers.safeFilename(p)}.xlsx"

@@ -115,6 +115,19 @@ class XlsxWriterSpec extends SparkTestBase {
       Seq("Matera/2", "A-102", "1100")))
   }
 
+  test("perProjectXlsx over maxProjects fails before writing a workbook") {
+    import spark.implicits._
+    val df = Seq(("Matera", "A-101"), ("Quilca", "B-201"))
+      .toDF("Proyecto", "unidad")
+    val dir = Files.createTempDirectory("xlsxw-cap").resolve("out")
+    val e = intercept[IllegalArgumentException] {
+      XlsxWriter.perProjectXlsx(df, "Proyecto", dir.toString, maxProjects = 1)
+    }
+    assert(e.getMessage === "XlsxWriter.perProjectXlsx: more than 1 " +
+      "projects — use the partitioned parquet sink")
+    assert(!Files.exists(dir), "no output directory on the refused path")
+  }
+
   test("reference CRM workbook survives write-then-reread cell-exactly") {
     val wb = "/root/reference/data_sperant_actual/BD_SPERANT_ACTUAL.xlsx"
     assume(new java.io.File(wb).isFile, s"reference workbook not present: $wb")
