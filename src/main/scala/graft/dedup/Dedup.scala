@@ -338,27 +338,51 @@ object Dedup {
     * representatives trade away: pairs a~b, b~c put a, b, c in ONE group
     * even though a~c was never emitted.
     *
-    * Min-label propagation with pointer doubling: each round a node
-    * takes the min of (its label, its neighbors' labels, its LABEL's
-    * label). The neighbor step alone needs O(diameter) rounds; the
-    * label-of-label shortcut halves remaining path lengths every round
-    * (the classic pointer-doubling/star-contraction idea), so
-    * convergence is O(log diameter) — a 100-round chain closes in ~7.
-    * Each round is a bounded number of hash-join shuffles of (node,
-    * label) + the edge list, and `localCheckpoint` truncates the plan
-    * lineage (an iterative DataFrame loop otherwise re-plans the entire
-    * history each round and the driver, not the cluster, becomes the
-    * bottleneck). The convergence check is one count per round — an
-    * O(iters) driver action sequence, inherent to fixpoint loops.
+    * Both branches start from the same pin: the DIRECTED pair list,
+    * cast to long, with endpoints outside `nodes` dropped. Its size
+    * picks the branch.
+    *
+    * At or under [[DriverPairCap]] pairs, the pin is fetched with one
+    * [[graft.operators.BoundedCollect]] and the components finish on
+    * the driver: a union-find over primitive `Long`/`Int` arrays with
+    * the minimum id as the root. The non-root labels go back to the
+    * cluster as an RDD-backed frame, and `nodes` left-joins them, so a
+    * node no pair touches keeps its own id. At the cap the driver
+    * peaks near 130 MB (see [[DriverPairCap]]). The branch runs a
+    * fixed handful of jobs, whatever the graph's diameter.
+    *
+    * Over the cap, a distributed fixpoint: min-label propagation with
+    * pointer doubling. Each round a node takes the min of (its label,
+    * its neighbors' labels, its LABEL's label). The neighbor step alone
+    * needs O(diameter) rounds; the label-of-label shortcut halves
+    * remaining path lengths every round (the classic
+    * pointer-doubling/star-contraction idea), so convergence is
+    * O(log diameter) when ids increase along paths — a 100-node chain
+    * closes in 6 rounds. Ids scattered along a long path defeat the
+    * shortcut: a 500-node path of scattered ids needs 236 rounds (a
+    * simulation of this round rule), far past `maxIters`. Each round is a
+    * bounded number of hash-join shuffles of (node, label) + the edge
+    * list, pinned by a [[graft.operators.Checkpoints.Rolling]] pin that
+    * truncates the plan lineage (an iterative DataFrame loop otherwise
+    * re-plans the entire history each round and the driver, not the
+    * cluster, becomes the bottleneck). The convergence check is one
+    * aggregate per round — an O(iters) driver action sequence, inherent
+    * to fixpoint loops. `maxIters` and the per-round pins apply to
+    * this branch only.
+    *
+    * Either way the result is pinned, with one row per distinct node
+    * id: (`idCol` LONG, `component_id` LONG), and a null node id gives
+    * one (null, null) row.
     *
     * @param pairs undirected near-dup pairs (one row per pair, any order)
     * @param nodes the full node set — isolated documents keep their own
     *              id as `component_id` (they form singleton groups)
-    * @param checkpointDir when set, per-round lineage truncation uses
-    *              RELIABLE `checkpoint()` into this directory (HDFS/object
-    *              store on a real cluster) instead of the session default.
-    *              Local checkpoints live on executor disk: an executor
-    *              loss mid-fixpoint kills the job, because the truncated
+    * @param maxIters the fixpoint's round budget (over the cap only)
+    * @param checkpointDir when set, the pins use RELIABLE `checkpoint()`
+    *              into this directory (HDFS/object store on a real
+    *              cluster) instead of the session default. Local
+    *              checkpoints live on executor disk: an executor loss
+    *              mid-fixpoint kills the job, because the truncated
     *              lineage cannot recompute the lost blocks. At 100 TB run
     *              with a reliable dir; local mode is fine for dev/CI.
     *              Labels are identical either way (`ComponentsSpec`).
@@ -367,24 +391,128 @@ object Dedup {
                           nodes: DataFrame, idCol: String,
                           maxIters: Int = 25,
                           checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    // the per-round label pins: each releases the superseded round's
-    // blocks once the new round is materialized, so the fixpoint holds
-    // one round of blocks, never the p0/edges blocks every round reads
-    val roll = new graft.operators.Checkpoints.Rolling(checkpointDir)
-    // materialize the DIRECTED pair list first: the undirected edge
-    // union references it twice, and truncating only after the union
-    // would run the (expensive) pair generation once per direction.
-    // Endpoints outside `nodes` are dropped HERE (two semi-joins of
-    // the pair list, once) — the pre-r19 shape dropped them
-    // implicitly every round, and the message-union round below must
-    // not resurrect them as phantom components
+    // materialize the DIRECTED pair list first: the fixpoint's
+    // undirected edge union references it twice, and truncating only
+    // after the union would run the (expensive) pair generation once per
+    // direction. Endpoints outside `nodes` are dropped HERE (two
+    // semi-joins of the pair list, once) — the pre-r19 shape dropped
+    // them implicitly every round; kept, they would bridge components
+    // in the union-find and come back as phantom components from the
+    // fixpoint's message-union round
     val nodeIds = nodes.select(col(idCol).cast("long").as("u"))
     val p0 = graft.operators.Checkpoints.pin(pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .join(nodeIds, Seq("u"), "left_semi")
       .join(nodeIds.select(col("u").as("v")), Seq("v"), "left_semi")
       .select("u", "v"), checkpointDir)
+    val fetched = graft.operators.BoundedCollect(p0, driverPairCap)
+      .map(rows => (rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+    val out = fetched match {
+      case Some((us, vs)) =>
+        val labels = driverLabels(p0.sparkSession, minRoots(us, vs))
+        graft.operators.Checkpoints.pin(nodeIds.distinct()
+          .join(labels, Seq("u"), "left")
+          .select(col("u"), coalesce(col("root"), col("u")).as("lbl")),
+          checkpointDir)
+      case None => fixpointLabels(p0, nodeIds, maxIters, checkpointDir)
+    }
+    out.select(col("u").as(idCol), col("lbl").as("component_id"))
+  }
+
+  /** Max directed pairs [[connectedComponents]] fetches to finish on the
+    * driver. Collected as `Row`s, a pair costs ~100 bytes of driver
+    * heap, not its 16 bytes of payload: fetches of 250k and 1M pairs
+    * grew the retained heap by 25.5 and 100.7 MB (JDK 17, Spark 4.1,
+    * after a full GC). The rows are dropped once their two endpoint
+    * arrays are built; from there the union-find's primitive arrays
+    * hold at most ~130 bytes a pair (every endpoint distinct), so a
+    * cap-sized graph peaks near 130 MB, and took 0.4 s of union-find
+    * with 2M distinct endpoints. Over the cap the distributed fixpoint
+    * runs. */
+  val DriverPairCap: Long = 1000000L
+
+  /** The cap actually consulted — test-overridable so both branches run
+    * at spec scale (`ComponentsSpec`). Production never touches this. */
+  @volatile private[graft] var driverPairCap: Long = DriverPairCap
+
+  /** Run `body` with the driver pair cap forced to `cap` (test hook). */
+  private[graft] def withDriverPairCap[A](cap: Long)(body: => A): A = {
+    val prev = driverPairCap
+    driverPairCap = cap
+    try body finally driverPairCap = prev
+  }
+
+  /** Union-find over the edges `us(i)`–`vs(i)`, every root the minimum
+    * id of its set. Returns the non-root nodes and their roots as two
+    * aligned arrays (a node absent from both is its own root). */
+  private def minRoots(us: Array[Long],
+                       vs: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = {
+      val all = us ++ vs
+      java.util.Arrays.sort(all)
+      var n = 0
+      var i = 0
+      while (i < all.length) {
+        if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(all, n)
+    }
+    // ids are sorted, so the smaller index is the smaller id
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    var e = 0
+    while (e < us.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, us(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, vs(e)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 1
+    }
+    val root = Array.tabulate(ids.length)(find)
+    val children = ids.indices.filter(i => root(i) != i).toArray
+    (children.map(ids), children.map(i => ids(root(i))))
+  }
+
+  /** (u, root) as a frame over an RDD of array chunks — not a
+    * `LocalRelation`, which would embed every row in each plan that
+    * reads it. An RDD leaf has no size statistic, so the planner would
+    * shuffle both sides of the join that reads it; its size is known
+    * here, so the frame carries a broadcast hint when it is under
+    * `spark.sql.autoBroadcastJoinThreshold` at 24 bytes a row. */
+  private def driverLabels(spark: org.apache.spark.sql.SparkSession,
+                           labels: (Array[Long], Array[Long])): DataFrame = {
+    import spark.implicits._
+    val (ids, roots) = labels
+    val chunk = 1 << 18
+    val chunks = ids.grouped(chunk).zip(roots.grouped(chunk)).toSeq
+    val df = spark.sparkContext.parallelize(chunks, math.max(1, chunks.size))
+      .flatMap { case (us, rs) => us.iterator.zip(rs.iterator) }
+      .toDF("u", "root")
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      .trim match {
+        case v if v.startsWith("-") => -1L
+        case v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
+      }
+    if (ids.length * 24L <= threshold) broadcast(df) else df
+  }
+
+  /** The distributed branch of [[connectedComponents]]: pointer-doubling
+    * min-label rounds over the pinned directed pairs `p0` (u, v) and the
+    * node ids `nodeIds` (u), returning the final round's pin as
+    * (u, lbl). */
+  private def fixpointLabels(p0: DataFrame, nodeIds: DataFrame,
+                             maxIters: Int,
+                             checkpointDir: Option[String]): DataFrame = {
+    // the per-round label pins: each releases the superseded round's
+    // blocks once the new round is materialized, so the fixpoint holds
+    // one round of blocks, never the p0/edges blocks every round reads
+    val roll = new graft.operators.Checkpoints.Rolling(checkpointDir)
     // both orientations, pinned PARTITIONED BY `v` when large (round
     // 20, guide §2.4): every fixpoint round's neighbor join probes the
     // union on v, and the checkpoint preserves the partitioning — one
@@ -396,8 +524,7 @@ object Dedup {
       p0.unionAll(
         p0.select(col("v").as("u"), col("u").as("v"))),
       col("v"), checkpointDir)
-    var labels = roll(nodes.select(col(idCol).cast("long").as("u"),
-      col(idCol).cast("long").as("lbl")))
+    var labels = roll(nodeIds.select(col("u"), col("u").as("lbl")))
     // Convergence rides the SUM of labels (exact decimal — no Long
     // overflow over corpus-sized id sums): every update strictly
     // DECREASES a label, so sum(lbl) is strictly decreasing until the
@@ -452,7 +579,7 @@ object Dedup {
     }
     require(converged,
       s"connectedComponents did not converge in $maxIters rounds")
-    labels.select(col("u").as(idCol), col("lbl").as("component_id"))
+    labels
   }
 
   // ---------------- md5-keyed replayable family ----------------

@@ -39,8 +39,9 @@ object FuzzyJoin {
     * `idCol` supplies a stable numeric id per row; a key appearing many
     * times gets min(id) as its name_id, so the output (and the chosen
     * canonicals) is deterministic and engine-replayable. The component
-    * step inherits connectedComponents' scale contract — O(log diameter)
-    * rounds of hash joins, lineage truncated per round. */
+    * step inherits connectedComponents' two branches — a driver
+    * union-find up to `Dedup.DriverPairCap` pairs, else O(log diameter)
+    * rounds of hash joins with lineage truncated per round. */
   def entityClusters(df: DataFrame, keyCol: String, idCol: String,
                      maxDist: Int,
                      maxTokenDf: Option[Long] = None): DataFrame = {

@@ -34,17 +34,26 @@ object Extensions extends GateBatch {
   private[queries] def neardupPairsFor(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
+    neardupPairs(tbl(s, dir, "documents"))
+
+  private def neardupPairs(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     Checkpoints.pin(
-      Dedup.jaccardPairsWindowed(tbl(s, dir, "documents"), "doc_id",
-          "text", window = 25, threshold = 0.8)
+      Dedup.jaccardPairsWindowed(docs, "doc_id", "text", window = 25,
+          threshold = 0.8)
         .select(col("id_a"), col("id_b")))
 
   /** The near-dup components (doc_id, component_id), pinned by
-    * `connectedComponents` itself (its final round). */
+    * `connectedComponents` itself: its driver union-find's joined
+    * labels under `Dedup.DriverPairCap` pairs, else its fixpoint's
+    * final round. `documents` is read once for the pairs and the node
+    * set: every read of a parquet table runs its own schema job. */
   private def componentsFor(s: org.apache.spark.sql.SparkSession,
-                            dir: String): org.apache.spark.sql.DataFrame =
-    Dedup.connectedComponents(neardupPairsFor(s, dir), "id_a", "id_b",
-      tbl(s, dir, "documents"), "doc_id")
+                            dir: String): org.apache.spark.sql.DataFrame = {
+    val docs = tbl(s, dir, "documents")
+    Dedup.connectedComponents(neardupPairs(docs), "id_a", "id_b", docs,
+      "doc_id")
+  }
 
   /** The customer–supplier trade MULTIGRAPH (one edge per lineitem —
     * multiplicity matters to PageRank out-degrees and label-prop
