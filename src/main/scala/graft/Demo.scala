@@ -113,6 +113,7 @@ object Demo {
 
     println(s"[demo] resumen:")
     r.resumen.show(truncate = false)
+    r.close() // the last reader of the price-update pin has run
     println(s"[demo] kpis: $json")
     println(s"[demo] outputs under $outDir:")
     Files.walk(Paths.get(outDir)).filter(Files.isRegularFile(_))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.operators.BoundedCollect
@@ -12,7 +13,8 @@ import graft.operators.BoundedCollect
   *
   * The grouped aggregates are plain hash aggregations; only the final
   * (tiny) grouped results are collected to assemble the JSON document,
-  * matching the reference's S9 sink shape.
+  * matching the reference's S9 sink shape. [[toJson]] computes every
+  * group kind in one grouping-sets aggregate.
   */
 object Kpi {
 
@@ -72,33 +74,86 @@ object Kpi {
     * to carry that many nodes. */
   val MaxJsonGroups = 10000
 
+  /** The nested KPI document from ONE aggregate: `GROUPING SETS ((),
+    * (Proyecto), (estado), (Proyecto, estado))` carries each group's
+    * count and, for the global and per-Proyecto groups, the rounded mean
+    * and exact median (the expressions of [[cards]], [[byProyecto]] and
+    * [[byEstado]]), fetched in one bounded collect.
+    * The driver then orders the groups as those frames' `orderBy` does:
+    * strings by their UTF-8 bytes (Spark's binary order, not Java's
+    * UTF-16 one), counts descending before estado. Each group kind has
+    * its own `maxGroups` check, applied in the order Proyecto, estado,
+    * Proyecto x estado. A null `Proyecto` counts as a group, but the
+    * document leaves it out of `by_proyecto`: a JSON key cannot be null,
+    * and the reference's pandas `groupby` drops NaN keys too. */
   def toJson(df: DataFrame, priceNum: String, estadoCol: String,
              generatedAt: String, maxGroups: Int = MaxJsonGroups): String = {
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     // python-json repr parity: integral doubles print one decimal (558372.0)
     def jnum(d: Double) = if (d == d.floor && !d.isInfinite) f"$d%.1f" else d.toString
-    def fetch(grouped: DataFrame, what: String) =
-      BoundedCollect.orFail(grouped, maxGroups, "Kpi.toJson", s"$what groups",
-        "a KPI document this large would OOM the driver; aggregate coarser first")
 
-    val c = cards(df, priceNum).head()
-    val byP = fetch(byProyecto(df, priceNum), "Proyecto")
-    val byE = fetch(byEstado(df, estadoCol), "estado")
-    val byPE = fetch(byEstado(df, estadoCol, perProject = true),
-      "Proyecto x estado").groupBy(_.getString(0))
+    // grouping_id bits, Proyecto high: 0 = both keys, 1 = Proyecto,
+    // 2 = estado, 3 = the global cards
+    val (both, proyecto, estado, global) = (0, 1, 2, 3)
+    val kinds = Seq(proyecto -> "Proyecto", estado -> "estado",
+      both -> "Proyecto x estado")
+    def overCap(what: String) = new IllegalArgumentException(
+      s"Kpi.toJson: more than $maxGroups $what groups — a KPI document " +
+        "this large would OOM the driver; aggregate coarser first")
+    val keyed = df.select(col("Proyecto"),
+      coalesce(col(estadoCol).cast("string"), lit("__NA__")).as("estado"),
+      col(priceNum))
+    // the document reads prices only for the global and per-Proyecto
+    // groups, so the estado groups do not buffer every price for `median`
+    val price = when(grouping_id().isin(proyecto, global), col(priceNum))
+    val agg = keyed
+      .groupingSets(Seq(Seq(), Seq(col("Proyecto")), Seq(col("estado")),
+        Seq(col("Proyecto"), col("estado"))), col("Proyecto"), col("estado"))
+      .agg(grouping_id().cast("int").as("gid"),
+        count(lit(1)).as("n"),
+        coalesce(round(avg(price), 2), lit(0.0)).as("promedio"),
+        coalesce(round(median(price), 2), lit(0.0)).as("mediana"))
+      .select("gid", "Proyecto", "estado", "n", "promedio", "mediana")
+    val rows = BoundedCollect(agg, 1L + 3L * maxGroups) match {
+      case Some(rows) =>
+        val sizes = rows.groupBy(_.getInt(0)).view.mapValues(_.length).toMap
+        kinds.collectFirst { case (g, what) if sizes.getOrElse(g, 0) > maxGroups =>
+          what
+        }.foreach(what => throw overCap(what))
+        rows
+      case None =>
+        // more than 1 + 3 maxGroups rows, and Proyecto x estado has at
+        // least as many groups as either other kind, so it is over the
+        // cap; name a kind checked before it if that one is over too
+        throw overCap(kinds.init.collectFirst { case (g, what)
+            if BoundedCollect(agg.where(col("gid") === g), maxGroups).isEmpty =>
+          what
+        }.getOrElse(kinds.last._2))
+    }
 
+    val utf8: Ordering[String] = (a, b) => java.util.Arrays.compareUnsigned(
+      a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
+    val byCount = Ordering.by[Row, Long](-_.getLong(3))
+      .orElse(Ordering.by[Row, String](_.getString(2))(utf8))
+    val groups = rows.groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
+    val estados = groups(both).groupBy(_.getString(1))
+
+    // an empty input has no global group; its cards are all zero
+    val (units, mean, med) = groups(global).headOption
+      .fold((0L, 0.0, 0.0))(r => (r.getLong(3), r.getDouble(4), r.getDouble(5)))
     val cardsJson =
-      s"""{"unidades_totales": ${c.getLong(0)}, "precio_promedio": ${jnum(c.getDouble(1))}, "precio_median": ${jnum(c.getDouble(2))}}"""
-    val byProyectoJson = byP.map { r =>
-      val p = r.getString(0)
-      val estados = byPE.getOrElse(p, Array.empty).map { e =>
-        s"${jstr(e.getString(1))}: ${e.getLong(2)}"
+      s"""{"unidades_totales": $units, "precio_promedio": ${jnum(mean)}, "precio_median": ${jnum(med)}}"""
+    val byProyectoJson = groups(proyecto).filterNot(_.isNullAt(1))
+      .sortBy(_.getString(1))(utf8).map { r =>
+        val p = r.getString(1)
+        val porEstado = estados.getOrElse(p, Array.empty).sorted(byCount)
+          .map(e => s"${jstr(e.getString(2))}: ${e.getLong(3)}")
+          .mkString("{", ", ", "}")
+        s"""${jstr(p)}: {"unidades": ${r.getLong(3)}, "precio_promedio": ${jnum(r.getDouble(4))}, "precio_median": ${jnum(r.getDouble(5))}, "por_estado": $porEstado}"""
       }.mkString("{", ", ", "}")
-      s"""${jstr(p)}: {"unidades": ${r.getLong(1)}, "precio_promedio": ${jnum(r.getDouble(2))}, "precio_median": ${jnum(r.getDouble(3))}, "por_estado": $estados}"""
-    }.mkString("{", ", ", "}")
-    val byEstadoJson = byE.map { r =>
-      s"${jstr(r.getString(0))}: ${r.getLong(1)}"
-    }.mkString("{", ", ", "}")
+    val byEstadoJson = groups(estado).sorted(byCount)
+      .map(r => s"${jstr(r.getString(2))}: ${r.getLong(3)}")
+      .mkString("{", ", ", "}")
 
     s"""{"generated_at": ${jstr(generatedAt)}, "cards": $cardsJson, "by_proyecto": $byProyectoJson, "by_estado": $byEstadoJson}"""
   }

@@ -6,13 +6,23 @@ import graft.functions.GraftFunctions._
 import graft.operators._
 
 /** E1 — the price-update pipeline (ref `Actualizar_Precios_de_Nexo.py`,
-  * flow at SURVEY.md §3 E1), re-expressed as one lazy Spark DAG:
+  * flow at SURVEY.md §3 E1), re-expressed as one Spark DAG that is
+  * pinned once and read by every output:
   *
   * union-by-name of per-project sheets -> unit canonicalization -> tower
   * prefix -> key normalization -> stable rowid -> sperant dedup (argmax by
-  * date) -> LEFT broadcast join -> coalesce update rules -> audit
-  * (tolerant diff flags, per-project resumen, changed-row detail,
-  * project set differences).
+  * date) -> LEFT broadcast join -> coalesce update rules -> audit flags
+  * (tolerant diff) -> PIN. From the pin: the updated table, the
+  * per-project resumen, the changed-row detail and the project set
+  * differences.
+  *
+  * The pin is the reference's `df_total`, built once and read by every
+  * output (`Actualizar_Precios_de_Nexo.py:399-406`, `:483-487`);
+  * without it each sink would re-plan and re-run the union, window,
+  * self-join and broadcast join. It is unconditional
+  * ([[Checkpoints.pin]], not `pinIfLarge`) because what pays for it is
+  * the number of readers, not the input size. The caller owns it:
+  * [[Result.close]] releases it once the last sink has run.
   *
   * Scale shape: the only shuffles are the sperant dedup window (tiny
   * side), the join (broadcast — right side is a deduped CRM extract), and
@@ -34,12 +44,20 @@ object PriceUpdate {
       updateMode: UpdateRules.Mode = UpdateRules.PreferNew,
       towerProjects: Seq[String] = Seq("capadocia", "matera", "napoles"))
 
+  /** The outputs of [[run]]. Every frame reads the run's pin, and
+    * `updated` reads nothing else: it is the pin minus the file
+    * ordinals and the audit flags. */
   case class Result(
       updated: DataFrame,
       resumen: DataFrame,
       detalle: DataFrame,
       soloEnNexo: DataFrame,
-      soloEnSperant: DataFrame)
+      soloEnSperant: DataFrame) {
+
+    /** Release the pin. Call it after the last action on these frames:
+      * an action on any of them afterwards fails. Idempotent. */
+    def close(): Unit = Checkpoints.release(updated)
+  }
 
   /** sheets: per-project frames from RawSheetReader (string columns +
     * `_file_row` + `Proyecto`); sperant: CRM extract with at least
@@ -127,14 +145,16 @@ object PriceUpdate {
       .drop("precio_lista", "estado_comercial", "_matched")
 
     // ---- audit flags (tolerant float diff, null-sentinel string diff) ----
-    val flagged = updated
+    val auditFlags = Seq("Cambio_PrecioLista", "Cambio_Estado",
+      "Algun_Cambio", "Sin_Cambio")
+    val flagged = Checkpoints.pin(updated
       .withColumn("Cambio_PrecioLista",
         coalesce(!isClose(col("_precio_num_antes"), col("_precio_num_despues")),
           lit(false)))
       .withColumn("Cambio_Estado",
         coalesce(nullSafeNeq(col("_estado_antes"), col(ColEst)), lit(false)))
       .withColumn("Algun_Cambio", col("Cambio_PrecioLista") || col("Cambio_Estado"))
-      .withColumn("Sin_Cambio", !col("Algun_Cambio") && col("tiene_match"))
+      .withColumn("Sin_Cambio", !col("Algun_Cambio") && col("tiene_match")))
 
     // ---- resumen per project (single hash aggregation) ----
     def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
@@ -164,10 +184,11 @@ object PriceUpdate {
       .orderBy("_rowid")
 
     // ---- project set differences (J6/U2) ----
-    val proyNexo = dfTotal.select(trim(col("Proyecto")).as("Proyecto")).distinct()
+    // the LEFT join keeps every dfTotal row, so the pin has its projects
+    val proyNexo = flagged.select(trim(col("Proyecto")).as("Proyecto")).distinct()
     val proySper = sperant.select(trim(col("nombre_proyecto")).as("Proyecto")).distinct()
     Result(
-      updated = updated.drop("_file_ord", "_file_row"),
+      updated = flagged.drop("_file_ord" +: "_file_row" +: auditFlags: _*),
       resumen = resumen,
       detalle = detalle,
       soloEnNexo = proyNexo.except(proySper).orderBy("Proyecto"),

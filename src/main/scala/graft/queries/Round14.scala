@@ -145,6 +145,7 @@ object Round14 extends GateBatch {
       val sperant = s.read.option("header", "true")
         .csv(s"$root/sperant.csv")
         .withColumn("_row", col("_row").cast("long"))
+      // no r.close(): the frame this gate returns reads the run's pin
       val r = PriceUpdate.run(sheets, sperant)
       r.resumen.select(
         col("Proyecto").as("proyecto"),

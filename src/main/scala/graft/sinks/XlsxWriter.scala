@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, BufferedWriter, FileOutputStream,
+  OutputStreamWriter, Writer}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
@@ -41,10 +42,11 @@ import graft.operators.BoundedCollect
   * construction — one zip stream, no splittable row boundaries, an
   * Excel-imposed 1,048,576-row ceiling — exactly like the
   * `pd.ExcelWriter` it re-expresses. Rows are fetched with
-  * `toLocalIterator` (one partition in driver memory at a time, not
-  * a full collect) and the row cap is enforced while streaming. Bulk
-  * data belongs to the parquet/CSV sinks; this closes the
-  * workbook-EMISSION edge of the pipeline.
+  * `toLocalIterator` and each row's XML is written straight into the
+  * open zip entry, so the driver holds one partition of rows and a
+  * write buffer, never a whole sheet; the row cap is enforced while
+  * streaming. Bulk data belongs to the parquet/CSV sinks; this closes
+  * the workbook-EMISSION edge of the pipeline.
   */
 object XlsxWriter {
 
@@ -120,34 +122,35 @@ object XlsxWriter {
     case other => Some(inlineStrCell(ref, other.toString))
   }
 
-  private def sheetXml(header: Seq[String], rows: Iterator[Row],
-                       maxRows: Int): String = {
-    val sb = new StringBuilder(1 << 16)
-    sb.append("<?xml version=\"1.0\" encoding=\"UTF-8\" standalone=\"yes\"?>")
-    sb.append("<worksheet xmlns=\"http://schemas.openxmlformats.org/spreadsheetml/2006/main\">")
-    sb.append("<sheetData>")
-    sb.append("""<row r="1">""")
+  /** Write one worksheet part: the header row, then the first
+    * `header.size` cells of each row (later cells are the caller's
+    * bookkeeping, not data). */
+  private def writeSheet(out: Writer, header: Seq[String], rows: Iterator[Row],
+                         maxRows: Int): Unit = {
+    out.write("<?xml version=\"1.0\" encoding=\"UTF-8\" standalone=\"yes\"?>")
+    out.write("<worksheet xmlns=\"http://schemas.openxmlformats.org/spreadsheetml/2006/main\">")
+    out.write("<sheetData>")
+    out.write("""<row r="1">""")
     header.zipWithIndex.foreach { case (h, i) =>
-      sb.append(inlineStrCell(colRef(i) + "1", Option(h).getOrElse("")))
+      out.write(inlineStrCell(colRef(i) + "1", Option(h).getOrElse("")))
     }
-    sb.append("</row>")
+    out.write("</row>")
     var r = 2
     while (rows.hasNext) {
       require(r <= maxRows, s"sheet exceeds $maxRows rows " +
         "(Excel sheet capacity) — route bulk data to the parquet/CSV sinks")
       val row = rows.next()
-      sb.append(s"""<row r="$r">""")
+      out.write(s"""<row r="$r">""")
       var i = 0
-      while (i < row.length) {
+      while (i < header.size) {
         val v = if (row.isNullAt(i)) null else row.get(i)
-        cellXml(colRef(i) + r.toString, v).foreach(sb.append)
+        cellXml(colRef(i) + r.toString, v).foreach(out.write)
         i += 1
       }
-      sb.append("</row>")
+      out.write("</row>")
       r += 1
     }
-    sb.append("</sheetData></worksheet>")
-    sb.toString
+    out.write("</sheetData></worksheet>")
   }
 
   private def contentTypesXml(n: Int): String = {
@@ -202,39 +205,55 @@ object XlsxWriter {
       "</Relationships>"
   }
 
-  private def putEntry(z: ZipOutputStream, name: String,
-                       content: String): Unit = {
+  /** Write one zip entry through a buffered UTF-8 writer. */
+  private def putEntry(z: ZipOutputStream, name: String)(
+      body: Writer => Unit): Unit = {
     val e = new ZipEntry(name)
     e.setTime(ZipTime)
     z.putNextEntry(e)
-    z.write(content.getBytes(StandardCharsets.UTF_8))
+    val out = new BufferedWriter(
+      new OutputStreamWriter(z, StandardCharsets.UTF_8), 1 << 16)
+    body(out)
+    out.flush() // not close(): that would close the zip stream
     z.closeEntry()
   }
 
-  /** Write a multi-sheet workbook — each `(sheetName, df)` becomes one
-    * worksheet with a header row. Sheet order = argument order = tab
-    * order, matching `pd.ExcelWriter`'s sequential `to_excel` calls. */
-  def writeWorkbook(path: String, sheets: Seq[(String, DataFrame)],
-                    maxRows: Int = ExcelMaxRows): Unit = {
+  /** One worksheet to write: its name, its header and, when its turn
+    * comes, its rows. */
+  private case class Sheet(name: String, header: Seq[String],
+                           rows: () => Iterator[Row])
+
+  private def writeSheets(path: String, sheets: Seq[Sheet],
+                          maxRows: Int): Unit = {
     require(sheets.nonEmpty, "workbook needs at least one sheet")
-    val names = sheets.map { case (n, _) => safeSheetName(n) }
+    val names = sheets.map(s => safeSheetName(s.name))
     require(names.distinct.size == names.size,
       s"duplicate sheet names after sanitization: ${names.mkString(", ")}")
     Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
     val z = new ZipOutputStream(
       new BufferedOutputStream(new FileOutputStream(path)))
     try {
-      putEntry(z, "[Content_Types].xml", contentTypesXml(sheets.size))
-      putEntry(z, "_rels/.rels", RootRelsXml)
-      putEntry(z, "xl/workbook.xml", workbookXml(names))
-      putEntry(z, "xl/_rels/workbook.xml.rels", workbookRelsXml(sheets.size))
-      putEntry(z, "xl/styles.xml", StylesXml)
-      sheets.zipWithIndex.foreach { case ((_, df), i) =>
-        putEntry(z, s"xl/worksheets/sheet${i + 1}.xml",
-          sheetXml(df.columns.toSeq, df.toLocalIterator().asScala, maxRows))
+      putEntry(z, "[Content_Types].xml")(_.write(contentTypesXml(sheets.size)))
+      putEntry(z, "_rels/.rels")(_.write(RootRelsXml))
+      putEntry(z, "xl/workbook.xml")(_.write(workbookXml(names)))
+      putEntry(z, "xl/_rels/workbook.xml.rels")(
+        _.write(workbookRelsXml(sheets.size)))
+      putEntry(z, "xl/styles.xml")(_.write(StylesXml))
+      sheets.zipWithIndex.foreach { case (s, i) =>
+        putEntry(z, s"xl/worksheets/sheet${i + 1}.xml")(
+          writeSheet(_, s.header, s.rows(), maxRows))
       }
     } finally z.close()
   }
+
+  /** Write a multi-sheet workbook — each `(sheetName, df)` becomes one
+    * worksheet with a header row. Sheet order = argument order = tab
+    * order, matching `pd.ExcelWriter`'s sequential `to_excel` calls. */
+  def writeWorkbook(path: String, sheets: Seq[(String, DataFrame)],
+                    maxRows: Int = ExcelMaxRows): Unit =
+    writeSheets(path, sheets.map { case (n, df) =>
+      Sheet(n, df.columns.toSeq, () => df.toLocalIterator().asScala)
+    }, maxRows)
 
   /** S6 as the reference actually ships it — the REAL three-sheet audit
     * workbook (`Actualizar_Precios_de_Nexo.py:483-487`), sheet names
@@ -247,30 +266,55 @@ object XlsxWriter {
       "Solo_en_df_total" -> soloNexo,
       "Solo_en_sperant" -> soloSperant))
 
-  /** One workbook per project (`:399-406`): the driver loops the
-    * (bounded, audit-scale) project list and filters per project —
-    * the reference's own shape, kept deliberately driver-side. Project
-    * names pass through [[Writers.safeFilename]]. Returns
-    * (project, path) PAIRS, sorted by project — callers that need the
-    * project a file belongs to read it off the pair (round-14 ADVICE:
-    * a bare path list invites a positional zip against a separately
-    * collected project list, which silently mislabels every sheet if
-    * the two orders ever diverge). */
+  /** One workbook per project (`:399-406`), each holding that
+    * project's rows in the frame's own order; rows with a null project
+    * are skipped. The (bounded, audit-scale) project list is fetched
+    * first and refused over `maxProjects` before anything is written.
+    * Then the frame is streamed ONCE, sorted by (project, row order),
+    * and a new workbook starts at each project boundary, so the frame's
+    * plan runs once, not once per project. The row order is captured with
+    * `monotonically_increasing_id` before the sort, and the projects
+    * sort by their rank in the driver's sorted list, so the files come
+    * out in the order they are returned. Project names pass through
+    * [[Writers.safeFilename]]. Returns (project, path) PAIRS, sorted by
+    * project — callers that need the project a file belongs to read it
+    * off the pair (round-14 ADVICE: a bare path list invites a
+    * positional zip against a separately collected project list, which
+    * silently mislabels every sheet if the two orders ever diverge). */
   def perProjectXlsx(df: DataFrame, projectCol: String, outDir: String,
                      maxProjects: Int = 1000): Seq[(String, String)] = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions._
     val projects = BoundedCollect.orFail(
         df.select(col(projectCol)).where(col(projectCol).isNotNull).distinct(),
         maxProjects, "XlsxWriter.perProjectXlsx", "projects",
         "use the partitioned parquet sink")
       .map(_.getString(0)).sorted.toSeq
     Files.createDirectories(Paths.get(outDir))
-    projects.map { p =>
-      val path = s"$outDir/Precios_${Writers.safeFilename(p)}.xlsx"
-      writeWorkbook(path, Seq(safeSheetName(p) ->
-        df.where(col(projectCol) === p)))
-      (p, path)
+    val pairs = projects.map(p =>
+      p -> s"$outDir/Precios_${Writers.safeFilename(p)}.xlsx")
+    if (projects.nonEmpty) {
+      val header = df.columns.toSeq
+      val rank = header.size // the one column past the header
+      val rows = df
+        .withColumn("__xlsx_ord", monotonically_increasing_id())
+        .where(col(projectCol).isNotNull)
+        .withColumn("__xlsx_rank",
+          element_at(typedLit(projects.zipWithIndex.toMap), col(projectCol)))
+        .orderBy("__xlsx_rank", "__xlsx_ord")
+        .drop("__xlsx_ord")
+        .toLocalIterator().asScala.buffered
+      while (rows.hasNext) {
+        val k = rows.head.getInt(rank)
+        val (p, path) = pairs(k)
+        val project = new Iterator[Row] {
+          def hasNext: Boolean = rows.hasNext && rows.head.getInt(rank) == k
+          def next(): Row = rows.next()
+        }
+        writeSheets(path, Seq(Sheet(safeSheetName(p), header, () => project)),
+          ExcelMaxRows)
+      }
     }
+    pairs
   }
 
   private implicit class IterAsScala[A](it: java.util.Iterator[A]) {

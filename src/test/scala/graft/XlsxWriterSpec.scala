@@ -146,4 +146,40 @@ class XlsxWriterSpec extends SparkTestBase {
       assert(got.toSeq === want.toSeq, s"row ${r + 1} must round-trip")
     }
   }
+
+  test("per-project workbooks keep the frame's row order across partitions") {
+    // one project's rows span all three partitions and interleave with
+    // the others'; null-project rows sit between them
+    val rows = Seq(
+      Seq(Row("B", 1L, 1.5), Row("A", 2L, null), Row(null, 3L, 3.0),
+        Row("B", 4L, 4.0)),
+      Seq(Row("A", 5L, 5.25), Row("B", 6L, 6.0), Row("A", 7L, -7.0),
+        Row("Ñandú", 8L, 8.0)),
+      Seq(Row(null, 9L, 9.0), Row("Ñandú", 10L, 10.0),
+        Row("B", 11L, 11.0), Row("A", 12L, 12.0)))
+    val schema = StructType(Seq(StructField("Proyecto", StringType),
+      StructField("n", LongType), StructField("precio", DoubleType)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3).flatMap(identity), schema)
+    assert(df.rdd.getNumPartitions === 3)
+    val dir = Files.createTempDirectory("xlsxw-order").toString
+    val pairs = XlsxWriter.perProjectXlsx(df, "Proyecto", dir)
+    assert(pairs.map(_._1) === Seq("A", "B", "Ñandú"))
+    pairs.foreach { case (p, path) =>
+      val want = df.where(org.apache.spark.sql.functions.col("Proyecto") === p)
+      val got = XlsxSheetReader.readGrid(path).tail.map(_(1).toLong).toSeq
+      assert(got === want.collect().map(_.getLong(1)).toSeq, p)
+      // byte for byte the workbook the per-project filter writes
+      val ref = tmp("ref.xlsx")
+      XlsxWriter.writeWorkbook(ref, Seq(XlsxWriter.safeSheetName(p) -> want))
+      assert(java.util.Arrays.equals(
+        Files.readAllBytes(java.nio.file.Paths.get(path)),
+        Files.readAllBytes(java.nio.file.Paths.get(ref))), p)
+    }
+    assert(XlsxSheetReader.readGrid(pairs.head._2).tail.map(_(1)).toSeq ===
+      Seq("2", "5", "7", "12"))
+    // the null-project rows went to no workbook
+    assert(pairs.map(pp => XlsxSheetReader.readGrid(pp._2).length - 1).sum
+      === 10)
+  }
 }
