@@ -1,21 +1,26 @@
 package graft.ingest
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Tolerant raw-sheet ingestion (SURVEY.md §2.1 S1-S3, §2.2 P1-P3).
   *
-  * Reproduces the reference's Excel-dump semantics on CSV/text dumps:
-  * junk preamble rows, header auto-detection by alias scan over the first
-  * 15 rows (fallback row index 4), whitespace/accent header cleaning,
-  * duplicate-header disambiguation (`name_2` scheme), alias-to-canonical
+  * Reproduces the reference's Excel-dump semantics: junk preamble rows,
+  * header auto-detection by alias scan over the first 15 rows (fallback
+  * row index 4), whitespace/accent header cleaning, duplicate-header
+  * disambiguation (`name_2` scheme) and collapse, alias-to-canonical
   * renaming (first alias present wins), ensure-columns, literal project
   * injection, and a stable per-file row ordinal (`_file_row`) that later
   * stages use for `_rowid` and keep-last dedup.
   *
-  * The header decision is a driver-side pre-pass over <=15 rows (cheap at
-  * any scale); everything row-wise stays distributed.
+  * This module holds the one header decision, [[Layout.resolve]]: a pure
+  * driver function over a sheet's first <=15 rows that every tolerant
+  * reader uses — [[readSheet]] (CSV dumps), [[fromGrid]] (the `.xls` and
+  * `.xlsx` grids) and the DSv2 `graft.sources.RawSheetSource`. Everything
+  * row-wise stays distributed: each row is projected onto the layout by
+  * [[firstNonNull]] over its column's cell indices.
   */
 object RawSheetReader {
 
@@ -74,78 +79,135 @@ object RawSheetReader {
     out.toArray
   }
 
+  /** One output column: the raw cell indices coalesced first-non-null
+    * (empty = ensure-injected, always null). */
+  case class OutCol(name: String, cells: Seq[Int])
+
+  /** The header decision for one sheet: the header row's index and the
+    * output columns after `_file_row`, in order. `Proyecto` is among
+    * them and every reader fills it with the literal, not with cells. */
+  case class Layout(headerRow: Int, cols: Seq[OutCol]) {
+    def schema: StructType = StructType(
+      StructField("_file_row", LongType, nullable = false) +:
+        cols.map(c => StructField(c.name, StringType)))
+  }
+
+  object Layout {
+
+    /** The layout of a sheet from its first rows (only the first
+      * `maxHeaderScan` of `head` are read), the reference's per-file loop
+      * (`Actualizar_Precios_de_Nexo.py:149-230`) as one driver function:
+      *
+      *  - header row: the first row holding a canonical name or alias
+      *    (`norm`-compared), else `fallbackHeaderRow`; the names are
+      *    `cleanHeaders`ed;
+      *  - P1: for each canonical name absent from the header, the first
+      *    alias present (exact name) takes its place;
+      *  - F12: `name`, `name_2`, ... groups collapse into one column at
+      *    `name`'s slot, first-non-null over (`name`, then the suffixed
+      *    members in string order) — the reference's bfill-axis-1;
+      *  - P2: missing `ensure` columns are appended, all-null;
+      *  - reserved names: `_file_row` is the line ordinal, so a sheet's
+      *    own `_file_row` is dropped; a sheet's own `Proyecto` keeps its
+      *    slot and is overwritten by the literal (pandas'
+      *    `df["Proyecto"] = ...`), else `Proyecto` goes last. */
+    def resolve(head: Seq[Array[String]], path: String,
+                cfg: Config): Layout = {
+      val rows = head.take(cfg.maxHeaderScan)
+      val candidates = cfg.aliases.flatMap { case (c, al) => c +: al }
+        .map(norm).toSet
+      val found = rows.indexWhere(_.exists(c => candidates.contains(norm(c))))
+      val hdr = if (found >= 0) found else cfg.fallbackHeaderRow
+      if (hdr >= rows.length) throw new IllegalArgumentException(
+        s"$path: header row $hdr not found in first ${cfg.maxHeaderScan} rows")
+
+      var names = cleanHeaders(rows(hdr).toSeq)
+      cfg.aliases.foreach { case (canon, aliases) =>
+        if (!names.contains(canon))
+          aliases.find(names.contains).foreach { a =>
+            names = names.map(n => if (n == a) canon else n)
+          }
+      }
+      val dupPattern = "^(.*)_(\\d+)$".r
+      val bases = names.flatMap {
+        case dupPattern(b, _) if names.contains(b) => Some(b)
+        case _ => None
+      }.toSet
+      def members(base: String): Seq[Int] = {
+        val extras = names.zipWithIndex.filter { case (n, _) =>
+          n.startsWith(base + "_") && n.stripPrefix(base + "_").forall(_.isDigit)
+        }.sortBy(_._1)
+        names.indexOf(base) +: extras.map(_._2)
+      }
+      val dropped = bases.flatMap(b => members(b).tail)
+      val sheetCols = names.zipWithIndex.collect {
+        case (n, i) if !dropped(i) =>
+          OutCol(n, if (bases(n)) members(n) else Seq(i))
+      }
+      val withEnsure = sheetCols ++ cfg.ensure.distinct
+        .filterNot(e => sheetCols.exists(_.name == e)).map(OutCol(_, Nil))
+      val cols = withEnsure.filterNot(_.name == "_file_row")
+      Layout(hdr,
+        if (cols.exists(_.name == "Proyecto")) cols
+        else cols :+ OutCol("Proyecto", Nil))
+    }
+  }
+
+  /** The first non-null, non-empty cell among `idx` (out-of-range cells
+    * are null: short rows pad, long rows truncate — PERMISSIVE). */
+  def firstNonNull(cells: Array[String], idx: Array[Int]): String = {
+    var j = 0
+    while (j < idx.length) {
+      val i = idx(j)
+      if (i < cells.length && cells(i) != null && cells(i).nonEmpty)
+        return cells(i)
+      j += 1
+    }
+    null
+  }
+
   /** Read one raw sheet dump into a canonical string-typed DataFrame. */
   def readSheet(spark: SparkSession, path: String, proyecto: String,
                 cfg: Config): DataFrame = {
-    // stable line ordinal: zipWithIndex follows file order
+    // stable line ordinal: zipWithIndex follows file order; textFile
+    // decompresses by extension, so the head read goes through it too
     val lines = spark.sparkContext.textFile(path).zipWithIndex()
-      .map { case (l, i) => (i, splitCsvLine(l)) }
-    fromCells(spark, lines, path, proyecto, cfg)
+    val layout = Layout.resolve(
+      lines.filter(_._2 < cfg.maxHeaderScan).keys.collect()
+        .map(splitCsvLine).toSeq, path, cfg)
+    project(spark, layout, proyecto, lines
+      .filter(_._2 > layout.headerRow)
+      .map { case (l, i) => (i, splitCsvLine(l)) })
   }
 
-  /** The tolerant-ingestion core over any (ordinal, cells) source —
-    * shared by the CSV-dump path above and [[XlsxSheetReader]]'s
-    * workbook grid: header auto-detect, cleaning, alias renames,
-    * duplicate collapse, ensure-columns, project injection. */
-  def fromCells(spark: SparkSession,
-                lines: org.apache.spark.rdd.RDD[(Long, Array[String])],
-                path: String, proyecto: String, cfg: Config): DataFrame = {
-    // S2 — driver-side header scan over the first maxHeaderScan rows
-    val head = lines.filter(_._1 < cfg.maxHeaderScan).collect().sortBy(_._1)
-    val candidates = cfg.aliases.flatMap { case (canon, al) => canon +: al }
-      .map(norm).toSet
-    val hdrIdx: Long = head
-      .find { case (_, cells) => cells.exists(c => candidates.contains(norm(c))) }
-      .map(_._1)
-      .getOrElse(cfg.fallbackHeaderRow.toLong)
-    val headerRaw = head.find(_._1 == hdrIdx)
-      .map(_._2.toSeq)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path: header row $hdrIdx not found in first ${cfg.maxHeaderScan} rows"))
-    val headers = cleanHeaders(headerRaw)
-    val ncols = headers.length
+  /** Read a sheet already decoded on the driver (the `.xls` and `.xlsx`
+    * grids): the layout comes from the grid's first rows with no Spark
+    * job, and only the rows past the header are parallelized. */
+  def fromGrid(spark: SparkSession, grid: Seq[Array[String]], path: String,
+               proyecto: String, cfg: Config): DataFrame = {
+    val layout = Layout.resolve(grid, path, cfg)
+    val body = grid.zipWithIndex.drop(layout.headerRow + 1)
+      .map { case (r, i) => (i.toLong, r) }
+    project(spark, layout, proyecto, spark.sparkContext.parallelize(body))
+  }
 
-    // project data rows onto the discovered schema (pad/truncate = PERMISSIVE)
-    val rows = lines.filter(_._1 > hdrIdx).map { case (i, cells) =>
-      val padded = cells.map(c => if (c == null || c.isEmpty) null else c)
-        .padTo(ncols, null).take(ncols)
-      Row.fromSeq(i +: padded.toSeq)
-    }
+  /** Project (ordinal, cells) rows onto the layout: one `map` builds
+    * the sheet's columns under positional names, and one `select` names
+    * them and puts the `Proyecto` literal in its slot — a literal in the
+    * plan, so Catalyst folds predicates on it. */
+  private def project(spark: SparkSession, layout: Layout, proyecto: String,
+                      rows: RDD[(Long, Array[String])]): DataFrame = {
+    val cols = layout.cols.zipWithIndex
+    val sheetCols = cols.filter(_._1.name != "Proyecto")
+    val idx = sheetCols.map(_._1.cells.toArray).toArray
     val schema = StructType(StructField("_file_row", LongType, nullable = false) +:
-      headers.map(h => StructField(h, StringType, nullable = true)))
-    var df = spark.createDataFrame(rows, schema)
-
-    // P1 — alias -> canonical rename (first alias present wins)
-    cfg.aliases.foreach { case (canon, aliases) =>
-      if (!df.columns.contains(canon)) {
-        aliases.find(a => df.columns.contains(a))
-          .foreach(a => df = df.withColumnRenamed(a, canon))
-      }
-    }
-    // F12 — collapse duplicate canonical columns (first non-null wins)
-    df = collapseDuplicates(df)
-    // P2 — ensure target columns exist
-    cfg.ensure.foreach { c =>
-      if (!df.columns.contains(c)) df = df.withColumn(c, lit(null).cast(StringType))
-    }
-    // P3 — literal project injection
-    df.withColumn("Proyecto", lit(proyecto))
-  }
-
-  /** Collapse `name`, `name_2`, ... groups into one column via row-wise
-    * first-non-null (the reference's bfill-axis-1, ref `:149-179`). */
-  def collapseDuplicates(df: DataFrame): DataFrame = {
-    val dupPattern = "^(.*)_(\\d+)$".r
-    val bases = df.columns.toSeq
-    val groups = bases.flatMap {
-      case dupPattern(base, _) if bases.contains(base) => Some(base)
-      case _ => None
-    }.distinct
-    groups.foldLeft(df) { (d, base) =>
-      val members = base +: d.columns.filter(c => c.startsWith(base + "_")
-        && c.stripPrefix(base + "_").forall(_.isDigit)).sorted.toSeq
-      val collapsed = coalesce(members.map(col): _*)
-      members.tail.foldLeft(d.withColumn(base, collapsed))((dd, m) => dd.drop(m))
-    }
+      sheetCols.map { case (_, k) => StructField(s"_c$k", StringType) })
+    val df = spark.createDataFrame(rows.map { case (i, cells) =>
+      Row.fromSeq(i +: idx.toSeq.map(firstNonNull(cells, _)))
+    }, schema)
+    df.select(col("_file_row") +: cols.map {
+      case (c, _) if c.name == "Proyecto" => lit(proyecto).as(c.name)
+      case (c, k) => col(s"_c$k").as(c.name)
+    }: _*)
   }
 }

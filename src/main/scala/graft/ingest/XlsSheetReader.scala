@@ -48,9 +48,10 @@ import scala.collection.mutable.ArrayBuffer
   * Scale posture: identical to [[XlsxSheetReader]] — a workbook is a
   * driver-side artifact by construction (single stream, no splittable
   * row boundaries; true of `xlrd` as well), so parsing happens on the
-  * driver and the grid then parallelizes into the distributed
-  * tolerant-ingestion core ([[RawSheetReader.fromCells]]). Bulk data
-  * belongs to the parquet path; this closes workbook INGESTION.
+  * driver. [[RawSheetReader.fromGrid]] then resolves the sheet's layout
+  * from the grid's first rows with no Spark job and parallelizes only
+  * the rows past the header. Bulk data belongs to the parquet path; this
+  * closes workbook INGESTION.
   */
 object XlsSheetReader {
 
@@ -433,17 +434,15 @@ object XlsSheetReader {
     parseSheet(s, info.pos, shared)
   }
 
-  /** Ingest one sheet through the SAME tolerant core as the CSV-dump and
-    * xlsx paths (header auto-detect, alias renames, duplicate collapse,
-    * ensure-columns, project injection) — a user of the reference
-    * pointing the engine at its real legacy `.xls` price lists lands
-    * here, mirroring `Actualizar_Precios_de_Nexo.py:183-230`. */
+  /** Ingest one sheet with the SAME layout as the CSV-dump and xlsx
+    * paths (`RawSheetReader.Layout`: header auto-detect, alias renames,
+    * duplicate collapse, ensure-columns, project injection) — a user of
+    * the reference pointing the engine at its real legacy `.xls` price
+    * lists lands here, mirroring `Actualizar_Precios_de_Nexo.py:183-230`.
+    * No Spark job runs before the frame's first action. */
   def readSheet(spark: SparkSession, path: String, proyecto: String,
                 cfg: RawSheetReader.Config,
                 sheet: Option[String] = None): DataFrame = {
-    val grid = readGrid(path, sheet)
-    val lines = spark.sparkContext.parallelize(
-      grid.zipWithIndex.map { case (r, i) => (i.toLong, r) })
-    RawSheetReader.fromCells(spark, lines, path, proyecto, cfg)
+    RawSheetReader.fromGrid(spark, readGrid(path, sheet), path, proyecto, cfg)
   }
 }

@@ -29,10 +29,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Scale posture: a workbook is a DRIVER-SIDE artifact by construction
   * (one zip, one writer, no splittable row boundaries — the same is
-  * true of `pd.read_excel`), so parsing happens on the driver and the
-  * grid then parallelizes into the distributed tolerant-ingestion core
-  * ([[RawSheetReader.fromCells]]). Bulk data belongs to the parquet
-  * path; this closes the workbook-INGESTION edge of the pipeline.
+  * true of `pd.read_excel`), so parsing happens on the driver.
+  * [[RawSheetReader.fromGrid]] then resolves the sheet's layout from the
+  * grid's first rows with no Spark job and parallelizes only the rows
+  * past the header. Bulk data belongs to the parquet path; this closes
+  * the workbook-INGESTION edge of the pipeline.
   */
 object XlsxSheetReader {
 
@@ -160,17 +161,15 @@ object XlsxSheetReader {
     } finally z.close()
   }
 
-  /** Ingest one sheet of a workbook through the SAME tolerant core as
-    * the CSV-dump path (header auto-detect over the first rows, alias
-    * renames, duplicate collapse, ensure-columns, project injection) —
-    * a user of the reference pointing at its real `.xlsx` lands here.
-    */
+  /** Ingest one sheet of a workbook with the SAME layout as the
+    * CSV-dump and `.xls` paths (`RawSheetReader.Layout`: header
+    * auto-detect over the first rows, alias renames, duplicate collapse,
+    * ensure-columns, project injection) — a user of the reference
+    * pointing at its real `.xlsx` lands here. No Spark job runs before
+    * the frame's first action. */
   def readSheet(spark: SparkSession, path: String, proyecto: String,
                 cfg: RawSheetReader.Config,
                 sheet: Option[String] = None): DataFrame = {
-    val grid = readGrid(path, sheet)
-    val lines = spark.sparkContext.parallelize(
-      grid.zipWithIndex.map { case (r, i) => (i.toLong, r) })
-    RawSheetReader.fromCells(spark, lines, path, proyecto, cfg)
+    RawSheetReader.fromGrid(spark, readGrid(path, sheet), path, proyecto, cfg)
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 import graft.functions.GraftFunctions._
 import graft.operators._
 
@@ -106,16 +107,12 @@ object PriceUpdate {
       .drop("__off", "__rk")
 
     // ---- right side: ensure cols, keys, dedup to one row per key ----
-    var sp = sperant
-    Seq("nombre_proyecto", "nombre", "estado_comercial").foreach { c =>
-      if (!sp.columns.contains(c)) sp = sp.withColumn(c, lit(null).cast("string"))
-    }
-    if (!sp.columns.contains("precio_lista"))
-      sp = sp.withColumn("precio_lista", lit(null).cast("double"))
-    if (!sp.columns.contains("fecha_actualizacion"))
-      sp = sp.withColumn("fecha_actualizacion", lit(null).cast("timestamp"))
-    if (!sp.columns.contains("_row"))
-      sp = sp.withColumn("_row", lit(0L))
+    val ensured = EnsureColumns(sperant, Seq(
+      "nombre_proyecto" -> StringType, "nombre" -> StringType,
+      "estado_comercial" -> StringType, "precio_lista" -> DoubleType,
+      "fecha_actualizacion" -> TimestampType))
+    val sp = if (ensured.columns.contains("_row")) ensured
+      else ensured.withColumn("_row", lit(0L))
     val keyed = sp
       .withColumn("_key_proy", normKey(col("nombre_proyecto")))
       .withColumn("_key_num", normKey(col("nombre")))

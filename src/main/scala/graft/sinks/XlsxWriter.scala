@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
 import graft.operators.BoundedCollect
 
 /** Native `.xlsx` workbook EMISSION — the write edge of the Excel
@@ -315,12 +316,5 @@ object XlsxWriter {
       }
     }
     pairs
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -9,18 +9,20 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.RawSheetReader
-import graft.ingest.RawSheetReader.Config
+import graft.ingest.RawSheetReader.{Config, Layout}
 
 /** DataSource V2 form of the tolerant raw-sheet ingest — the SOURCE tier
   * of the engine's Catalyst extension ladder (expression → optimizer
-  * rule → physical operator → data source). Same semantics as
-  * [[graft.ingest.RawSheetReader.readSheet]], spec-pinned row-for-row,
-  * but packaged as a `TableProvider` so sheets read like any table:
+  * rule → physical operator → data source). It reads
+  * [[graft.ingest.RawSheetReader]]'s layout (`RawSheetReader.Layout`,
+  * the one header decision every tolerant reader makes), spec-pinned
+  * row-for-row against `RawSheetReader.readSheet`, but packaged as a
+  * `TableProvider` so sheets read like any table:
   *
   * {{{
   * spark.read.format("graft.sources.RawSheetDataSource")
@@ -32,14 +34,13 @@ import graft.ingest.RawSheetReader.Config
   *
   *  - COLUMN PRUNING reaches the reader ([[SupportsPushDownRequiredColumns]]):
   *    a `select("Proyecto", "Precio de lista")` builds only those cells
-  *    per line — the header resolution (alias → canonical rename and
-  *    duplicate-column coalesce groups) is compiled once, driver-side,
-  *    into per-output-column raw-cell index lists, so pruned columns
-  *    cost nothing per row (the RDD path materializes every column and
-  *    prunes after).
-  *  - The header decision (≤ `maxHeaderScan` lines) happens in
-  *    `inferSchema`, once, on the driver — exactly the pre-pass
-  *    `readSheet` does, now cached in the table's schema.
+  *    per line — each layout column is a raw-cell index list, so pruned
+  *    columns cost nothing per row (the RDD path materializes every
+  *    column and prunes after).
+  *  - The layout is resolved from the first `maxHeaderScan` lines in
+  *    `inferSchema`, once, on the driver, and cached in the table's
+  *    schema.
+  *  - An equality filter on `Proyecto` skips the whole file at planning.
   *
   * One [[InputPartition]] PER FILE: the `_file_row` ordinal is the
   * file's physical line order, which a mid-file split cannot know
@@ -77,65 +78,16 @@ object RawSheetSource {
       fallbackHeaderRow = o.getInt("fallbackHeaderRow", 4))
   }
 
-  /** One output column: the raw cell indices coalesced first-non-null
-    * (empty = ensure-injected, always null). */
-  private[sources] case class OutCol(name: String, cells: Seq[Int])
-
-  /** The driver-side header resolution, compiled to a projection: reads
-    * ≤ maxHeaderScan lines, detects the header row (alias scan,
-    * fallback), cleans names, applies alias→canonical renames and
-    * duplicate-group collapse — the same decisions `readSheet` makes
-    * through DataFrame ops, expressed as per-column cell index lists. */
-  private[sources] def resolve(path: String,
-                               cfg: Config): (Long, Seq[OutCol]) = {
+  /** The sheet's [[RawSheetReader.Layout]], from its first
+    * `maxHeaderScan` lines. */
+  private[sources] def resolve(path: String, cfg: Config): Layout = {
     val fs = new HPath(path).getFileSystem(new Configuration())
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(new HPath(path)), java.nio.charset.StandardCharsets.UTF_8))
     val head = try Iterator.continually(in.readLine()).takeWhile(_ != null)
       .take(cfg.maxHeaderScan).toVector
     finally in.close()
-    val cells = head.map(RawSheetReader.splitCsvLine)
-    val candidates = cfg.aliases.flatMap { case (c, al) => c +: al }
-      .map(RawSheetReader.norm).toSet
-    val hdrIdx = cells.indexWhere(
-      _.exists(c => candidates.contains(RawSheetReader.norm(c))))
-    val idx = if (hdrIdx >= 0) hdrIdx else cfg.fallbackHeaderRow
-    require(idx < cells.length,
-      s"$path: header row $idx not found in first ${cfg.maxHeaderScan} rows")
-
-    var names = RawSheetReader.cleanHeaders(cells(idx).toSeq)
-    // alias -> canonical: first alias present wins, only if canon absent
-    cfg.aliases.foreach { case (canon, aliases) =>
-      if (!names.contains(canon))
-        aliases.find(names.contains).foreach { a =>
-          names = names.map(n => if (n == a) canon else n)
-        }
-    }
-    // duplicate-group collapse: base + base_N coalesce at base's slot,
-    // members ordered (base, then _N suffixes string-sorted) exactly as
-    // RawSheetReader.collapseDuplicates
-    val dupPattern = "^(.*)_(\\d+)$".r
-    val collapsedBases = names.flatMap {
-      case dupPattern(b, _) if names.contains(b) => Some(b)
-      case _ => None
-    }.distinct.toSet
-    def membersOf(base: String): Seq[Int] = {
-      val withNames = names.zipWithIndex
-      val extras = withNames.filter { case (n, _) =>
-        n.startsWith(base + "_") && n.stripPrefix(base + "_").forall(_.isDigit)
-      }.sortBy(_._1)
-      (withNames.find(_._1 == base).toSeq ++ extras).map(_._2)
-    }
-    val dropped = collapsedBases.flatMap(b => membersOf(b).tail).toSet
-    val resolved = names.zipWithIndex.flatMap {
-      case (n, i) if dropped.contains(i) => None
-      case (n, i) if collapsedBases.contains(n) => Some(OutCol(n, membersOf(n)))
-      case (n, i) => Some(OutCol(n, Seq(i)))
-    }
-    val withEnsure = resolved ++ cfg.ensure
-      .filterNot(e => resolved.exists(_.name == e))
-      .map(e => OutCol(e, Nil))
-    (idx.toLong, withEnsure)
+    Layout.resolve(head.map(RawSheetReader.splitCsvLine), path, cfg)
   }
 }
 
@@ -150,22 +102,8 @@ class RawSheetDataSource extends TableProvider {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val (_, cols) = resolve(pathOf(options), decodeConfig(options))
-    // Reserved names: the provider itself emits `_file_row` and the
-    // per-file `Proyecto` literal. A sheet whose resolved headers (or
-    // ensure list) already carry one of these would otherwise produce a
-    // schema with duplicate field names, and the per-row projection in
-    // planInputPartitions would bind the literal for both. Dropping the
-    // sheet's own column mirrors `RawSheetReader.readSheet`, whose
-    // `withColumn("Proyecto", lit(...))` replaces any existing column.
-    val reserved = Set("_file_row", "Proyecto")
-    StructType(
-      StructField("_file_row", LongType, nullable = false) +:
-        cols.filterNot(c => reserved(c.name))
-          .map(c => StructField(c.name, StringType)) :+
-        StructField("Proyecto", StringType))
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    resolve(pathOf(options), decodeConfig(options)).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
@@ -233,18 +171,18 @@ private[sources] class RawSheetScan(path: String, cfg: Config,
     s"rawsheet($path)${if (skipFile) " [file-skipped: Proyecto mismatch]" else ""}"
   override def planInputPartitions(): Array[InputPartition] = {
     if (skipFile) return Array.empty
-    val (hdrIdx, cols) = RawSheetSource.resolve(path, cfg)
+    val layout = RawSheetSource.resolve(path, cfg)
     // the projection each task builds: only REQUIRED fields, compiled
     // to cell-index lists (this is where pruning pays per row)
     val fields: Array[RawSheetPartition.Field] = required.fields.map { f =>
       f.name match {
         case "_file_row" => RawSheetPartition.RowOrdinal
         case "Proyecto" => RawSheetPartition.Literal(proyecto)
-        case n => RawSheetPartition.Cells(
-          cols.find(_.name == n).map(_.cells.toArray).getOrElse(Array.empty))
+        case n => RawSheetPartition.Cells(layout.cols.find(_.name == n)
+          .map(_.cells.toArray).getOrElse(Array.empty))
       }
     }
-    Array(RawSheetPartition(path, hdrIdx, fields))
+    Array(RawSheetPartition(path, layout.headerRow, fields))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     RawSheetReaderFactory
@@ -290,9 +228,6 @@ private[sources] class RawSheetPartitionReader(p: RawSheetPartition)
     }
     if (line == null) return false
     val cells = RawSheetReader.splitCsvLine(line)
-    def cell(i: Int): String =
-      if (i < cells.length && cells(i) != null && cells(i).nonEmpty) cells(i)
-      else null
     val vals = new Array[Any](p.fields.length)
     var f = 0
     while (f < p.fields.length) {
@@ -300,14 +235,8 @@ private[sources] class RawSheetPartitionReader(p: RawSheetPartition)
         case RowOrdinal => lineNo
         case Literal(v) => UTF8String.fromString(v)
         case Cells(idx) =>
-          var j = 0
-          var out: UTF8String = null
-          while (j < idx.length && out == null) {
-            val c = cell(idx(j))
-            if (c != null) out = UTF8String.fromString(c)
-            j += 1
-          }
-          out
+          val c = RawSheetReader.firstNonNull(cells, idx)
+          if (c == null) null else UTF8String.fromString(c)
       }
       f += 1
     }

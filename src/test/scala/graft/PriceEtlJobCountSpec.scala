@@ -38,10 +38,7 @@ class PriceEtlJobCountSpec extends SparkTestBase {
           s"2024-03-0${1 + rnd.nextInt(9)} 08:00:00", k.toLong))
         Array(k.toString, s"$price,00", estado, s"T-${k % 7}")
       }
-      val lines = (header +: rows).zipWithIndex
-        .map { case (r, i) => (i.toLong, r) }
-      RawSheetReader.fromCells(s, s.sparkContext.parallelize(lines),
-        s"$p.xls", p, cfg)
+      RawSheetReader.fromGrid(s, header +: rows, s"$p.xls", p, cfg)
     }
     val sp = s.createDataFrame(sperant.result()).toDF("nombre_proyecto",
       "nombre", "precio_lista", "estado_comercial", "fecha_actualizacion",

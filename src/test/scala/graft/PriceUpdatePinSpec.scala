@@ -13,14 +13,13 @@ class PriceUpdatePinSpec extends SparkTestBase {
     "no-op") {
     val sc = spark.sparkContext
     val cfg = RawSheetReader.Config(aliases = Seq("Numero de inmueble" -> Nil))
-    val lines = Seq(
+    val grid = Seq(
       Array("Numero de inmueble", "Precio de lista", "Estado de inmueble",
         "Tipologia"),
       Array("101", "1.000,00", "Disponible", "A-1"),
-      Array("102", "2.000,00", "Vendido", "B-2")).zipWithIndex
-      .map { case (r, i) => (i.toLong, r) }
-    val sheet = RawSheetReader.fromCells(spark,
-      sc.parallelize(lines), "quilca.xls", "Quilca", cfg)
+      Array("102", "2.000,00", "Vendido", "B-2"))
+    val sheet = RawSheetReader.fromGrid(spark, grid, "quilca.xls", "Quilca",
+      cfg)
     val sperant = Seq(("Quilca", "101", 1100.0, "Vendido",
       "2024-02-01 00:00:00", 1L)).toDF("nombre_proyecto", "nombre",
       "precio_lista", "estado_comercial", "fecha_actualizacion", "_row")

@@ -1,15 +1,19 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import graft.ingest.RawSheetReader
 import graft.sources.RawSheetSource
 
-/** The DataSource V2 rawsheet provider: row-for-row parity with
-  * `RawSheetReader.readSheet` on every fixture shape (preamble,
-  * aliases, duplicate columns, missing ensure targets), plus the V2
-  * payoff — column pruning reaching the scan. */
+/** The DataSource V2 rawsheet provider and `RawSheetReader.fromGrid`:
+  * row-for-row parity with `RawSheetReader.readSheet` on every fixture
+  * shape (preamble, aliases, duplicate columns, missing ensure targets,
+  * case-variant headers, a sheet's own `Proyecto`/`_file_row`, and the
+  * error for a sheet with no header row), plus the V2 payoff — column
+  * pruning reaching the scan. */
 class RawSheetSourceSpec extends SparkTestBase {
 
   private val cfg = RawSheetReader.Config(
@@ -35,12 +39,34 @@ class RawSheetSourceSpec extends SparkTestBase {
       .options(RawSheetSource.options(cfg, proyecto))
       .load(path)
 
+  private def assertSameFrame(got: DataFrame, expected: DataFrame,
+                              reader: String): Unit = {
+    assert(got.schema.map(f => (f.name, f.dataType)) ===
+      expected.schema.map(f => (f.name, f.dataType)), s"$reader schema")
+    assert(got.exceptAll(expected).count() === 0L, s"$reader-only rows")
+    assert(expected.exceptAll(got).count() === 0L, s"rdd-only rows ($reader)")
+  }
+
+  /** The CSV reader, the DSv2 source and `fromGrid` over the fixture's
+    * split lines return the same frame, or fail with the same
+    * `IllegalArgumentException` message. */
   private def assertParity(path: String, proyecto: String): Unit = {
-    val expected = RawSheetReader.readSheet(spark, path, proyecto, cfg)
-    val got = v2(path, proyecto)
-    assert(got.columns.toSeq === expected.columns.toSeq, "schema order")
-    assert(got.exceptAll(expected).count() === 0L, "v2-only rows")
-    assert(expected.exceptAll(got).count() === 0L, "rdd-only rows")
+    def attempt(read: => DataFrame): Either[String, DataFrame] =
+      try Right(read)
+      catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    val grid = Files.readAllLines(Paths.get(path)).asScala.toSeq
+      .map(RawSheetReader.splitCsvLine)
+    (attempt(RawSheetReader.readSheet(spark, path, proyecto, cfg)),
+      attempt(v2(path, proyecto)),
+      attempt(RawSheetReader.fromGrid(spark, grid, path, proyecto, cfg))) match {
+      case (Right(expected), Right(got), Right(fromGrid)) =>
+        assertSameFrame(got, expected, "v2")
+        assertSameFrame(fromGrid, expected, "fromGrid")
+      case (Left(expected), Left(got), Left(fromGrid)) =>
+        assert(got === expected, "v2 error")
+        assert(fromGrid === expected, "fromGrid error")
+      case other => fail(s"readers disagree: $other")
+    }
   }
 
   test("parity: junk preamble + accented canonical headers") {
@@ -70,6 +96,46 @@ class RawSheetSourceSpec extends SparkTestBase {
     val r = v2(p, "Fenix").filter(org.apache.spark.sql.functions
       .col("Numero de inmueble") === "201").head()
     assert(r.getAs[String]("Precio de lista") === "500.000,00")
+  }
+
+  test("parity: case-variant headers rename only the exact alias") {
+    val p = fixture("casevariant.csv", Seq(
+      "Número de inmueble,Precio,precio,x",
+      "101,\"1.000,00\",\"2.000,00\",a",
+      "102,,\"3.000,00\",b"))
+    assertParity(p, "Caso")
+    val df = v2(p, "Caso")
+    assert(df.columns.toSeq === Seq("_file_row", "Numero de inmueble",
+      "Precio", "Precio de lista", "x", "Estado de inmueble", "Tipologia",
+      "Proyecto"))
+    val r = df.orderBy("_file_row").head()
+    assert(r.getString(2) === "1.000,00")
+    assert(r.getString(3) === "2.000,00")
+  }
+
+  test("parity: a sheet's own Proyecto keeps its slot, its _file_row is " +
+    "dropped") {
+    val p = fixture("reserved.csv", Seq(
+      "Número de inmueble,Proyecto,_file_row,Precio de lista",
+      "101,Otro,7,\"1.000,00\"",
+      "102,,8,\"2.000,00\""))
+    assertParity(p, "Reservado")
+    val df = v2(p, "Reservado")
+    assert(df.columns.toSeq === Seq("_file_row", "Numero de inmueble",
+      "Proyecto", "Precio de lista", "Estado de inmueble", "Tipologia"))
+    val rows = df.orderBy("_file_row").collect()
+    assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L), "line ordinals")
+    assert(rows.map(_.getString(2)).toSeq === Seq("Reservado", "Reservado"))
+  }
+
+  test("parity: a sheet shorter than the fallback row fails alike") {
+    val p = fixture("short.csv", Seq(
+      "LISTA DE PRECIOS,,",
+      "sin,cabecera,conocida",
+      "1,2,3"))
+    assertParity(p, "Corto")
+    val e = intercept[IllegalArgumentException](v2(p, "Corto"))
+    assert(e.getMessage === s"$p: header row 4 not found in first 15 rows")
   }
 
   test("a Proyecto-mismatch filter skips the whole file at planning") {
