@@ -105,7 +105,11 @@ object RawSheetReader {
       *    alias present (exact name) takes its place;
       *  - F12: `name`, `name_2`, ... groups collapse into one column at
       *    `name`'s slot, first-non-null over (`name`, then the suffixed
-      *    members in string order) — the reference's bfill-axis-1;
+      *    members in string order) — the reference's bfill-axis-1. Groups
+      *    nest: `name_2_2` joins `name_2`, which joins `name`, so every
+      *    chain collapses at its outermost present base and every header
+      *    cell reaches exactly one column (`cleanHeaders` writes the raw
+      *    `a,a,a_2` as `a,a_2,a_2_2`: three spellings of one field);
       *  - P2: missing `ensure` columns are appended, all-null;
       *  - reserved names: `_file_row` is the line ordinal, so a sheet's
       *    own `_file_row` is dropped; a sheet's own `Proyecto` keeps its
@@ -129,20 +133,15 @@ object RawSheetReader {
           }
       }
       val dupPattern = "^(.*)_(\\d+)$".r
-      val bases = names.flatMap {
-        case dupPattern(b, _) if names.contains(b) => Some(b)
-        case _ => None
-      }.toSet
-      def members(base: String): Seq[Int] = {
-        val extras = names.zipWithIndex.filter { case (n, _) =>
-          n.startsWith(base + "_") && n.stripPrefix(base + "_").forall(_.isDigit)
-        }.sortBy(_._1)
-        names.indexOf(base) +: extras.map(_._2)
+      def root(n: String): String = n match {
+        case dupPattern(b, _) if names.contains(b) => root(b)
+        case _ => n
       }
-      val dropped = bases.flatMap(b => members(b).tail)
+      val roots = names.map(root)
       val sheetCols = names.zipWithIndex.collect {
-        case (n, i) if !dropped(i) =>
-          OutCol(n, if (bases(n)) members(n) else Seq(i))
+        case (n, i) if roots(i) == n =>
+          OutCol(n, i +: names.indices
+            .filter(j => j != i && roots(j) == n).sortBy(names))
       }
       val withEnsure = sheetCols ++ cfg.ensure.distinct
         .filterNot(e => sheetCols.exists(_.name == e)).map(OutCol(_, Nil))

@@ -109,20 +109,30 @@ object Paginate {
 
 /** A11 — pivoted counts (project x estado matrix) with optional
   * percent-of-row-total normalization (ref `index_2.html:320-335,373-377`).
-  * Pivot values are passed explicitly so the plan needs no extra collect. */
+  * Each pivot value is one conditional count, `count(CASE WHEN pivotKey =
+  * v THEN 1 END) AS v`, so the matrix is a single aggregation with no
+  * collect for the values and no fill: a row key whose rows all miss the
+  * list (or have a null pivot key) still gets its row, with 0 counts. */
 object PivotCounts {
-  def apply(df: DataFrame, rowKey: String, pivotKey: String,
-            pivotValues: Seq[String], percent: Boolean = false): DataFrame = {
-    val counts = df.groupBy(rowKey).pivot(pivotKey, pivotValues).count()
-      .na.fill(0L, pivotValues)
-    if (!percent) counts.orderBy(rowKey)
+  /** The matrix in no particular order. */
+  def counts(df: DataFrame, rowKey: String, pivotKey: String,
+             pivotValues: Seq[String], percent: Boolean = false): DataFrame = {
+    val cells = pivotValues.map(v => count(when(col(pivotKey) === v, 1)).as(v))
+    val counts = df.groupBy(rowKey).agg(cells.head, cells.tail: _*)
+    if (!percent) counts
     else {
       // materialize the row total BEFORE overwriting any pivot column,
       // otherwise later columns normalize against already-percented ones
       val withTotal = counts.withColumn("__total", pivotValues.map(col).reduce(_ + _))
       pivotValues.foldLeft(withTotal) { (acc, v) =>
         acc.withColumn(v, round(lit(100.0) * col(v) / col("__total"), 2))
-      }.drop("__total").orderBy(rowKey)
+      }.drop("__total")
     }
   }
+
+  /** The matrix ordered by the row key: a global sort, since the row-key
+    * domain of a general input is unbounded. */
+  def apply(df: DataFrame, rowKey: String, pivotKey: String,
+            pivotValues: Seq[String], percent: Boolean = false): DataFrame =
+    counts(df, rowKey, pivotKey, pivotValues, percent).orderBy(rowKey)
 }

@@ -77,25 +77,56 @@ class ViewServer(base: DataFrame, viewName: String = "units") {
     Paginate(df, order, pageNo, size)
 
   // ---- the four chart queries (A9-A12), over the filtered view ----
+  //
+  // A9-A11 end on `coalesce(1).sortWithinPartitions(...)` (SQL: a
+  // `/*+ COALESCE(1) */` hint and `SORT BY`), not on a global `orderBy`.
+  // A global sort range-partitions its input, which costs a sampling job
+  // per call. These results are small by construction: the grouping keys
+  // are estados and projects, so a chart has at most projects x estados
+  // rows and one task sorts it. The partial aggregation before the
+  // exchange stays parallel; only the final merge and the sort run in one
+  // task. The single-partition sort is safe for this bounded domain only:
+  // operators whose key domain is unbounded (`ValueCounts`,
+  // `PivotCounts.apply`) keep their global `orderBy`. Collecting a chart
+  // takes 2 jobs (the aggregate's shuffle stage and the result), the
+  // scatter projection 1.
 
-  /** A9 — count by estado. */
+  /** A9 — count by estado, nulls in the `__NA__` bucket, largest first.
+    * {{{
+    * SELECT /*+ COALESCE(1) */
+    *   coalesce(`Estado de inmueble`, '__NA__') AS estado, count(1) AS n
+    * FROM units GROUP BY 1 SORT BY n DESC, estado
+    * }}} */
   def countByEstado(df: DataFrame): DataFrame =
     df.groupBy(coalesce(col("Estado de inmueble"), lit("__NA__")).as("estado"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("estado"))
+      .coalesce(1).sortWithinPartitions(col("n").desc, col("estado"))
 
   /** A10 — average price per project over positive prices only, 0.0 when
-    * none (ref `ix2:309-318`). */
+    * none (ref `ix2:309-318`).
+    * {{{
+    * SELECT /*+ COALESCE(1) */ Proyecto,
+    *   coalesce(round(avg(CASE WHEN <price> > 0 THEN <price> END), 2), 0.0)
+    *     AS precio_promedio
+    * FROM units GROUP BY Proyecto SORT BY Proyecto
+    * }}} */
   def avgPriceByProyecto(df: DataFrame, priceNum: String): DataFrame =
     df.groupBy("Proyecto").agg(
       coalesce(round(avg(when(col(priceNum) > 0, col(priceNum))), 2), lit(0.0))
         .as("precio_promedio"))
-      .orderBy("Proyecto")
+      .coalesce(1).sortWithinPartitions("Proyecto")
 
-  /** A11 — stacked counts proyecto x estado, optionally %-of-row-total. */
+  /** A11 — stacked counts proyecto x estado, optionally %-of-row-total
+    * ([[PivotCounts.counts]]: one conditional count per estado).
+    * {{{
+    * SELECT /*+ COALESCE(1) */ Proyecto,
+    *   count(CASE WHEN `Estado de inmueble` = '<v1>' THEN 1 END) AS `<v1>`, ...
+    * FROM units GROUP BY Proyecto SORT BY Proyecto
+    * }}} */
   def stackedCounts(df: DataFrame, estados: Seq[String],
                     percent: Boolean = false): DataFrame =
-    PivotCounts(df, "Proyecto", "Estado de inmueble", estados, percent)
+    PivotCounts.counts(df, "Proyecto", "Estado de inmueble", estados, percent)
+      .coalesce(1).sortWithinPartitions("Proyecto")
 
   /** F17 — the dashboard's money rendering for display/CSV surfaces:
     * adds a `<col>_fmt` shadow ("S/ 1,234,567", null/NaN -> "–") per
@@ -105,7 +136,11 @@ class ViewServer(base: DataFrame, viewName: String = "units") {
     cols.foldLeft(df)((d, c) =>
       d.withColumn(s"${c}_fmt", graft.functions.GraftFunctions.formatCurrency(col(c))))
 
-  /** A12 — price-vs-area scatter projection over positive pairs. */
+  /** A12 — price-vs-area scatter projection over positive pairs, unsorted.
+    * {{{
+    * SELECT <area> AS x, <price> AS y, Proyecto, `Estado de inmueble` AS estado
+    * FROM units WHERE <price> > 0 AND <area> > 0
+    * }}} */
   def scatter(df: DataFrame, priceNum: String, areaNum: String): DataFrame =
     df.filter(col(priceNum) > 0 && col(areaNum) > 0)
       .select(col(areaNum).as("x"), col(priceNum).as("y"),

@@ -1,9 +1,12 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -78,12 +81,23 @@ object RawSheetSource {
       fallbackHeaderRow = o.getInt("fallbackHeaderRow", 4))
   }
 
+  /** The sheet's lines, decompressed by file extension (`.gz`, `.bz2`,
+    * ...) through Hadoop's codec factory as `textFile` does, so the head
+    * read and the partition reader see the text `RawSheetReader.readSheet`
+    * sees. */
+  private[sources] def openLines(path: String): BufferedReader = {
+    val conf = new Configuration()
+    val p = new HPath(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+      .fold[InputStream](raw)(_.createInputStream(raw))
+    new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+  }
+
   /** The sheet's [[RawSheetReader.Layout]], from its first
     * `maxHeaderScan` lines. */
   private[sources] def resolve(path: String, cfg: Config): Layout = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(new HPath(path)), java.nio.charset.StandardCharsets.UTF_8))
+    val in = openLines(path)
     val head = try Iterator.continually(in.readLine()).takeWhile(_ != null)
       .take(cfg.maxHeaderScan).toVector
     finally in.close()
@@ -211,11 +225,7 @@ private[sources] class RawSheetPartitionReader(p: RawSheetPartition)
     extends PartitionReader[InternalRow] {
   import RawSheetPartition._
 
-  private val in = {
-    val fs = new HPath(p.path).getFileSystem(new Configuration())
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(new HPath(p.path)), java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private val in = RawSheetSource.openLines(p.path)
   private var lineNo = -1L
   private var row: InternalRow = _
 

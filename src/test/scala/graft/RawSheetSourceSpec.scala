@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import scala.jdk.CollectionConverters._
 
@@ -47,6 +48,15 @@ class RawSheetSourceSpec extends SparkTestBase {
     assert(expected.exceptAll(got).count() === 0L, s"rdd-only rows ($reader)")
   }
 
+  /** The fixture's text lines, gunzipped for a `.gz` file. */
+  private def sheetLines(path: String): Seq[String] =
+    if (!path.endsWith(".gz")) Files.readAllLines(Paths.get(path)).asScala.toSeq
+    else {
+      val in = new GZIPInputStream(Files.newInputStream(Paths.get(path)))
+      try new String(in.readAllBytes(), "UTF-8").split("\n", -1).toSeq
+      finally in.close()
+    }
+
   /** The CSV reader, the DSv2 source and `fromGrid` over the fixture's
     * split lines return the same frame, or fail with the same
     * `IllegalArgumentException` message. */
@@ -54,8 +64,7 @@ class RawSheetSourceSpec extends SparkTestBase {
     def attempt(read: => DataFrame): Either[String, DataFrame] =
       try Right(read)
       catch { case e: IllegalArgumentException => Left(e.getMessage) }
-    val grid = Files.readAllLines(Paths.get(path)).asScala.toSeq
-      .map(RawSheetReader.splitCsvLine)
+    val grid = sheetLines(path).map(RawSheetReader.splitCsvLine)
     (attempt(RawSheetReader.readSheet(spark, path, proyecto, cfg)),
       attempt(v2(path, proyecto)),
       attempt(RawSheetReader.fromGrid(spark, grid, path, proyecto, cfg))) match {
@@ -136,6 +145,32 @@ class RawSheetSourceSpec extends SparkTestBase {
     assertParity(p, "Corto")
     val e = intercept[IllegalArgumentException](v2(p, "Corto"))
     assert(e.getMessage === s"$p: header row 4 not found in first 15 rows")
+  }
+
+  test("parity: a gzipped sheet decompresses in every reader") {
+    val p = dir.resolve("gz.csv.gz")
+    val out = new GZIPOutputStream(Files.newOutputStream(p))
+    try out.write("unidad,precio\n101,5".getBytes("UTF-8")) finally out.close()
+    assertParity(p.toString, "P")
+    val r = v2(p.toString, "P")
+      .select("_file_row", "Numero de inmueble", "Precio de lista", "Proyecto")
+      .collect().map(_.toSeq)
+    assert(r.toSeq === Seq(Seq(1L, "101", "5", "P")))
+  }
+
+  test("parity: nested duplicate groups reach one column") {
+    // the raw Piso,Piso,Piso_2 cleans to Piso,Piso_2,Piso_2_2
+    val p = fixture("nested.csv", Seq(
+      "Número de inmueble,Piso,Piso,Piso_2",
+      "101,,,7",
+      "102,,3,9",
+      "103,1,2,3"))
+    assertParity(p, "Anidado")
+    val df = v2(p, "Anidado")
+    assert(df.columns.toSeq === Seq("_file_row", "Numero de inmueble", "Piso",
+      "Precio de lista", "Estado de inmueble", "Tipologia", "Proyecto"))
+    assert(df.orderBy("_file_row").collect().map(_.getAs[String]("Piso"))
+      .toSeq === Seq("7", "3", "1"))
   }
 
   test("a Proyecto-mismatch filter skips the whole file at planning") {

@@ -52,6 +52,27 @@ class SheetLayoutSpec extends SparkTestBase {
       "x" -> Seq(1)))
   }
 
+  test("nested duplicate groups collapse at the outermost base, so every " +
+    "header cell reaches exactly one column") {
+    // a_1 is a member of a, and a_1_2 of a_1: all three fold into a
+    val nested = resolve(Seq("unidad", "a", "a_1", "a_1_2"))
+    assert(cols(nested).take(2) ===
+      Seq("Numero de inmueble" -> Seq(0), "a" -> Seq(1, 2, 3)))
+    // cleanHeaders makes that shape itself from the raw a,a,a_2
+    assert(RawSheetReader.cleanHeaders(Seq("a", "a", "a_2")) ===
+      Seq("a", "a_2", "a_2_2"))
+    val cleaned = resolve(Seq("unidad", "a", "a", "a_2"))
+    assert(cols(cleaned).take(2) ===
+      Seq("Numero de inmueble" -> Seq(0), "a" -> Seq(1, 2, 3)))
+    Seq(nested, cleaned).foreach { l =>
+      assert(l.cols.flatMap(_.cells).sorted === Seq(0, 1, 2, 3), l)
+    }
+    // a suffixed name whose base is absent stays its own column, and its
+    // own duplicates join it
+    assert(cols(resolve(Seq("unidad", "b_1", "b_1_2"))).take(2) ===
+      Seq("Numero de inmueble" -> Seq(0), "b_1" -> Seq(1, 2)))
+  }
+
   test("the Proyecto literal stays in the plan: a mismatch folds to an " +
     "empty relation") {
     val df = RawSheetReader.fromGrid(spark,

@@ -108,12 +108,13 @@ class SinksAndViewSpec extends SparkTestBase {
         "Matera")
       assert(opt(viaSql).sameResult(opt(viaApi)),
         s"filter plans diverge:\n${opt(viaApi)}\nvs\n${opt(viaSql)}")
-      // chart aggregation: A9 count-by-estado
+      // chart aggregation: A9 count-by-estado, sorted in one partition
       val aggApi = vs.countByEstado(vs.view)
       val aggSql = vs.sql(
-        """SELECT coalesce(`Estado de inmueble`, '__NA__') AS estado,
+        """SELECT /*+ COALESCE(1) */
+             coalesce(`Estado de inmueble`, '__NA__') AS estado,
              count(1) AS n
-           FROM units_sql GROUP BY 1 ORDER BY n DESC, estado""")
+           FROM units_sql GROUP BY 1 SORT BY n DESC, estado""")
       assert(opt(aggSql).sameResult(opt(aggApi)),
         s"agg plans diverge:\n${opt(aggApi)}\nvs\n${opt(aggSql)}")
       // ... and both read the CACHED snapshot, not the base plan
