@@ -112,7 +112,8 @@ object Paginate {
   * Each pivot value is one conditional count, `count(CASE WHEN pivotKey =
   * v THEN 1 END) AS v`, so the matrix is a single aggregation with no
   * collect for the values and no fill: a row key whose rows all miss the
-  * list (or have a null pivot key) still gets its row, with 0 counts. */
+  * list (or have a null pivot key) still gets its row, with 0 counts
+  * (null percentages). */
 object PivotCounts {
   /** The matrix in no particular order. */
   def counts(df: DataFrame, rowKey: String, pivotKey: String,
@@ -122,8 +123,11 @@ object PivotCounts {
     if (!percent) counts
     else {
       // materialize the row total BEFORE overwriting any pivot column,
-      // otherwise later columns normalize against already-percented ones
-      val withTotal = counts.withColumn("__total", pivotValues.map(col).reduce(_ + _))
+      // otherwise later columns normalize against already-percented ones.
+      // A row key with no listed value has total 0: its percentages are
+      // null, not a DIVIDE_BY_ZERO that fails the query under ANSI.
+      val withTotal = counts.withColumn("__total",
+        nullif(pivotValues.map(col).reduce(_ + _), lit(0L)))
       pivotValues.foldLeft(withTotal) { (acc, v) =>
         acc.withColumn(v, round(lit(100.0) * col(v) / col("__total"), 2))
       }.drop("__total")

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -31,6 +31,24 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerTyp
   * bounded collect, no extra job), it falls back to the
   * materialized-frame window path with no broadcast hint — the
   * planner-free shape that scales to any group cardinality.
+  *
+  * TWO BRANCHES for the ungrouped form ([[withPrefix]]), chosen off one
+  * bounded fetch of the pinned domain, already sorted by one task
+  * (`coalesce(1).sortWithinPartitions`: one job, no exchange, Spark's
+  * own null-first / NaN / decimal order). At or under
+  * [[BroadcastRowCap]] distinct values the running sums are computed on
+  * the driver and both outputs are literal frames — the whole domain is
+  * one lane, `bucket` 0 — with the laned branch's column names and
+  * types. `RankNormalize`/`KsDrift.ks` at spec scale: 6 jobs, from 11;
+  * `scalar_rank_pct` cold at sf0.01: 8, from 13. Over the cap the
+  * sketch/sums/window path below runs over the same pin, after the one
+  * fetch of `cap + 1` rows. Driver heap at the cap (2M distinct values,
+  * JDK 17, Spark 4.1, local[4], after a full GC): the literal frames
+  * retain ~70 MB more than the laned branch for one count column and
+  * ~120 MB for two. Time at the cap: one sum over the literal output
+  * took 6.5–6.7 s against 2.3–2.4 s over the laned one, the whole call
+  * 10.6 s against 7.1 s, so near the cap the driver branch is the slower
+  * one (about even at 1M values; at 200k, 1.7 s against 4.6 s).
   *
   * Input: `vals` with one row per DISTINCT `orderCol` value and long
   * `sumCols` counts. Output: (`vals` + a `<c>_cum` prefix column per
@@ -71,19 +89,81 @@ object LanedPrefix {
                          schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
+  /** The laned `<c>_cum` formula: the in-lane running sum (null over an
+    * empty exclusive window) plus the lane's offset. The driver branch
+    * reads its output types off the same formula over plain sums. */
+  private def cumOf(inLane: Column, offset: Column): Column =
+    coalesce(inLane, lit(0L)) + offset
+
+  /** A collected sum-column value as the JVM type its `sum` has: ints
+    * widen to long and floats to double, as `sum` widens them. */
+  private def asSumType(v: Any, dt: DataType): Any = (v, dt) match {
+    case (n: java.lang.Number, LongType) => java.lang.Long.valueOf(n.longValue)
+    case (n: java.lang.Number, DoubleType) =>
+      java.lang.Double.valueOf(n.doubleValue)
+    case _ => v
+  }
+
   def withPrefix(vals: DataFrame, orderCol: String,
                  sumCols: Seq[String], k: Int, nLanes: Int,
                  inclusive: Boolean): (DataFrame, DataFrame) = {
     require(sumCols.nonEmpty, "at least one sum column")
     // pin the distinct-value table ONCE (round 19, guide §2.4): the
-    // sketch sample ends in a driver collect and the lane sums below
-    // in another, so they are SEPARATE executions from the final
-    // laned output — exchange reuse cannot span them, and without the
-    // pin each of the three recomputes the upstream corpus scan plus
-    // the distinct-collapse shuffle. The pinned frame is value-domain-
-    // sized (one row per distinct value), the bounded side of the
-    // operator at any corpus scale.
+    // driver fetch below, and over the cap the sketch collect, the lane
+    // sums collect and the final laned output, are SEPARATE executions
+    // — exchange reuse cannot span them, and without the pin each
+    // recomputes the upstream corpus scan plus the distinct-collapse
+    // shuffle. The pinned frame is value-domain-sized (one row per
+    // distinct value), the bounded side of the operator at any corpus
+    // scale.
     val pinned = Checkpoints.pin(vals)
+    // one task sorts the pin (no exchange), so nulls, NaN and decimals
+    // come in the order the laned window gives them
+    BoundedCollect(pinned.coalesce(1).sortWithinPartitions(orderCol),
+        broadcastRowCap) match {
+      case Some(sorted) => driverPrefix(pinned, sorted, sumCols, inclusive)
+      case None => lanedPrefix(pinned, orderCol, sumCols, k, nLanes, inclusive)
+    }
+  }
+
+  /** [[withPrefix]] under the cap: the running sums over the value-sorted
+    * domain, computed on the driver into literal frames. The whole
+    * domain is one lane (`bucket` 0), and every column has the laned
+    * branch's name and type. */
+  private def driverPrefix(pinned: DataFrame, sorted: Array[Row],
+                           sumCols: Seq[String],
+                           inclusive: Boolean): (DataFrame, DataFrame) = {
+    // analysis only, no job: the totals' and prefixes' types as the
+    // laned branch's formulas give them (an int column sums to long, a
+    // decimal(p, s) prefix widens past its sum's type)
+    val types = pinned.select(sumCols.map(c => sum(c).as(s"${c}_tot")) ++
+      sumCols.map(c => cumOf(sum(c), sum(c)).as(s"${c}_cum")): _*).schema
+    val (totFields, cumFields) = types.fields.splitAt(sumCols.size)
+    val tTypes = totFields.map(_.dataType)
+    val idx = sumCols.map(pinned.schema.fieldIndex)
+    val acc = Array.fill[Any](sumCols.size)(null)
+    def add(r: Row): Unit = sumCols.indices.foreach(i =>
+      acc(i) = addAny(acc(i), asSumType(r.get(idx(i)), tTypes(i))))
+    val rows = sorted.map { r =>
+      if (inclusive) add(r)
+      val cum = sumCols.indices.map(i =>
+        if (acc(i) == null) zeroOf(tTypes(i)) else acc(i))
+      if (!inclusive) add(r)
+      Row.fromSeq((0 +: r.toSeq) ++ cum)
+    }
+    val outSchema = StructType(StructField("bucket", IntegerType,
+      nullable = false) +: (pinned.schema.fields ++ cumFields))
+    val spark = pinned.sparkSession
+    // one row even over empty input (nulls), matching agg-over-empty
+    (localFrame(spark, rows.toSeq, outSchema),
+      localFrame(spark, Seq(Row.fromSeq(acc.toSeq)), StructType(totFields)))
+  }
+
+  /** [[withPrefix]] over the cap: lane by sketch cuts, window each lane,
+    * and add the cross-lane offsets read off the per-lane totals. */
+  private def lanedPrefix(pinned: DataFrame, orderCol: String,
+                          sumCols: Seq[String], k: Int, nLanes: Int,
+                          inclusive: Boolean): (DataFrame, DataFrame) = {
     val laned = Analytics.qsketchRangeBuckets(pinned,
       col(orderCol), orderCol, k, nLanes)
     val hi = if (inclusive) 0L else -1L
@@ -95,7 +175,7 @@ object LanedPrefix {
     // ≤ nLanes rows by construction: ONE collect feeds offsets AND
     // grand totals, both computed driver-side into literal frames
     val sumRows = sumsDf.collect().sortBy(_.getInt(0))
-    val spark = vals.sparkSession
+    val spark = pinned.sparkSession
     val tTypes = sumCols.map(c => sumsDf.schema(s"__t_$c").dataType)
     val offSchema = StructType(sumsDf.schema("bucket") +:
       sumCols.zip(tTypes).map { case (c, t) =>
@@ -119,8 +199,7 @@ object LanedPrefix {
     val totals = localFrame(spark, Seq(totRow), totSchema)
     val out = sumCols.foldLeft(
         laned.join(broadcast(offsets), Seq("bucket"))) { (df, c) =>
-      df.withColumn(s"${c}_cum",
-        coalesce(sum(c).over(wIn), lit(0L)) + col(s"__off_$c"))
+      df.withColumn(s"${c}_cum", cumOf(sum(c).over(wIn), col(s"__off_$c")))
     }.drop(sumCols.map(c => s"__off_$c"): _*)
     (out, totals)
   }
@@ -220,25 +299,25 @@ object LanedPrefix {
       }
     val out = sumCols.foldLeft(
         laned.join(offsets, Seq(groupCol, "bucket"))) { (df, c) =>
-      df.withColumn(s"${c}_cum",
-        coalesce(sum(c).over(wIn), lit(0L)) + col(s"__off_$c"))
+      df.withColumn(s"${c}_cum", cumOf(sum(c).over(wIn), col(s"__off_$c")))
     }.drop(sumCols.map(c => s"__off_$c"): _*)
     (out, totals)
   }
 
-  /** Max (group, lane) cells the grouped form will fetch to the driver
-    * and re-ship as broadcast literals — ~2M rows of (key, lane,
-    * k longs) is tens of MB, comfortably driver/executor-safe (the
-    * same bytes the pre-fusion broadcast hint shipped). The grouped
-    * cut table spends it as BroadcastRowCap / nLanes groups; more
-    * groups fall back to the planner's choice. */
+  /** Max cells the laned prefix will fetch to the driver and re-ship
+    * as literals — ~2M rows of (key, lane, k longs) is tens of MB,
+    * comfortably driver/executor-safe (the same bytes the pre-fusion
+    * broadcast hint shipped). The ungrouped form spends it as distinct
+    * values; the grouped cut table as BroadcastRowCap / nLanes groups.
+    * More fall back to the laned windows or the planner's choice. */
   val BroadcastRowCap: Long = 2000000L
 
   /** The cap actually consulted — test-overridable so the over-cap
+    * paths run at spec scale without 2M real values or groups: the
+    * ungrouped laned windows (`LanedPrefixDriverSpec`) and the grouped
     * fallback (no driver fetch; the planner picks, typically a
-    * sort-merge join on (group, lane)), the path a 100× group
-    * cardinality takes, runs at spec scale without 2M real groups
-    * (`LanedPrefixFallbackSpec`). Production never touches this. */
+    * sort-merge join on (group, lane); `LanedPrefixFallbackSpec`).
+    * Production never touches this. */
   @volatile private[graft] var broadcastRowCap: Long = BroadcastRowCap
 
   /** Run `body` with the broadcast cap forced to `cap` (test hook). */

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   * value its strictly-below count; rows then join their value's rank
   * in one equi-join. `below/(n − 1)` is a single IEEE division — exact
   * on any engine; callers round at the edge. Ties: every duplicate of
-  * a value shares `below`, which IS percent_rank's tie rule.
+  * a value shares `below`, which IS percent_rank's tie rule. Up to
+  * [[LanedPrefix.BroadcastRowCap]] distinct values the prefix finishes
+  * on the driver instead, with no sketch and no window (6 jobs, from 11).
   *
   * Output: the input rows + `rank_pct` (null-`valueCol` rows are
   * dropped, like the window form drops nothing but ranks nulls first —

@@ -142,4 +142,21 @@ class ViewChartsSpec extends SparkTestBase {
       assertSame(got, got.collect().toSeq, expected, s"percent=$percent")
     }
   }
+
+  test("percent counts give a row key with no listed value null " +
+    "percentages, not DIVIDE_BY_ZERO") {
+    val df = Seq[(String, String)](("Matera", "Disponible"),
+      ("Fenix", "Oculto"), ("Capadocia", null))
+      .toDF("Proyecto", "Estado de inmueble")
+    val values = Seq("Disponible", "Vendido")
+    val expected = Seq(Row("Capadocia", null, null), Row("Fenix", null, null),
+      Row("Matera", 100.0, 0.0))
+    assert(PivotCounts(df, "Proyecto", "Estado de inmueble", values,
+      percent = true).collect().toSeq === expected)
+    val vs = new ViewServer(df, "units_zero_total")
+    try {
+      assert(vs.stackedCounts(vs.view, values, percent = true)
+        .collect().toSeq === expected)
+    } finally vs.close()
+  }
 }
